@@ -2328,27 +2328,28 @@ def quality_hash_classifier(spark, sf_dir):
 
 @query("quality_hash_classifier_sparse", _hash_kernel_oracle())
 def quality_hash_classifier_sparse(spark, sf_dir):
-    """The PRODUCTION physical plan of the hash-kernel classifier
-    (`text._hash_kernel_sparse`, forced via ``impl="sparse"``): tokens
-    explode to (doc, bucket) rows, one groupBy builds each doc's sorted
-    sparse feature array, the weight vector rides in as a single
-    broadcast array row, and each GD step's moments come back as one
-    groupBy(bucket) combiner aggregate — per-step cost independent of
-    the bucket count ``d`` (measured flat to d=2^18; dense is
-    O(tokens·d) per row and stops planning near d=10^3).  Shares the
-    dense entry's oracle verbatim because the two plans are
-    BIT-IDENTICAL: the sparse fold adds the nonzero w·x terms in the
-    dense chain's ascending-bucket order, and skipped terms are exact
-    IEEE ±0.0 adds."""
-    from .pipeline.text import hash_kernel_classifier
+    """`quality_hash_classifier` through the SPARSE core
+    (`text._hk_sparse` with one head, the plan the classifier takes
+    above d=64), called directly at the gate's d=8: tokens explode to
+    (doc, bucket, x) rows once, the weights ride as a broadcast
+    hash-join table of d narrow rows, per-doc predictions are ordered
+    folds over bucket-ascending regrouped terms, and each GD step's
+    moments come back as one groupBy(cls, bucket) combiner aggregate —
+    per-step cost independent of the bucket count ``d`` (measured flat
+    to d=2^18; dense is O(tokens·d) per row and stops planning near
+    d=10^3).  Shares the dense entry's oracle verbatim because the two
+    plans are BIT-IDENTICAL: the sparse fold adds the nonzero w·x terms
+    in the dense chain's ascending-bucket order, and skipped terms are
+    exact IEEE ±0.0 adds."""
+    from .pipeline.text import _hk_keep, _hk_sparse
     from .pipeline import ensure_parallelism
 
     e = engine_for(spark, sf_dir)
     docs = ensure_parallelism(e.table("documents"))
-    _w, scored = hash_kernel_classifier(
-        docs.filter("doc_id % 2 = 0"), docs, d=8, iters=4, impl="sparse"
+    _w, scored = _hk_sparse(
+        docs.filter("doc_id % 2 = 0"), docs, ["en"], d=8, iters=4
     )
-    return scored
+    return _hk_keep(scored, "doc_id", 0.5)
 
 
 _LANGID_CLASSES = ["de", "en", "es", "fr", "zh"]  # the corpus label set
@@ -2510,10 +2511,9 @@ def lang_id_multiclass(spark, sf_dir):
 
 @query("lang_id_multiclass_sparse", _lang_id_mc_oracle(_LANGID_CLASSES, d=8))
 def lang_id_multiclass_sparse(spark, sf_dir):
-    """`lang_id_multiclass` through the SPARSE physical plan
-    (`text._hash_kernel_multiclass_sparse` — VERDICT r8 ask #8: the
-    fastText-scale-d generalization the dense docstring claimed, now
-    shipped): features built once at the token level, the whole K-head
+    """`lang_id_multiclass` through the SPARSE core (`text._hk_sparse`,
+    the plan the classifier takes above d=64), called directly at the
+    gate's d=8: features built once at the token level, the whole K-head
     model riding as a BROADCAST HASH-JOIN TABLE of d narrow rows (the
     one-array-row alternative was measured materializing 10 MB into
     every joined row — SCALING.md round-9), per-doc predictions K
@@ -2525,15 +2525,14 @@ def lang_id_multiclass_sparse(spark, sf_dir):
     oracle verbatim — the strongest cross-plan equivalence evidence the
     gate can record."""
     from .pipeline import ensure_parallelism
-    from .pipeline.text import hash_kernel_multiclass
+    from .pipeline.text import _hk_argmax, _hk_sparse
 
     e = engine_for(spark, sf_dir)
     docs = ensure_parallelism(e.table("documents"))
-    _w, pred = hash_kernel_multiclass(
-        docs.filter("doc_id % 2 = 0"), docs,
-        classes=_LANGID_CLASSES, d=8, iters=3, impl="sparse",
+    _w, scored = _hk_sparse(
+        docs.filter("doc_id % 2 = 0"), docs, _LANGID_CLASSES, d=8, iters=3
     )
-    return pred
+    return _hk_argmax(scored, _LANGID_CLASSES, "doc_id")
 
 
 @query(

@@ -1,9 +1,22 @@
 """Training-data pipeline operators: dedup, similarity, text, multimodal."""
 
+import math
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _sql_double(v: float) -> str:
+    """SQL text of one double literal: ``repr`` + ``D`` for finite values
+    (``repr`` round-trips and the parser's conversion is correctly
+    rounded), a string cast for NaN and ±inf, which have no literal."""
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        sign = "" if v > 0 else "-"
+        return f"CAST('{sign}Infinity' AS DOUBLE)"
+    return repr(v) + "D"
 
 
 def lit_double_array(values) -> Column:
@@ -11,20 +24,19 @@ def lit_double_array(values) -> Column:
     of a ``F.lit`` per element (each Column op is a blocking py4j round
     trip — a dim-64 query vector costs ~65 trips, a planes×dim
     hyperplane matrix ~400, repeated on EVERY query construction).
-    Bit-identical to the lit loop: ``repr(float)`` round-trips and the
-    SQL parser's double conversion is correctly rounded (verified for
-    subnormals, max-double, -0.0)."""
+    Collects to the same doubles as the lit loop — bit for bit on the
+    values a test pins: NaN, ±inf, -0.0, a subnormal."""
     vals = [float(v) for v in values]
     if not vals:
         return F.array().cast("array<double>")
-    return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
+    return F.expr("array(" + ",".join(map(_sql_double, vals)) + ")")
 
 
 def lit_double_matrix(rows) -> Column:
     """Literal ``array<array<double>>`` in one parse — see
-    :func:`lit_double_array` for the py4j/bit-identity contract."""
+    :func:`lit_double_array` for the py4j/value contract."""
     inner = [
-        "array(" + ",".join(repr(float(v)) + "D" for v in row) + ")"
+        "array(" + ",".join(_sql_double(float(v)) for v in row) + ")"
         for row in rows
     ]
     if not inner:
@@ -36,11 +48,20 @@ def lit_int_array(values) -> Column:
     """Literal integer array in one parse.  Plain digit literals get the
     same per-element INT-or-BIGINT typing rule as ``F.lit(int)``, and
     ``array()`` applies the same widest-type coercion, so the element
-    type matches the lit-loop construction it replaces."""
+    type matches the lit-loop construction it replaces.  INT_MIN is
+    cast explicitly: SQL may read ``-2147483648`` as unary minus on the
+    BIGINT ``2147483648``, while ``F.lit`` types it INT."""
     vals = [int(v) for v in values]
     if not vals:
         return F.array().cast("array<int>")
-    return F.expr("array(" + ",".join(str(v) for v in vals) + ")")
+    return F.expr(
+        "array("
+        + ",".join(
+            "CAST(-2147483648 AS INT)" if v == -(2**31) else str(v)
+            for v in vals
+        )
+        + ")"
+    )
 
 
 @contextmanager

@@ -231,7 +231,8 @@ def bpe_train(
     Release contract: ``unpersist()`` does NOT free localCheckpoint
     blocks — Spark's ContextCleaner frees them asynchronously once the
     DataFrame is garbage-collected, so callers just drop their
-    reference; there is no explicit release call to make.
+    reference.  Training that stops before its first merge returns the
+    persisted input table itself, which ``release_caches()`` frees.
 
     ``merges_per_round`` is the scale knob.  At 1 (default, the oracle
     contract) each merge is its own count→argmax→fold round — textbook
@@ -266,15 +267,17 @@ def train_from_words(
         raise ValueError(
             f"merges_per_round must be >= 1, got {merges_per_round}"
         )
-    from . import iterative_stage_conf
+    from . import iterative_stage_conf, register_cache
 
     spark = words.sparkSession
     rules: list[tuple[int, str, str, str, int]] = []
     with iterative_stage_conf(spark):
         # no eager count: the first round's pair-count collect populates
         # the persisted word table while scanning it, so a separate
-        # materialization job would be pure scheduler floor.
-        cur = words.persist()
+        # materialization job would be pure scheduler floor.  Ledgered:
+        # training that stops before its first merge returns this very
+        # table, so only release_caches() can free it.
+        cur = register_cache(words)
         rank = 1
         while rank <= n_merges:
             want = min(merges_per_round, n_merges - rank + 1)

@@ -1181,8 +1181,11 @@ def _bucket_array_sql(text_col: str, d: int) -> str:
     )
 
 
+_HK_DENSE_MAX_D = 64  # d-column dense plan up to here, sparse above
+
+
 def hash_kernel_classifier(
-    train: DataFrame,
+    train: DataFrame | None,
     score: DataFrame,
     text_col: str = "text",
     label_col: str = "lang",
@@ -1192,7 +1195,6 @@ def hash_kernel_classifier(
     iters: int = 4,
     lr: float = 0.5,
     threshold: float = 0.5,
-    impl: str = "auto",
     train_filter: str | None = None,
 ) -> tuple[list[float], DataFrame]:
     """fastText-style quality classifier over HASHED n-gram features
@@ -1214,65 +1216,157 @@ def hash_kernel_classifier(
     logistic: a sigmoid would drag in transcendentals whose last ULP
     differs across engines.
 
+    The ONE-head case of the K-head core (:func:`_hk_fit`, which picks
+    the physical plan from ``d``): the head scores ``label_col ==
+    positive`` and this wrapper only applies the threshold rule.
+    Training reads ``train``, or — with ``train=None`` — the
+    ``train_filter`` slice of ``score``.
+
     Returns ``(weights, scored)`` where ``weights`` is
     ``[bias, w_0..w_{d-1}]`` and ``scored`` is one row per scored doc:
-    ``(id, qscore, keep)`` with ``keep = qscore >= threshold``.
+    ``(id, qscore, keep)`` with ``keep = qscore >= threshold``."""
+    w, scored = _hk_fit(
+        train, score, [positive], text_col=text_col, label_col=label_col,
+        id_col=id_col, d=d, iters=iters, lr=lr, train_filter=train_filter,
+    )
+    return w[0], _hk_keep(scored, id_col, threshold)
 
-    Two interchangeable physical plans behind ``impl`` (same numbers to
-    the last bit — the ordered-fold analysis below):
 
-    * ``"dense"`` — d named ``x_j`` columns, each an ``F.filter`` scan
-      of the per-row bucket array; each GD step is ONE map-side-combined
-      moment aggregate to a single (d+2)-column row; scoring is a pure
-      literal-weight projection (no join, no shuffle, no exchange).
-      Unbeatable at small d, but per-row featurization is
-      O(tokens × d) and the projection is d columns wide — at
-      fastText-scale d (2^18 buckets) that is ~32,000× the per-row work
-      and a 262k-column plan that will not even compile.
-    * ``"sparse"`` — the production shape: tokens explode to
-      ``(doc, bucket, cnt)`` rows, one groupBy builds each doc's SORTED
-      sparse feature array ONCE (persisted across the GD steps), the
-      per-doc prediction is an ordered ``F.aggregate`` fold with the
-      weight vector attached as a single broadcast array row, and each
-      GD step's moments come back as ONE groupBy(bucket) combiner
-      aggregate of ≤ d+1 narrow rows.  Per-step cost is independent of
-      ``d`` (measured flat d=8 → d=65536 — see SCALING.md round 7);
-      only the d-length weight vector itself touches the driver.
+def hash_kernel_multiclass(
+    train: DataFrame | None,
+    score: DataFrame,
+    classes: list[str],
+    text_col: str = "text",
+    label_col: str = "lang",
+    id_col: str = "doc_id",
+    d: int = 16,
+    iters: int = 3,
+    lr: float = 0.5,
+    train_filter: str | None = None,
+) -> tuple[dict[str, list[float]], DataFrame]:
+    """One-vs-rest MULTICLASS hash-kernel classifier — in-engine trained
+    language ID replacing the marker-list heuristic (`lang_id`) with a
+    learned lexical signal, the fastText-style langid stage of a
+    curation pipeline.
 
-    ``impl="auto"`` picks dense for d ≤ 64, sparse above.  The paths are
-    BIT-IDENTICAL, not approximately equal: the sparse fold adds the
-    non-zero ``w_j·x_j`` terms in the same ascending-j order as the
-    dense chain, and the terms it skips are exact IEEE ``±0.0`` adds
+    Same contract and feature map as :func:`hash_kernel_classifier`,
+    with one head per class trained SIMULTANEOUSLY by the same K-head
+    core: every GD step is still ONE moment aggregate, so adding classes
+    costs no extra scans (at 100 TB the corpus is read ``iters`` times
+    total, not ``iters·K``).  Prediction = argmax over the K head scores
+    with ties toward the lexicographically largest class label (the
+    same ``greatest(struct(score, label))`` total rule as `lang_id`, so
+    the SQL oracle replays it verbatim).
+
+    Returns ``(weights, predicted)``: ``weights`` maps class →
+    ``[bias, w_0..w_{d-1}]``; ``predicted`` is one row per scored doc
+    ``(id, lang_pred, best_score)``."""
+    if not classes or len(classes) < 2 or len(set(classes)) != len(classes):
+        # the argmax runs greatest(struct…), which needs >= 2 heads —
+        # fail up front, not after the GD work
+        raise ValueError(
+            f"classes must be >= 2 unique labels (one-vs-rest argmax "
+            f"needs multiple heads): {classes}"
+        )
+    w, scored = _hk_fit(
+        train, score, classes, text_col=text_col, label_col=label_col,
+        id_col=id_col, d=d, iters=iters, lr=lr, train_filter=train_filter,
+    )
+    return dict(zip(classes, w)), _hk_argmax(scored, classes, id_col)
+
+
+def _hk_keep(scored: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Binary decision rule over a one-head core frame:
+    ``(id, qscore, keep)`` with ``qscore = s_0``."""
+    return scored.selectExpr(
+        _qident(id_col),
+        "s_0 AS qscore",
+        f"s_0 >= CAST({float(threshold)!r} AS DOUBLE) AS keep",
+    )
+
+
+def _hk_argmax(scored: DataFrame, classes: list[str], id_col: str) -> DataFrame:
+    """Multiclass decision rule over a K-head core frame:
+    ``(id, lang_pred, best_score)``, ties toward the largest label."""
+    best = "greatest(" + ", ".join(
+        f"struct(s_{i} AS s, {_qstr(c)} AS l)" for i, c in enumerate(classes)
+    ) + ")"
+    return scored.selectExpr(
+        _qident(id_col), f"{best}.l AS lang_pred", f"{best}.s AS best_score"
+    )
+
+
+def _hk_fit(
+    train: DataFrame | None,
+    score: DataFrame,
+    heads: list[str],
+    *,
+    d: int,
+    iters: int,
+    train_filter: str | None,
+    **kw,
+) -> tuple[list[list[float]], DataFrame]:
+    """K-head hash-kernel fit: head ``i`` regresses ``label_col ==
+    heads[i]``.  Returns ``(w, scored)`` — ``w[i]`` is head i's
+    ``[bias, w_0..w_{d-1}]``, ``scored`` is ``(id, s_0..s_{K-1})``.
+
+    One physical plan per ``d``: :func:`_hk_dense` for d ≤ 64 (d named
+    columns — unbeatable at small d, but a 262k-column plan will not
+    even compile at fastText-scale d), :func:`_hk_sparse` above.  The
+    plans are BIT-IDENTICAL, not approximately equal: the sparse fold
+    adds the non-zero ``w_j·x_j`` terms in the same ascending-j order as
+    the dense chain, and the terms it skips are exact IEEE ``±0.0`` adds
     (identity on every reachable accumulator); the quantized moments are
-    integer sums, order-free by construction.  The replica test asserts
-    exact float equality of weights and scores across the two plans."""
-    from .export import hash52
-
+    integer sums, order-free by construction.  The replica tests assert
+    exact float equality of weights and scores across the two cores."""
     if d < 1 or iters < 1:
         raise ValueError(f"need d >= 1 and iters >= 1, got d={d} iters={iters}")
-    if impl not in ("auto", "dense", "sparse"):
-        raise ValueError(f"impl must be auto|dense|sparse, got {impl!r}")
-    if impl == "auto":
-        impl = "dense" if d <= 64 else "sparse"
     if train_filter is not None and train is not None:
         raise ValueError(
-            "hash_kernel_classifier: pass train_filter with train=None "
-            "(the slice is taken from `score` after featurization)"
-        )
-    if impl == "sparse":
-        if train_filter is not None:
-            raise ValueError(
-                "hash_kernel_classifier: train_filter is a dense-plan "
-                "option (the sparse train keys differ from score keys)"
-            )
-        return _hash_kernel_sparse(
-            train, score, text_col, label_col, positive, id_col,
-            d, iters, lr, threshold,
+            "hash-kernel classifier: pass train_filter with train=None "
+            "(the slice is taken from `score`)"
         )
     if train_filter is None and train is None:
-        raise ValueError("hash_kernel_classifier: need train or train_filter")
+        raise ValueError("hash-kernel classifier: need train or train_filter")
+    core = _hk_dense if d <= _HK_DENSE_MAX_D else _hk_sparse
+    return core(
+        train, score, heads, d=d, iters=iters, train_filter=train_filter, **kw
+    )
+
+
+_HK_EMPTY = "hash-kernel classifier: empty training slice — nothing to fit"
+
+
+def _hk_dense(
+    train: DataFrame | None,
+    score: DataFrame,
+    heads: list[str],
+    *,
+    text_col: str = "text",
+    label_col: str = "lang",
+    id_col: str = "doc_id",
+    d: int,
+    iters: int,
+    lr: float = 0.5,
+    train_filter: str | None = None,
+) -> tuple[list[list[float]], DataFrame]:
+    """Dense plan of the K-head core (see :func:`_hk_fit`): d named
+    ``x_j`` columns from ONE featurize pass; each GD step is ONE
+    map-side-combined moment aggregate carrying all K·(d+1) sums to a
+    single bounded row; scoring is a pure literal-weight projection (no
+    join, no shuffle, no exchange).
+
+    With ``train_filter`` the corpus is featurized ONCE with id AND
+    labels, GD trains on the filtered slice of the SAME cached features,
+    and scoring reads the cache instead of re-hashing the corpus: one md5
+    pass instead of 1.5 (train slice + full rescore).  The cache backs
+    the returned plan, so it is registered in the package cache ledger
+    for the caller to release."""
+    from . import register_cache, restore_stage_conf, set_iterative_stage_conf
 
     spark = score.sparkSession
+    K = len(heads)
+    shared = train_filter is not None
 
     def featurize(df: DataFrame, with_id: bool, with_label: bool) -> DataFrame:
         # ONE spark.sql round trip instead of ~4·d Column-API calls: the
@@ -1290,11 +1384,16 @@ def hash_kernel_classifier(
             lead.append(_qident(id_col))
             inner_lead.append(_qident(id_col))
         if with_label:
-            lead.append(
-                f"CASE WHEN {_qident(label_col)} = {_qstr(positive)} "
-                "THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS y"
-            )
+            lead += [
+                f"CASE WHEN {_qident(label_col)} = {_qstr(h)} "
+                "THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END "
+                f"AS y_{i}"
+                for i, h in enumerate(heads)
+            ]
             inner_lead.append(_qident(label_col))
+        if shared:
+            lead.append("__train")
+            inner_lead.append("__train")
         xs = ", ".join(
             f"CAST(size(filter(__b, b -> b = {j})) AS DOUBLE) / "
             f"CAST(size(__b) AS DOUBLE) AS x{j}"
@@ -1308,68 +1407,59 @@ def hash_kernel_classifier(
             src=df,
         )
 
-    # the features feed `iters` moment passes — hash once, persist.
-    # train_filter mode featurizes `score` ONCE with id AND label and
-    # trains on the filtered slice of the SAME cached features, so
-    # scoring reads the cache instead of re-hashing the corpus: one md5
-    # pass over the corpus instead of 1.5 (train slice + full rescore) —
-    # at 100 TB, half a corpus pass saved per fit.  The cache then backs
-    # the returned scored plan, so it stays alive for the caller (the
-    # session owner clears it — bench/tests clearCache between queries).
-    shared = train_filter is not None
-    if shared:
-        from . import register_cache
-
-        feats = register_cache(
-            featurize(score, with_id=True, with_label=True)
-        )
-        tf = feats.filter(train_filter)
-    else:
-        # classic mode: try/finally so a failure mid-loop (empty slice,
-        # executor error) doesn't leak the cached slice for the session
-        tf = featurize(train, with_id=False, with_label=True).persist()
-    w = [0.0] * (d + 1)  # [bias, w_0..w_{d-1}]
-    # weights ride as ONE broadcast row of plain data (the multiclass
-    # path's trick, now shared): literal weights change the plan every GD
-    # step and whole-stage codegen recompiles the moment aggregate each
-    # time — re-measured r11 at 2.4 s of pure compilation per step; with
-    # column references the plan is step-invariant and compiles once.
-    # The aggregate list is likewise built once, as SQL text (one parse
-    # each instead of ~13 py4j calls per expression).
-    pred_sql = "wb" + "".join(f" + wc{j} * x{j}" for j in range(d))
-    err_sql = f"(({pred_sql}) - y)"
-    agg_cols = [
-        F.expr("count(1) AS n"),
-        F.expr(f"CAST(sum(floor({err_sql} * 1e8)) AS BIGINT) AS sb"),
-        *[
-            F.expr(
-                f"CAST(sum(floor(x{j} * {err_sql} * 1e8)) AS BIGINT) AS s{j}"
-            )
-            for j in range(d)
-        ],
+    # weights ride as ONE broadcast row of plain data (the oracle's CROSS
+    # JOIN wt{i-1} shape), NOT as literals: literal weights change the
+    # plan every GD step and whole-stage codegen recompiles the
+    # K·(d+1)-expression moment aggregate each time — measured 2 s of
+    # pure compilation per step at K=5, d=16; with column references the
+    # plan is step-invariant and compiles once.  The aggregate list is
+    # likewise built once, as SQL text (one parse per expression).
+    wcols = [f"wb_{i}" for i in range(K)] + [
+        f"c_{i}_{j}" for i in range(K) for j in range(d)
     ]
-    wcols = ["wb"] + [f"wc{j}" for j in range(d)]
-    from . import restore_stage_conf, set_iterative_stage_conf
+    aggs = [F.expr("count(1) AS n")]
+    for i in range(K):
+        pred = f"wb_{i}" + "".join(f" + c_{i}_{j} * x{j}" for j in range(d))
+        err = f"(({pred}) - y_{i})"
+        aggs.append(F.expr(f"CAST(sum(floor({err} * 1e8)) AS BIGINT) AS sb_{i}"))
+        aggs += [
+            F.expr(f"CAST(sum(floor(x{j} * {err} * 1e8)) AS BIGINT) AS s_{i}_{j}")
+            for j in range(d)
+        ]
 
-    # scoped AQE conf (r12): `iters` tiny moment jobs + the cached
-    # featurize — see pipeline.iterative_stage_conf for the rationale
+    if shared:
+        # the slice flag is evaluated on `score`'s own columns in the one
+        # featurize pass, so the filter may name any of them, as on the
+        # sparse core
+        src = score.withColumn("__train", F.expr(train_filter))
+        feats = register_cache(featurize(src, with_id=True, with_label=True))
+        tf = feats.filter("__train")
+    else:
+        # try/finally below so a failure mid-loop (empty slice, executor
+        # error) doesn't leak the cached slice for the session
+        tf = featurize(train, with_id=False, with_label=True).persist()
+    w = [[0.0] * (d + 1) for _ in heads]  # per head: [bias, w_0..w_{d-1}]
+    # scoped AQE conf: `iters` tiny moment jobs + the cached featurize —
+    # see pipeline.iterative_stage_conf for the rationale
     _conf = set_iterative_stage_conf(spark)
     try:
         for _ in range(iters):
+            # pandas→Arrow: the plain-list createDataFrame path was
+            # measured at ~450 ms per step
+            vals = [h[0] for h in w] + [h[j + 1] for h in w for j in range(d)]
             wrow = F.broadcast(
-                spark.createDataFrame(pd.DataFrame([list(w)], columns=wcols))
+                spark.createDataFrame(pd.DataFrame([vals], columns=wcols))
             )
-            row = tf.crossJoin(wrow).agg(*agg_cols).first()
+            # ONE bounded row for ALL heads; plan identical every step
+            row = tf.crossJoin(wrow).agg(*aggs).first()
             n = row["n"]
             if not n:
-                raise ValueError(
-                    "hash_kernel_classifier: empty training slice — "
-                    "nothing to fit"
-                )
+                raise ValueError(_HK_EMPTY)
             # mirror the oracle's op chain: (S / n) / 1e8, then w - lr*g
-            w[0] = w[0] - lr * (row["sb"] / n / 1e8)
-            for j in range(d):
-                w[j + 1] = w[j + 1] - lr * (row[f"s{j}"] / n / 1e8)
+            for i, h in enumerate(w):
+                h[0] = h[0] - lr * (row[f"sb_{i}"] / n / 1e8)
+                for j in range(d):
+                    h[j + 1] = h[j + 1] - lr * (row[f"s_{i}_{j}"] / n / 1e8)
     except BaseException:
         if shared:
             feats.unpersist()
@@ -1385,468 +1475,62 @@ def hash_kernel_classifier(
     # scoring weights ARE literals (one compile, plan-linted join-free);
     # repr() round-trips every finite double and Spark's SQL parser
     # reads it back to the identical bits
-    spred_sql = f"CAST({w[0]!r} AS DOUBLE)" + "".join(
-        f" + CAST({w[j + 1]!r} AS DOUBLE) * x{j}" for j in range(d)
-    )
-    scored = sf_feats.selectExpr(
-        _qident(id_col),
-        f"({spred_sql}) AS qscore",
-        f"(({spred_sql}) >= CAST({float(threshold)!r} AS DOUBLE)) AS keep",
-    )
-    return w, scored
+    scores = [
+        f"CAST({h[0]!r} AS DOUBLE)"
+        + "".join(f" + CAST({h[j + 1]!r} AS DOUBLE) * x{j}" for j in range(d))
+        + f" AS s_{i}"
+        for i, h in enumerate(w)
+    ]
+    return w, sf_feats.selectExpr(_qident(id_col), *scores)
 
 
-def _hash_kernel_sparse(
-    train: DataFrame,
+def _hk_sparse(
+    train: DataFrame | None,
     score: DataFrame,
-    text_col: str,
-    label_col: str,
-    positive: str,
-    id_col: str,
-    d: int,
-    iters: int,
-    lr: float,
-    threshold: float,
-) -> tuple[list[float], DataFrame]:
-    """Sparse physical plan for `hash_kernel_classifier` — see its
-    docstring for the contract and the bit-identity argument.  Shapes:
-
-    * featurize ONCE: explode tokens → (doc, bucket) → two combiner
-      groupBys build each doc's bucket-ASCENDING sparse array
-      ``feats: array<struct<bucket,x>>`` (persisted across all steps);
-    * per GD step: the current weight vector rides in as ONE broadcast
-      array row (data, not a d-wide expression), the per-doc prediction
-      is an ordered left fold over ``feats`` (ascending bucket — the
-      same IEEE add order as the dense w0+w1x1+… chain), and the
-      moments return as one groupBy(bucket) integer aggregate: ≤ d
-      bucket rows plus a sentinel bucket −1 row carrying (Σ⌊e·1e8⌋, n);
-    * scoring: same broadcast-array fold, a pure projection per doc.
-
-    Nothing here scales with ``d`` except the weight vector itself."""
-    from .export import hash52
-
-    spark = train.sparkSession
-
-    def sparse_feats(df: DataFrame, with_id: bool) -> DataFrame:
-        t = F.split(F.trim(F.col(text_col)), r"\s+")
-        buckets = F.transform(t, lambda wd: hash52("hk:", wd) % d)
-        if with_id:
-            lead = [F.col(id_col).alias("__k")]
-        else:
-            # training docs need a grouping key but never output one —
-            # assigned per input row BEFORE the explode so every token
-            # of a doc shares it.  DETERMINISTIC (ADVICE r9, same fix as
-            # the multiclass sibling): hash(text,label) + duplicate rank
-            # instead of monotonically_increasing_id, which can shift if
-            # lost persisted partitions recompute mid-iteration.
-            from pyspark.sql import Window as _W
-
-            lead = [
-                F.xxhash64(F.col(text_col), F.col(label_col)).alias("__k"),
-                F.row_number()
-                .over(
-                    _W.partitionBy(text_col, label_col).orderBy(F.lit(1))
-                )
-                .cast("long")
-                .alias("__dup"),
-                F.when(F.col(label_col) == positive, F.lit(1.0))
-                .otherwise(F.lit(0.0))
-                .alias("y"),
-            ]
-        base = df.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-            *lead, buckets.alias("__b")
-        )
-        keys = ["__k"] if with_id else ["__k", "__dup", "y"]
-        tok = base.select(
-            *keys,
-            F.size("__b").cast("double").alias("__n"),
-            F.explode("__b").alias("bucket"),
-        )
-        return (
-            tok.groupBy(*keys, "__n", F.col("bucket").cast("int").alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy(*keys, "__n")
-            .agg(F.array_sort(F.collect_list(F.struct("bucket", "c"))).alias("bc"))
-            .select(
-                *keys,
-                F.transform(
-                    "bc",
-                    lambda s: F.struct(
-                        s["bucket"].alias("bucket"),
-                        # same value as dense x_j: long→double cast, then
-                        # one double division by the token count
-                        (s["c"].cast("double") / F.col("__n")).alias("x"),
-                    ),
-                ).alias("feats"),
-            )
-        )
-
-    def fold_pred(bias: float) -> Column:
-        # ordered left fold, ascending bucket == the dense chain's
-        # ascending-j add order; terms absent here are exact ±0.0 adds
-        # in the dense chain (IEEE identity on every reachable acc)
-        return F.aggregate(
-            "feats",
-            F.lit(bias),
-            lambda acc, s: acc + F.element_at("w", s["bucket"] + 1) * s["x"],
-        )
-
-    def with_weights(df: DataFrame, wtail: list[float]) -> DataFrame:
-        # one broadcast array ROW, not d literal expressions — the plan
-        # stays O(1) in d.  At d=2^18 Spark warns about ~2 MB tasks (the
-        # weight vector rides with the plan); that is the irreducible
-        # cost of moving the model each step — an eager localCheckpoint
-        # of this row was measured SLOWER (one extra job per step) and
-        # still ships the same bytes, so live with the warning.
-        # pandas→Arrow, NOT a plain list: the pickle createDataFrame
-        # path costs ~450 ms per call on the bench host (r11's dense-
-        # path finding, applied here in r12).
-        wdf = spark.createDataFrame(
-            pd.DataFrame({"w": [wtail]}), schema="w array<double>"
-        )
-        return df.crossJoin(F.broadcast(wdf))
-
-    # the per-step moment query, formatted ONCE and parsed per step
-    # (r12, VERDICT r11 ask #1b): one spark.sql call replaces ~50
-    # Column-API py4j round trips per step, and the BIAS rides in the
-    # broadcast weight row (column __b) instead of a literal, so the
-    # per-step plan is bit-identical across steps and whole-stage
-    # codegen compiles once.  The expression tree is the same as the
-    # Column construction it replaces (same fold, same floor/1e8
-    # quantization — the oracle pins bit-identity); __e sits behind its
-    # own subquery projection: referenced by the sentinel AND the
-    # per-element lambda, CollapseProject leaves a non-cheap
-    # multi-referenced alias alone, so the fold runs once per row.
-    step_sql = """
-        SELECT z.bucket AS bucket, sum(z.q) AS s, count(1) AS c
-        FROM (
-          SELECT explode(concat(
-            array(named_struct(
-              'bucket', -1, 'q', CAST(floor(__e * 1e8) AS BIGINT))),
-            transform(feats, s -> named_struct(
-              'bucket', s.bucket,
-              'q', CAST(floor(s.x * __e * 1e8) AS BIGINT)))
-          )) AS z
-          FROM (
-            SELECT feats,
-                   aggregate(
-                     feats, __b,
-                     (acc, s) -> acc + element_at(w, s.bucket + 1) * s.x
-                   ) - y AS __e
-            FROM {tf} CROSS JOIN {w}
-          )
-        )
-        GROUP BY z.bucket
-    """
-
-    from . import restore_stage_conf, set_iterative_stage_conf
-
-    _conf = set_iterative_stage_conf(spark)
-    tfa = sparse_feats(train, with_id=False).persist()
-    w = [0.0] * (d + 1)  # [bias, w_0..w_{d-1}]
-    try:
-        for _ in range(iters):
-            wdf = F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame({"__b": [w[0]], "w": [w[1:]]}),
-                    schema="__b double, w array<double>",
-                )
-            )
-            rows = spark.sql(
-                step_sql, tf=tfa, w=wdf
-            ).collect()  # ≤ d+1 narrow rows — the only driver traffic
-            by_bucket = {r["bucket"]: r for r in rows}
-            sent = by_bucket.pop(-1, None)
-            if sent is None:
-                raise ValueError(
-                    "hash_kernel_classifier: empty training slice — "
-                    "nothing to fit"
-                )
-            n = sent["c"]
-            # identical op chain to the dense path: (S / n) / 1e8, w - lr*g
-            w[0] = w[0] - lr * (sent["s"] / n / 1e8)
-            for b, r in by_bucket.items():
-                w[b + 1] = w[b + 1] - lr * (r["s"] / n / 1e8)
-    finally:
-        restore_stage_conf(spark, _conf)
-        tfa.unpersist()
-
-    scored = (
-        with_weights(sparse_feats(score, with_id=True), w[1:])
-        .select(F.col("__k").alias(id_col), fold_pred(w[0]).alias("qscore"))
-        .select(
-            id_col,
-            "qscore",
-            (F.col("qscore") >= F.lit(threshold)).alias("keep"),
-        )
-    )
-    return w, scored
-
-
-def hash_kernel_multiclass(
-    train: DataFrame,
-    score: DataFrame,
-    classes: list[str],
+    heads: list[str],
+    *,
     text_col: str = "text",
     label_col: str = "lang",
     id_col: str = "doc_id",
-    d: int = 16,
-    iters: int = 3,
-    lr: float = 0.5,
-    impl: str = "auto",
-    train_filter: str | None = None,
-) -> tuple[dict[str, list[float]], DataFrame]:
-    """One-vs-rest MULTICLASS hash-kernel classifier — in-engine trained
-    language ID replacing the marker-list heuristic (`lang_id`) with a
-    learned lexical signal, the fastText-style langid stage of a
-    curation pipeline.
-
-    Same determinism contract and feature map as
-    :func:`hash_kernel_classifier` (md5-derived ``hash52`` bucket
-    histogram, floor-quantized BIGINT gradient moments, dyadic ``lr``,
-    ``w − lr·(S/n/1e8)`` updates, squared loss — no transcendentals), but
-    K binary heads trained SIMULTANEOUSLY: every GD step is still ONE
-    map-side-combined moment aggregate returning a single bounded row —
-    the K·(d+1) sums share the one pass over the featurized slice, so
-    adding classes costs no extra scans (the scale property: at 100 TB
-    the corpus is read ``iters`` times total, not ``iters·K``).
-    Prediction = argmax over the K head scores with ties toward the
-    lexicographically largest class label (the same
-    ``greatest(struct(score, label))`` total rule as `lang_id`, so the
-    SQL oracle replays it verbatim).
-
-    Two physical plans behind ``impl``, same numbers to the last bit
-    (the binary classifier's ordered-fold argument, head by head):
-    ``"dense"`` — d named ``x_j`` columns, each GD step ONE moment
-    aggregate to a single bounded row; the right plan at langid-sized
-    d (≤ 64).  ``"sparse"`` — the fastText-scale plan (r8 ask #8): the
-    binary sparse shapes generalized to K heads — features built ONCE
-    at the token level, the K×d weight state riding as a BROADCAST
-    HASH-JOIN TABLE of d narrow rows (NOT one array-of-K·d row: a
-    cross-joined 10 MB array column materializes into every joined row
-    once the fold knocks the projection out of codegen — measured
-    ~12 ms/doc at K·d = 1.3M, SCALING.md round-9), per-doc head
-    predictions K ordered folds over the bucket-ascending regrouped
-    terms, and each GD step's moments return as one
-    groupBy(cls, bucket) integer aggregate of ≤ K·(d+1) narrow rows.
-    Nothing scales with ``d`` but the weight vector itself (measured
-    ~flat d=8 → d=2^18, SCALING.md round 9).  ``"auto"`` picks dense
-    for d ≤ 64, sparse above.
-
-    Returns ``(weights, predicted)``: ``weights`` maps class →
-    ``[bias, w_0..w_{d-1}]``; ``predicted`` is one row per scored doc
-    ``(id, lang_pred, best_score)``."""
-    from .export import hash52
-
-    if d < 1 or iters < 1:
-        raise ValueError(f"need d >= 1 and iters >= 1, got d={d} iters={iters}")
-    if impl not in ("auto", "dense", "sparse"):
-        raise ValueError(f"impl must be auto|dense|sparse, got {impl!r}")
-    if impl == "auto":
-        impl = "dense" if d <= 64 else "sparse"
-    if not classes or len(classes) < 2 or len(set(classes)) != len(classes):
-        # both plans argmax via greatest(struct…), which needs >= 2
-        # heads — fail up front, not after the GD work (review r9)
-        raise ValueError(
-            f"classes must be >= 2 unique labels (one-vs-rest argmax "
-            f"needs multiple heads): {classes}"
-        )
-    if train_filter is not None and train is not None:
-        raise ValueError(
-            "hash_kernel_multiclass: pass train_filter with train=None "
-            "(the slice is taken from `score` after featurization)"
-        )
-    if impl == "sparse":
-        if train_filter is not None:
-            raise ValueError(
-                "hash_kernel_multiclass: train_filter is a dense-plan "
-                "option (the sparse train keys differ from score keys)"
-            )
-        return _hash_kernel_multiclass_sparse(
-            train, score, classes, text_col, label_col, id_col, d, iters, lr
-        )
-    if d > 64:
-        raise ValueError(
-            f"dense plan needs d <= 64, got d={d} — use impl='sparse'"
-        )
-
-    spark = score.sparkSession
-    # class tag usable inside generated column names (labels are free
-    # text; column names must stay parseable) — classes are unique, so
-    # an index tag is unambiguous
-    ctag = {c: i for i, c in enumerate(classes)}
-
-    def featurize(df: DataFrame, with_id: bool, with_label: bool) -> DataFrame:
-        # ONE spark.sql round trip (see the binary path: ~0.5-2.5 ms per
-        # py4j call made Column-API featurize construction ~1 s per run);
-        # the subquery keeps the hash-once __b projection boundary
-        lead = []
-        inner_lead = []
-        if with_id:
-            lead.append(_qident(id_col))
-            inner_lead.append(_qident(id_col))
-        if with_label:
-            lead += [
-                f"CASE WHEN {_qident(label_col)} = {_qstr(c)} "
-                f"THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END "
-                f"AS y_{ctag[c]}"
-                for c in classes
-            ]
-            inner_lead.append(_qident(label_col))
-        xs = ", ".join(
-            f"CAST(size(filter(__b, b -> b = {j})) AS DOUBLE) / "
-            f"CAST(size(__b) AS DOUBLE) AS x{j}"
-            for j in range(d)
-        )
-        return spark.sql(
-            f"SELECT {', '.join(lead)}, {xs} FROM "
-            f"(SELECT {', '.join(inner_lead)}, "
-            f"{_bucket_array_sql(text_col, d)} AS __b FROM {{src}} "
-            f"WHERE length(trim({_qident(text_col)})) > 0)",
-            src=df,
-        )
-
-    wcols = [f"wb_{ctag[c]}" for c in classes] + [
-        f"c_{ctag[c]}_{j}" for c in classes for j in range(d)
-    ]
-
-    def weight_row(wd: dict[str, list[float]]):
-        # weights ride as ONE broadcast row (the oracle's CROSS JOIN
-        # wt{i-1} shape), NOT as literals: literal weights change the
-        # plan every GD step and whole-stage codegen recompiles the
-        # K·(d+1)-expression moment aggregate each time — measured 2 s
-        # of pure compilation per step at K=5, d=16 (re-measured 2.4 s
-        # r11); with column references the plan is step-invariant and
-        # compiles once.  pandas→Arrow conversion: the plain-list
-        # createDataFrame path was measured at ~450 ms per step.
-        vals = [wd[c][0] for c in classes] + [
-            wd[c][j + 1] for c in classes for j in range(d)
-        ]
-        return F.broadcast(
-            spark.createDataFrame(pd.DataFrame([vals], columns=wcols))
-        )
-
-    aggs = [F.expr("count(1) AS n")]
-    for c in classes:
-        i = ctag[c]
-        pred = f"wb_{i}" + "".join(f" + c_{i}_{j} * x{j}" for j in range(d))
-        err = f"(({pred}) - y_{i})"
-        aggs.append(
-            F.expr(f"CAST(sum(floor({err} * 1e8)) AS BIGINT) AS sb_{i}")
-        )
-        aggs += [
-            F.expr(
-                f"CAST(sum(floor(x{j} * {err} * 1e8)) AS BIGINT) AS s_{i}_{j}"
-            )
-            for j in range(d)
-        ]
-
-    # shared-featurize mode (see the binary path): one md5 pass over the
-    # corpus backs both the GD slice and the returned scoring plan
-    shared = train_filter is not None
-    if shared:
-        from . import register_cache
-
-        feats = register_cache(
-            featurize(score, with_id=True, with_label=True)
-        )
-        tf = feats.filter(train_filter)
-    else:
-        tf = featurize(train, with_id=False, with_label=True).persist()
-    w = {c: [0.0] * (d + 1) for c in classes}
-    from . import restore_stage_conf, set_iterative_stage_conf
-
-    _conf = set_iterative_stage_conf(spark)
-    try:
-        for _ in range(iters):
-            # ONE bounded row for ALL classes; plan identical every step
-            row = tf.crossJoin(weight_row(w)).agg(*aggs).first()
-            n = row["n"]
-            if not n:
-                raise ValueError(
-                    "hash_kernel_multiclass: empty training slice — "
-                    "nothing to fit"
-                )
-            for c in classes:
-                i = ctag[c]
-                w[c][0] = w[c][0] - lr * (row[f"sb_{i}"] / n / 1e8)
-                for j in range(d):
-                    w[c][j + 1] = w[c][j + 1] - lr * (row[f"s_{i}_{j}"] / n / 1e8)
-    except BaseException:
-        if shared:
-            feats.unpersist()
-        raise
-    finally:
-        restore_stage_conf(spark, _conf)
-        if not shared:
-            tf.unpersist()
-
-    sf_feats = feats if shared else featurize(
-        score, with_id=True, with_label=False
-    )
-    # scoring weights as literals (one compile; repr round-trips bits)
-    heads = ", ".join(
-        "struct(("
-        + f"CAST({w[c][0]!r} AS DOUBLE)"
-        + "".join(
-            f" + CAST({w[c][j + 1]!r} AS DOUBLE) * x{j}" for j in range(d)
-        )
-        + f") AS s, {_qstr(c)} AS l)"
-        for c in classes
-    )
-    return w, sf_feats.selectExpr(
-        _qident(id_col),
-        f"greatest({heads}).l AS lang_pred",
-        f"greatest({heads}).s AS best_score",
-    )
-
-
-def _hash_kernel_multiclass_sparse(
-    train: DataFrame,
-    score: DataFrame,
-    classes: list[str],
-    text_col: str,
-    label_col: str,
-    id_col: str,
     d: int,
     iters: int,
-    lr: float,
-) -> tuple[dict[str, list[float]], DataFrame]:
-    """Sparse physical plan for `hash_kernel_multiclass` — the binary
-    `_hash_kernel_sparse` generalized to K one-vs-rest heads; see both
-    docstrings for the contract and the bit-identity argument.
-
-    Shapes (chosen by measurement — SCALING.md round-9):
+    lr: float = 0.5,
+    train_filter: str | None = None,
+) -> tuple[list[list[float]], DataFrame]:
+    """Sparse plan of the K-head core (see :func:`_hk_fit`) — the
+    fastText-scale shape, chosen by measurement (SCALING.md round 9):
 
     * featurize ONCE to the TOKEN level: explode tokens → one combiner
       groupBy → ``(doc key, bucket, x)`` rows, persisted across all GD
-      steps and scoring;
+      steps;
     * the K-head weight state rides as a BROADCAST HASH-JOIN TABLE of d
       narrow rows ``(bucket, w_0..w_{K-1})`` built via Arrow, NOT as one
-      array-of-K·d row: a cross-joined 10 MB array column materializes
-      into EVERY joined row once a higher-order fold knocks the
-      projection out of codegen — measured ~12 ms/doc of pure memcpy at
-      K·d = 1.3M, two orders of magnitude over the join itself.  The
-      per-token join attaches exactly K doubles;
-    * per prediction pass: token rows join the weight table, per-class
-      terms ``w_cj·x_j`` are computed token-side (the same IEEE multiply
+      array row: a cross-joined 10 MB array column materializes into
+      EVERY joined row once a higher-order fold knocks the projection
+      out of codegen — measured ~12 ms/doc of pure memcpy at K·d = 1.3M,
+      two orders of magnitude over the join itself.  The per-token join
+      attaches exactly K doubles;
+    * per prediction pass: token rows join the weight table, per-head
+      terms ``w_ij·x_j`` are computed token-side (the same IEEE multiply
       as the dense chain), one groupBy(doc) re-collects them
       bucket-ASCENDING, and K ordered left folds add them in the dense
-      chain's order — bit-identical predictions (skipped zero-x terms
-      are exact ±0.0 adds);
+      chain's order;
     * per GD step: moments come back as ONE groupBy(cls, bucket) integer
       aggregate of ≤ K·(d+1) narrow rows, fetched via Arrow.
 
     Per-step and per-doc cost never materialize d — only the d-row
-    weight table (a few MB broadcast) and the K·(d+1) weight arrays on
-    the driver scale with capacity."""
-    import pandas as pd
-
+    weight table (a few MB broadcast) and the K·(d+1) weights on the
+    driver scale with capacity (measured ~flat d=8 → d=2^18).  With
+    ``train_filter`` GD trains on ``score.filter(train_filter)``."""
+    from . import restore_stage_conf, set_iterative_stage_conf
     from .export import hash52
 
-    spark = train.sparkSession
-    K = len(classes)
-    wcols = [f"__w{ci}" for ci in range(K)]
+    spark = score.sparkSession
+    if train_filter is not None:
+        train = score.filter(train_filter)
+    K = len(heads)
+    wcols = [f"__w{i}" for i in range(K)]
+    tkeys = ["__k", "__dup"] + [f"y_{i}" for i in range(K)]  # training keys
 
     def sparse_tok(df: DataFrame, with_id: bool) -> DataFrame:
         t = F.split(F.trim(F.col(text_col)), r"\s+")
@@ -1875,12 +1559,12 @@ def _hash_kernel_multiclass_sparse(
                 .cast("long")
                 .alias("__dup"),
             ] + [
-                F.when(F.col(label_col) == c, F.lit(1.0))
+                F.when(F.col(label_col) == h, F.lit(1.0))
                 .otherwise(F.lit(0.0))
-                .alias(f"y_{ci}")
-                for ci, c in enumerate(classes)
+                .alias(f"y_{i}")
+                for i, h in enumerate(heads)
             ]
-            keys = ["__k", "__dup"] + [f"y_{ci}" for ci in range(K)]
+            keys = tkeys
         base = df.filter(F.length(F.trim(F.col(text_col))) > 0).select(
             *lead, buckets.alias("__b")
         )
@@ -1903,64 +1587,40 @@ def _hash_kernel_multiclass_sparse(
             )
         )
 
-    def weight_table(wd: dict[str, list[float]]) -> DataFrame:
+    def weight_table(w: list[list[float]]) -> DataFrame:
         # d narrow rows via Arrow — milliseconds even at d = 2^18; the
         # per-bucket weights are columns, not an array, so the joined
         # payload is exactly K doubles per token row
         cols = {"bucket": pd.Series(range(d), dtype="int32")}
-        for ci, c in enumerate(classes):
-            cols[wcols[ci]] = pd.Series(wd[c][1:], dtype="float64")
+        for i, h in enumerate(w):
+            cols[wcols[i]] = pd.Series(h[1:], dtype="float64")
         return F.broadcast(spark.createDataFrame(pd.DataFrame(cols)))
 
-    def folded(tokdf: DataFrame, wd: dict[str, list[float]], keys) -> DataFrame:
-        """(keys…, ft) with ft = bucket-ascending array of
-        struct(bucket, x, t: array<K of w_cj·x_j>) — everything the
-        per-class folds AND the moment explode need."""
-        terms = F.array(*[F.col(w) * F.col("x") for w in wcols])
-        j = tokdf.join(weight_table(wd), "bucket").select(
-            *keys, F.struct("bucket", "x", terms.alias("t")).alias("__s")
-        )
-        return j.groupBy(*keys).agg(
-            F.array_sort(F.collect_list("__s")).alias("ft")
-        )
-
-    def fold_pred(ci: int, bias: float) -> Column:
-        # ordered left fold, ascending bucket == the dense chain's
-        # ascending-j add order; terms absent here are exact ±0.0 adds
-        # in the dense chain (identity on every reachable accumulator)
-        return F.aggregate(
-            "ft", F.lit(bias), lambda acc, s: acc + s["t"][ci]
-        )
-
-    tkeys = ["__k", "__dup"] + [f"y_{ci}" for ci in range(K)]
-    # the per-step moment query, formatted ONCE and parsed per step
-    # (r12, VERDICT r11 ask #1b): one spark.sql call replaces the
-    # several-hundred Column-API py4j round trips the K-head
-    # join+regroup+fold construction cost per step, and the K BIASES
-    # ride in a broadcast row (columns __bias_ci) instead of literals,
-    # so the per-step plan is bit-identical across steps and whole-stage
-    # codegen compiles once.  Same expression tree as the Column
-    # construction it replaces (same join+regroup `folded` shape, same
-    # ordered folds, same floor/1e8 quantization — the oracle pins
-    # bit-identity); per-head errors sit behind their own subquery
-    # projection (each referenced by a sentinel AND a per-element
-    # lambda, so CollapseProject leaves the folds evaluated once).
+    # the per-step moment query, formatted ONCE and parsed per step: one
+    # spark.sql call replaces the several-hundred Column-API py4j round
+    # trips the join+regroup+fold construction cost per step, and the K
+    # BIASES ride in a broadcast row (columns __bias_i) instead of
+    # literals, so the per-step plan is identical across steps and
+    # whole-stage codegen compiles once.  Per-head errors sit behind
+    # their own subquery projection (each referenced by a sentinel AND a
+    # per-element lambda, so CollapseProject leaves the folds evaluated
+    # once).  Sentinel bucket −1 carries (Σ⌊e·1e8⌋, n) per head.
     terms_sql = ", ".join(f"{wc} * x" for wc in wcols)
     folds_sql = ",\n               ".join(
-        f"aggregate(ft, __bias_{ci}, (acc, s) -> acc + s.t[{ci}])"
-        f" - y_{ci} AS __e_{ci}"
-        for ci in range(K)
+        f"aggregate(ft, __bias_{i}, (acc, s) -> acc + s.t[{i}])"
+        f" - y_{i} AS __e_{i}"
+        for i in range(K)
     )
     sentinels_sql = ",\n              ".join(
-        f"named_struct('cls', {ci}, 'bucket', -1, "
-        f"'q', CAST(floor(__e_{ci} * 1e8) AS BIGINT))"
-        for ci in range(K)
+        f"named_struct('cls', {i}, 'bucket', -1, "
+        f"'q', CAST(floor(__e_{i} * 1e8) AS BIGINT))"
+        for i in range(K)
     )
     heads_sql = ",\n            ".join(
-        f"transform(ft, s -> named_struct('cls', {ci}, "
+        f"transform(ft, s -> named_struct('cls', {i}, "
         f"'bucket', s.bucket, "
-        f"'q', CAST(floor(s.x * __e_{ci} * 1e8) AS BIGINT)))"
-        for ci in range(K)
+        f"'q', CAST(floor(s.x * __e_{i} * 1e8) AS BIGINT)))"
+        for i in range(K)
     )
     step_sql = f"""
         SELECT z.cls AS cls, z.bucket AS bucket,
@@ -1985,24 +1645,16 @@ def _hash_kernel_multiclass_sparse(
         )
         GROUP BY z.cls, z.bucket
     """
-    from . import restore_stage_conf, set_iterative_stage_conf
 
     _conf = set_iterative_stage_conf(spark)
     tfa = sparse_tok(train, with_id=False).persist()
-    w = {c: [0.0] * (d + 1) for c in classes}
+    w = [[0.0] * (d + 1) for _ in heads]  # per head: [bias, w_0..w_{d-1}]
     try:
         for _ in range(iters):
             bdf = F.broadcast(
                 spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            f"__bias_{ci}": [w[c][0]]
-                            for ci, c in enumerate(classes)
-                        }
-                    ),
-                    schema=", ".join(
-                        f"__bias_{ci} double" for ci in range(K)
-                    ),
+                    pd.DataFrame({f"__bias_{i}": [h[0]] for i, h in enumerate(w)}),
+                    schema=", ".join(f"__bias_{i} double" for i in range(K)),
                 )
             )
             # ≤ K·(d+1) narrow rows — the only driver traffic (Arrow)
@@ -2015,34 +1667,38 @@ def _hash_kernel_multiclass_sparse(
                 for r in pdf[sent_mask].itertuples()
             }
             if 0 not in sents:
-                raise ValueError(
-                    "hash_kernel_multiclass: empty training slice — "
-                    "nothing to fit"
-                )
+                raise ValueError(_HK_EMPTY)
             n = sents[0][1]
-            for ci, c in enumerate(classes):
-                w[c][0] = w[c][0] - lr * (sents[ci][0] / n / 1e8)
+            # identical op chain to the dense core: (S / n) / 1e8, w - lr*g
+            for i, h in enumerate(w):
+                h[0] = h[0] - lr * (sents[i][0] / n / 1e8)
             for r in pdf[~sent_mask].itertuples():
-                c = classes[int(r.cls)]
-                w[c][int(r.bucket) + 1] = w[c][int(r.bucket) + 1] - lr * (
-                    int(r.s) / n / 1e8
-                )
+                h, b = w[int(r.cls)], int(r.bucket) + 1
+                h[b] = h[b] - lr * (int(r.s) / n / 1e8)
     finally:
         restore_stage_conf(spark, _conf)
         tfa.unpersist()
 
-    heads = [
-        F.struct(fold_pred(ci, w[c][0]).alias("s"), F.lit(c).alias("l"))
-        for ci, c in enumerate(classes)
-    ]
-    best = F.greatest(*heads)
-    scored = folded(sparse_tok(score, with_id=True), w, ["__k"]).select(
-        F.col("__k").alias(id_col),
-        best.getField("l").alias("lang_pred"),
-        best.getField("s").alias("best_score"),
+    # scoring: the same join + bucket-ascending regroup, K ordered left
+    # folds (ascending bucket == the dense chain's add order; absent
+    # terms are exact ±0.0 adds there) with the biases as literals
+    terms = F.array(*[F.col(wc) * F.col("x") for wc in wcols])
+    ft = (
+        sparse_tok(score, with_id=True)
+        .join(weight_table(w), "bucket")
+        .select("__k", F.struct("bucket", "x", terms.alias("t")).alias("__s"))
+        .groupBy("__k")
+        .agg(F.array_sort(F.collect_list("__s")).alias("ft"))
     )
-    return w, scored
-
+    return w, ft.select(
+        F.col("__k").alias(id_col),
+        *[
+            F.aggregate(
+                "ft", F.lit(h[0]), lambda acc, s: acc + s["t"][i]
+            ).alias(f"s_{i}")
+            for i, h in enumerate(w)
+        ],
+    )
 
 
 # ----------------------------------------------- substring decontamination

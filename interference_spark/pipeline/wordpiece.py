@@ -199,7 +199,7 @@ def wordpiece_train(
     ``localCheckpoint``-materialized so plan depth stays O(1) (persist
     would keep the full fold lineage — the driver goes quadratic
     re-rendering plans; measured in ``bpe_train``'s in-loop comment)."""
-    from . import iterative_stage_conf
+    from . import iterative_stage_conf, register_cache
     from .text import _qstr
 
     spark = docs.sparkSession
@@ -208,7 +208,9 @@ def wordpiece_train(
         # no eager count: the first round's fused-counts job populates
         # the persisted word table as a side effect of scanning it, so a
         # separate materialization job would be pure scheduler floor.
-        cur = wordpiece_word_table(docs, text_col).persist()
+        # Ledgered: training that stops before its first merge returns
+        # this very table, so only release_caches() can free it.
+        cur = register_cache(wordpiece_word_table(docs, text_col))
         for rank in range(1, n_merges + 1):
             # ONE pass over the word table computes symbol and pair counts
             # together (r12; before: the symbol-count subtree was evaluated

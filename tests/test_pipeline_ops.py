@@ -2585,13 +2585,19 @@ def test_hash_kernel_classifier_matches_replica(spark):
 
 
 def test_hash_kernel_sparse_bit_identical_to_dense(spark):
-    """The sparse (explode → groupBy-bucket) physical plan is the SAME
-    function as the dense d-column plan, to the last bit: identical
-    weights, identical scores, identical keep flags — because the
-    ordered fold adds the nonzero w·x terms in the dense chain's
-    ascending-bucket order and the skipped terms are exact IEEE ±0.0
-    adds.  Also: auto dispatch, impl validation, empty-train error."""
-    from interference_spark.pipeline.text import hash_kernel_classifier
+    """The sparse (explode → groupBy-bucket) core is the SAME function as
+    the dense d-column core, to the last bit: identical weights,
+    identical scores, identical keep flags — because the ordered fold
+    adds the nonzero w·x terms in the dense chain's ascending-bucket
+    order and the skipped terms are exact IEEE ±0.0 adds.  Also: the
+    public classifier dispatches on d, a head's fit does not depend on
+    the other heads trained beside it, and an empty slice raises."""
+    from interference_spark.pipeline.text import (
+        _hk_dense,
+        _hk_keep,
+        _hk_sparse,
+        hash_kernel_classifier,
+    )
 
     rows = []
     vocab = ["the", "cat", "zor", "blk", "sat", "qrt", "mat", "vnm"]
@@ -2603,43 +2609,47 @@ def test_hash_kernel_sparse_bit_identical_to_dense(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     train = df.filter("doc_id < 18")
 
+    def keep(scored):
+        return {
+            r.doc_id: (r.qscore, r.keep)
+            for r in _hk_keep(scored, "doc_id", 0.5).collect()
+        }
+
     for d, iters in ((4, 3), (16, 2), (1, 1)):
-        wd, sd = hash_kernel_classifier(
-            train, df, d=d, iters=iters, impl="dense"
-        )
-        ws, ss = hash_kernel_classifier(
-            train, df, d=d, iters=iters, impl="sparse"
-        )
+        wd, sd = _hk_dense(train, df, ["en"], d=d, iters=iters)
+        ws, ss = _hk_sparse(train, df, ["en"], d=d, iters=iters)
         assert wd == ws, (d, iters)  # exact float equality, all d+1
-        got_d = {r.doc_id: (r.qscore, r.keep) for r in sd.collect()}
-        got_s = {r.doc_id: (r.qscore, r.keep) for r in ss.collect()}
+        got_d, got_s = keep(sd), keep(ss)
         assert got_d == got_s, (d, iters)
         assert 24 not in got_s and len(got_s) == 24
+        # one-vs-rest heads train independently: head 0 of a 2-head fit
+        # is the 1-head fit, on both plans
+        w2d, _ = _hk_dense(train, df, ["en", "xx"], d=d, iters=iters)
+        w2s, _ = _hk_sparse(train, df, ["en", "xx"], d=d, iters=iters)
+        assert w2d[0] == w2s[0] == wd[0], (d, iters)
 
-    # auto picks dense at small d, sparse above the cutover — and both
-    # dispatch targets remain the same numbers
-    w_auto, _ = hash_kernel_classifier(train, df, d=4, iters=2, impl="auto")
-    w_dense, _ = hash_kernel_classifier(train, df, d=4, iters=2, impl="dense")
-    assert w_auto == w_dense
-    w_auto_big, _ = hash_kernel_classifier(train, df, d=128, iters=1)
-    w_sparse_big, _ = hash_kernel_classifier(
-        train, df, d=128, iters=1, impl="sparse"
-    )
-    assert w_auto_big == w_sparse_big
+    # the public classifier takes the dense core at small d, the sparse
+    # core above the cutover
+    w_small, _ = hash_kernel_classifier(train, df, d=4, iters=2)
+    assert [w_small] == _hk_dense(train, df, ["en"], d=4, iters=2)[0]
+    w_big, _ = hash_kernel_classifier(train, df, d=128, iters=1)
+    assert [w_big] == _hk_sparse(train, df, ["en"], d=128, iters=1)[0]
 
-    with pytest.raises(ValueError, match="impl"):
-        hash_kernel_classifier(train, df, d=4, impl="gpu")
-    with pytest.raises(ValueError, match="empty training"):
-        hash_kernel_classifier(
-            df.filter("doc_id < 0"), df, d=4, iters=1, impl="sparse"
-        )
+    for core in (_hk_dense, _hk_sparse):
+        with pytest.raises(ValueError, match="empty training"):
+            core(df.filter("doc_id < 0"), df, ["en"], d=4, iters=1)
 
 
 def test_multiclass_sparse_bit_identical_to_dense(spark):
-    """The K-head sparse plan (r9) is the SAME function as the dense
-    multiclass plan to the last bit — weights, predictions, best scores
-    — including at d > 64 via auto dispatch (where dense refuses)."""
-    from interference_spark.pipeline.text import hash_kernel_multiclass
+    """The K-head sparse core is the SAME function as the dense core to
+    the last bit — weights, predictions, best scores — and the public
+    multiclass classifier carries d > 64 on the sparse core."""
+    from interference_spark.pipeline.text import (
+        _hk_argmax,
+        _hk_dense,
+        _hk_sparse,
+        hash_kernel_multiclass,
+    )
 
     rows = []
     vocab = ["the", "cat", "zor", "blk", "sat", "qrt", "mat", "vnm"]
@@ -2650,35 +2660,25 @@ def test_multiclass_sparse_bit_identical_to_dense(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     train = df.filter("doc_id < 21")
 
-    for d, iters in ((4, 2), (8, 3)):
-        wd, pd_ = hash_kernel_multiclass(
-            train, df, classes=langs, d=d, iters=iters, impl="dense"
-        )
-        ws, ps = hash_kernel_multiclass(
-            train, df, classes=langs, d=d, iters=iters, impl="sparse"
-        )
-        assert wd == ws, (d, iters)
-        got_d = {r.doc_id: (r.lang_pred, r.best_score) for r in pd_.collect()}
-        got_s = {r.doc_id: (r.lang_pred, r.best_score) for r in ps.collect()}
-        assert got_d == got_s, (d, iters)
+    def preds(scored):
+        return {
+            r.doc_id: (r.lang_pred, r.best_score)
+            for r in _hk_argmax(scored, langs, "doc_id").collect()
+        }
 
-    # auto: dense refuses d > 64, sparse carries it
-    w_auto, _ = hash_kernel_multiclass(
+    for d, iters in ((4, 2), (8, 3)):
+        wd, sd = _hk_dense(train, df, langs, d=d, iters=iters)
+        ws, ss = _hk_sparse(train, df, langs, d=d, iters=iters)
+        assert wd == ws, (d, iters)
+        assert preds(sd) == preds(ss), (d, iters)
+
+    w_big, _ = hash_kernel_multiclass(
         train, df, classes=langs, d=128, iters=1
     )
-    w_sparse, _ = hash_kernel_multiclass(
-        train, df, classes=langs, d=128, iters=1, impl="sparse"
-    )
-    assert w_auto == w_sparse
-    with pytest.raises(ValueError, match="dense plan needs d <= 64"):
-        hash_kernel_multiclass(
-            train, df, classes=langs, d=128, iters=1, impl="dense"
-        )
+    w_sparse, _ = _hk_sparse(train, df, langs, d=128, iters=1)
+    assert list(w_big.values()) == w_sparse
     with pytest.raises(ValueError, match="empty training"):
-        hash_kernel_multiclass(
-            df.filter("doc_id < 0"), df, classes=langs, d=4,
-            iters=1, impl="sparse",
-        )
+        _hk_sparse(df.filter("doc_id < 0"), df, langs, d=4, iters=1)
 
 
 def test_exact_substring_pairs_runs_and_filter_parity(spark):
@@ -3726,16 +3726,16 @@ def test_multiclass_rejects_single_class_upfront(spark):
         [(0, "a b", "en"), (1, "b a", "en")],
         "doc_id long, text string, lang string",
     )
-    for impl in ("dense", "sparse"):
+    for d in (4, 128):  # the dense and the sparse core
         with pytest.raises(ValueError, match=">= 2 unique labels"):
-            hash_kernel_multiclass(df, df, classes=["en"], d=4, impl=impl)
+            hash_kernel_multiclass(df, df, classes=["en"], d=d)
 
 
 def test_hash_kernel_train_filter_bit_identical_to_classic(spark):
-    """r11 shared-featurize mode: train_filter must reproduce the classic
-    (train df, score df) fit and scores EXACTLY — the slice is the same
-    rows, featurized by the same expressions, so weights and scores are
-    the identical doubles. Also pins the argument-validation errors."""
+    """train_filter mode must reproduce the classic (train df, score df)
+    fit and scores EXACTLY on both cores — the slice is the same rows,
+    featurized by the same expressions, so weights and scores are the
+    identical doubles. Also pins the argument-validation errors."""
     import pytest as _pytest
 
     from interference_spark.pipeline.text import (
@@ -3744,10 +3744,13 @@ def test_hash_kernel_train_filter_bit_identical_to_classic(spark):
     )
 
     rows = [
-        (i, f"tok{i % 7} tok{i % 3} tok{i % 5} filler", "en" if i % 2 else "de")
+        (i, f"tok{i % 7} tok{i % 3} tok{i % 5} filler", "en" if i % 2 else "de",
+         i % 3)
         for i in range(60)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, split int"
+    )
 
     w1, s1 = hash_kernel_classifier(
         df.filter("doc_id % 2 = 0"), df, d=4, iters=2
@@ -3772,7 +3775,87 @@ def test_hash_kernel_train_filter_bit_identical_to_classic(spark):
         hash_kernel_classifier(df, df, d=4, iters=1, train_filter="1=1")
     with _pytest.raises(ValueError, match="need train or train_filter"):
         hash_kernel_classifier(None, df, d=4, iters=1)
-    with _pytest.raises(ValueError, match="dense-plan"):
-        hash_kernel_classifier(
-            None, df, d=4, iters=1, impl="sparse", train_filter="1=1"
+
+    # both cores (d=4 dense, d=128 sparse) take a filter on any score
+    # column, not only the id, and fit the same rows as the classic call
+    for d, f in ((128, "doc_id % 2 = 0"), (4, "split = 0"), (128, "split = 0")):
+        w3, s3 = hash_kernel_classifier(df.filter(f), df, d=d, iters=2)
+        w4, s4 = hash_kernel_classifier(None, df, d=d, iters=2, train_filter=f)
+        assert w3 == w4, (d, f)
+        assert sorted(map(tuple, s3.collect())) == sorted(
+            map(tuple, s4.collect())
+        ), (d, f)
+
+
+def test_lit_arrays_match_lit_loop_on_edge_values(spark):
+    """The one-parse literal arrays collect to the same doubles as the
+    per-element F.lit construction, bit for bit, on the values SQL has
+    no plain literal for (NaN, ±inf) and on -0.0 and a subnormal; the
+    int array keeps F.lit's element type at INT_MIN."""
+    import struct
+
+    from interference_spark.pipeline import (
+        lit_double_array,
+        lit_double_matrix,
+        lit_int_array,
+    )
+
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324, 1.5]
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    def lit_loop(xs):
+        return F.array(*[F.lit(x) for x in xs])
+
+    row = spark.range(1).select(
+        lit_double_array(vals).alias("a"),
+        lit_loop(vals).alias("b"),
+        lit_double_matrix([vals, vals[::-1]]).alias("m"),
+        F.array(lit_loop(vals), lit_loop(vals[::-1])).alias("n"),
+    ).first()
+    assert bits(row.a) == bits(row.b) == bits(vals)
+    assert [bits(r) for r in row.m] == [bits(r) for r in row.n]
+
+    for ints, want in (
+        ([-2147483648], "int"),
+        ([-2147483648, 2147483648], "bigint"),
+    ):
+        df = spark.range(1).select(
+            lit_int_array(ints).alias("a"), lit_loop(ints).alias("b")
         )
+        assert df.schema["a"].dataType.elementType.simpleString() == want
+        assert df.schema["b"].dataType.elementType.simpleString() == want
+        assert df.first().a == ints
+
+
+def test_word_table_released_when_training_stops_before_first_merge(spark):
+    """Zero merges, or a first pair count that comes back empty, return
+    the persisted initial word table itself; release_caches() must free
+    it.  Delta-based like the ledger plan lint: earlier tests in the
+    session may leave localCheckpoint blocks, so the assertion is that
+    no RDD these runs persisted survives the release."""
+    from interference_spark.pipeline import release_caches
+    from interference_spark.pipeline.bpe import bpe_train
+    from interference_spark.pipeline.wordpiece import wordpiece_train
+
+    release_caches()
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keys())
+
+    pre = persisted()
+    df = spark.createDataFrame(
+        [(1, "ab ab c"), (2, "abc")], "doc_id long, text string"
+    )
+    single = spark.createDataFrame([(1, "a b a")], "doc_id long, text string")
+    for _merges, words in (
+        bpe_train(df, n_merges=0),
+        wordpiece_train(df, n_merges=0),
+        bpe_train(single, n_merges=3),  # no pair: stops on the first count
+    ):
+        words.count()
+    assert persisted() - pre, "the runs should have cached their word tables"
+    release_caches(blocking=True)
+    assert persisted() - pre == set()

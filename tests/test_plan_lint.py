@@ -335,16 +335,32 @@ def test_hash_kernel_classifier_plans(spark):
     assert "rangepartitioning" not in plan, plan[:2000]
 
 
-def test_hash_kernel_sparse_plans(spark):
-    """Sparse classifier scoring: featurization is codegen HOFs plus two
-    combiner groupBys (no Python anywhere), the weight vector attaches
-    as a 1-row broadcast (BroadcastNestedLoopJoin — the sanctioned
-    scalar cross-join shape), and nothing plans a real cartesian."""
-    df = inventory.QUERIES["quality_hash_classifier_sparse"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def _assert_sparse_hash_kernel_plan(plan: str) -> None:
     assert "Python" not in plan and "Arrow" not in plan, plan[:2000]
     assert "CartesianProduct" not in plan, plan[:2000]
-    assert "BroadcastNestedLoopJoin" in plan, plan[:2000]
+    assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
+    assert re.search(r"BroadcastHashJoin \[bucket#\d+\]", plan), plan[:2000]
+
+
+def test_hash_kernel_sparse_plans(spark):
+    """Sparse classifier scoring: featurization is codegen HOFs plus a
+    combiner groupBy (no Python anywhere), the weights attach as a
+    broadcast HASH join on the bucket key (the d-row weight table — not
+    a cross-joined array row), and nothing plans a real cartesian."""
+    df = inventory.QUERIES["quality_hash_classifier_sparse"](spark, SF_DIR)
+    _assert_sparse_hash_kernel_plan(
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+
+
+def test_lang_id_multiclass_sparse_plans(spark):
+    """The K-head sparse langid plan has the same shape as the one-head
+    classifier's: broadcast hash join on the bucket key, no Python, no
+    cartesian."""
+    df = inventory.QUERIES["lang_id_multiclass_sparse"](spark, SF_DIR)
+    _assert_sparse_hash_kernel_plan(
+        df._jdf.queryExecution().executedPlan().toString()
+    )
 
 
 def test_exact_substring_pairs_plan(spark):

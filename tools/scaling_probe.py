@@ -1033,7 +1033,7 @@ def probe_langid_mc_sparse(spark, n: int, ds: list[int]) -> dict:
     d — per-step cost must stay ~flat because featurization, folds, and
     the groupBy(cls, bucket) moments never materialize d, only the
     weight arrays do."""
-    from interference_spark.pipeline.text import hash_kernel_multiclass
+    from interference_spark.pipeline.text import _hk_argmax, _hk_sparse
 
     classes = ["de", "en", "es", "fr", "zh"]
     docs = _rich_docs(spark, n).withColumn(
@@ -1047,10 +1047,12 @@ def probe_langid_mc_sparse(spark, n: int, ds: list[int]) -> dict:
     out: dict = {}
     for d in ds:
         t0 = time.perf_counter()
-        _w, pred = hash_kernel_multiclass(
-            docs.filter(F.col("doc_id") % 2 == 0), docs,
-            classes=classes, d=d, iters=3, impl="sparse",
+        # the sparse core directly: the classifier takes dense at d <= 64
+        _w, scored = _hk_sparse(
+            docs.filter(F.col("doc_id") % 2 == 0), docs, classes,
+            d=d, iters=3,
         )
+        pred = _hk_argmax(scored, classes, "doc_id")
         pred.write.format("noop").mode("overwrite").save()
         out[d] = {"sec": round(time.perf_counter() - t0, 2)}
         print(f"langid_mc_sparse d={d}: {out[d]}", flush=True)
