@@ -87,13 +87,9 @@ def _read_parts(engine, td, basenames: list[str]) -> DataFrame:
     df = engine.spark.read.schema(schema).parquet(
         *[os.path.join(td.path, b) for b in basenames]
     )
-    tombs = store._tombstone_parts(td)
-    if tombs and td.id_col:
-        dead = (
-            engine.spark.read.parquet(*tombs).select(td.id_col).distinct()
-        )
-        df = df.join(dead, td.id_col, "left_anti")
-    return df
+    return store.without_tombstones(
+        engine.spark, td, df, store._tombstone_parts(td)
+    )
 
 
 def _joined(engine, meta: dict, left_df: DataFrame, right_df: DataFrame) -> DataFrame:

@@ -288,16 +288,12 @@ def _refresh(engine, name: str, meta: dict, initial: bool) -> dict:
     delta = engine.spark.read.schema(td.require_schema()).parquet(
         *[os.path.join(td.path, p) for p in new]
     )
-    if tombs_now and td.id_col:
-        # tombstones unchanged since last refresh, but a delta row could
-        # carry an already-dead id (re-append after delete): filter like
-        # read_managed does, over the delta only
-        dead = (
-            engine.spark.read.parquet(*store._tombstone_parts(td))
-            .select(td.id_col)
-            .distinct()
-        )
-        delta = delta.join(dead, td.id_col, "left_anti")
+    # tombstones unchanged since last refresh, but a delta row could carry
+    # an already-dead id (re-append after delete): filter like read_managed
+    # does, over the delta only
+    delta = store.without_tombstones(
+        engine.spark, td, delta, store._tombstone_parts(td)
+    )
     merged = (
         read(engine, name)
         .unionByName(_partial(delta, keys, aggs))

@@ -14,15 +14,25 @@ this module keeps is the *operation surface*:
                          Structured-Streaming file source over the table
                          directory sees the snapshot and then every new file.
 * ``upsert``           — persist-by-@Id (reference
-                         ``persistent/Table.java:1187-1409``): anti-join +
-                         union + atomic swap (the Delta-less MERGE).
+                         ``persistent/Table.java:1187-1409``): one MERGE
+                         plan.  Parts whose footer id range can hold a batch
+                         id are rewritten minus the batch ids, together with
+                         the batch, in one write; every other part stays
+                         byte-identical.  A batch that no part can hold (an
+                         insert-only commit of new ids) is published as a
+                         new part by rename, like an append, so streams see
+                         exactly its rows.  An update commit replaces the
+                         parts it rewrites, and a stream over the table
+                         delivers every row of those new parts again.
 * ``add_tombstones`` / ``maybe_compact`` — THE delete path (transactional
                          delete / CEP ``purge``, routed via
                          ``session.py`` commit): deletes write id
                          tombstone files (O(deleted ids), never a table
                          rewrite); ``read_managed`` anti-joins them out,
                          and compaction folds them into data files only
-                         past a file-count/bytes threshold.
+                         past a file-count/bytes threshold.  An upsert that
+                         re-inserts a tombstoned id rewrites only the
+                         tombstone files holding it.
 * ``apply_threshold``  — ``@Threshold(n)`` ring-buffer retention
                          (``core/Threshold.java``): keep the newest n rows
                          by id.
@@ -38,13 +48,18 @@ instead.
 
 from __future__ import annotations
 
+import bisect
 import glob
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import TableDef
 from ..errors import InvalidParameter
@@ -80,11 +95,26 @@ def read_managed(spark: SparkSession, td: TableDef) -> DataFrame:
     if not files:
         return spark.createDataFrame([], schema)
     df = spark.read.schema(schema).parquet(*files)
-    tombs = _tombstone_parts(td)
-    if tombs and td.id_col:
-        dead = spark.read.parquet(*tombs).select(td.id_col).distinct()
-        df = df.join(dead, td.id_col, "left_anti")
-    return df
+    return without_tombstones(spark, td, df, _tombstone_parts(td))
+
+
+def _id_schema(td: TableDef) -> T.StructType:
+    return T.StructType(
+        [f for f in td.require_schema().fields if f.name == td.id_col]
+    )
+
+
+def without_tombstones(
+    spark: SparkSession, td: TableDef, df: DataFrame, tombs: list[str]
+) -> DataFrame:
+    """``df`` minus the ids listed in the tombstone files ``tombs``.  The
+    files are read with the catalog's id-only schema (no schema-inference
+    job) and anti-joined as they are: an anti-join's build side may repeat
+    keys, so a ``distinct`` would only add a shuffle."""
+    if not tombs or td.id_col is None:
+        return df
+    dead = spark.read.schema(_id_schema(td)).parquet(*tombs)
+    return df.join(dead, td.id_col, "left_anti")
 
 
 def add_tombstones(spark: SparkSession, td: TableDef, ids_df: DataFrame) -> None:
@@ -98,8 +128,6 @@ def add_tombstones(spark: SparkSession, td: TableDef, ids_df: DataFrame) -> None
         os.rename(
             f, os.path.join(_tombstone_dir(td), f"ts-{uuid.uuid4().hex}.parquet")
         )
-    import shutil
-
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -112,11 +140,11 @@ def add_tombstone_ids(td: TableDef, ids: list) -> None:
         raise InvalidParameter(f"table {td.name} has no @Id column")
     if not ids:
         return
-    id_field = next(f for f in td.require_schema().fields if f.name == td.id_col)
-    table = pa.Table.from_pydict(
-        {td.id_col: list(ids)},
-        schema=pa.schema([pa.field(td.id_col, _to_arrow(id_field.dataType))]),
-    )
+    id_type = _to_arrow(_id_schema(td).fields[0].dataType)
+    _write_tombstone(td, pa.table({td.id_col: pa.array(list(ids), id_type)}))
+
+
+def _write_tombstone(td: TableDef, table: pa.Table) -> None:
     os.makedirs(_tombstone_dir(td), exist_ok=True)
     path = os.path.join(_tombstone_dir(td), f"ts-{uuid.uuid4().hex}.parquet")
     tmp = os.path.join(_tombstone_dir(td), "." + os.path.basename(path) + ".tmp")
@@ -155,7 +183,7 @@ def compact(spark: SparkSession, td: TableDef) -> None:
     """Physically apply tombstones and merge small part files."""
     if not _tombstone_parts(td):
         return
-    overwrite(td, read_managed(spark, td).coalesce(_target_parts(td)))
+    overwrite(td, read_managed(spark, td).coalesce(_n_parts(_table_bytes(td))))
 
 
 def _new_part(td: TableDef) -> str:
@@ -169,19 +197,6 @@ def _arrow_table(td: TableDef, rows: list[dict]) -> pa.Table:
     )
     cols = {f.name: [r.get(f.name) for r in rows] for f in schema.fields}
     return pa.Table.from_pydict(cols, schema=arrow_schema)
-
-
-def stage_rows(spark: SparkSession, td: TableDef, rows: list[dict]) -> tuple[DataFrame, str]:
-    """Driver-side parquet staging of a small row batch, returned as a
-    parquet-backed DataFrame plus the staging path (caller removes it after
-    its jobs finish). This replaces ``spark.createDataFrame(rows)`` on the
-    MERGE path: a parallelize-based DataFrame drags a Python-runner stage
-    into the merge plan, which under the output-sizing ``coalesce`` runs
-    single-worker-serialized (measured: 4.5 s vs 0.9 s for the same 10k-row
-    upsert). A parquet scan keeps the whole merge JVM-side."""
-    path = td.path + f".stage-{uuid.uuid4().hex}.parquet"
-    pq.write_table(_arrow_table(td, rows), path, compression="zstd")
-    return spark.read.schema(td.require_schema()).parquet(path), path
 
 
 def append_rows(td: TableDef, rows: list[dict]) -> str:
@@ -209,8 +224,6 @@ def append_df(td: TableDef, df: DataFrame) -> None:
     df.write.mode("overwrite").parquet(tmp)
     for f in glob.glob(os.path.join(tmp, "*.parquet")):
         os.rename(f, _new_part(td))
-    import shutil
-
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -218,16 +231,9 @@ def overwrite(td: TableDef, df: DataFrame) -> None:
     """Replace table contents: write new parts, then remove old parts and
     any tombstones (content is physical again)."""
     old = _parts(td)
-    tmp = td.path + f".tmp-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(tmp)
-    for f in glob.glob(os.path.join(tmp, "*.parquet")):
-        os.rename(f, _new_part(td))
+    append_df(td, df)
     # snapshot-pinned files archive instead of vanishing (time travel)
-    _retire_files(td, old)
-    _retire_files(td, _tombstone_parts(td))
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
+    _retire_files(td, old + _tombstone_parts(td))
 
 
 def vacuum(td: TableDef) -> int:
@@ -239,14 +245,9 @@ def vacuum(td: TableDef) -> int:
     than the write itself, so only call vacuum when no writer is active
     (same single-writer rule as every mutation here).  Returns the number
     of artifacts removed."""
-    import shutil
-
     n = 0
     for d in glob.glob(td.path + ".tmp-*"):
         shutil.rmtree(d, ignore_errors=True)
-        n += 1
-    for f in glob.glob(td.path + ".stage-*.parquet"):
-        os.remove(f)
         n += 1
     # advisory locks (Session.lock) left by a crashed writer — safe under
     # the same no-active-writer rule as the rest of vacuum
@@ -288,133 +289,223 @@ def cluster_table(
     overwrite(td, out)
 
 
-# below this table size a one-pass full-rewrite MERGE beats the targeted
-# plan's three jobs (locate, rewrite-affected, append); above it, rewriting
-# the whole table per upsert is the thing that cannot scale
-FULL_REWRITE_MAX_BYTES = 512 << 20
-
-
 def _table_bytes(td: TableDef) -> int:
     return sum(os.path.getsize(f) for f in _parts(td))
 
 
 # rewrite paths size their output to ~128 MB parts: without this, every
-# full-rewrite MERGE/compact inherits the plan's task count (32+ on
-# local[32]) and the table's file count GROWS per upsert — the second
-# commit reads 42 tiny parts, the tenth reads hundreds (measured: commit
-# latency 1.5 s → 4.2 s between two identical upserts purely from file
-# growth). coalesce (no shuffle) keeps compute parallel at scale: a 10 GB
-# table still rewrites through 80 tasks, a 1 MB one through 1.
+# MERGE/compact inherits the plan's task count (32+ on local[32]) and the
+# table's file count GROWS per upsert — the second commit reads 42 tiny
+# parts, the tenth reads hundreds (measured: commit latency 1.5 s → 4.2 s
+# between two identical upserts purely from file growth). coalesce (no
+# shuffle) keeps compute parallel at scale: a 10 GB table still rewrites
+# through 80 tasks, a 1 MB one through 1.
 TARGET_PART_BYTES = 128 << 20
 
 
-def _target_parts(td: TableDef, extra_bytes: int = 0) -> int:
-    return max(1, -(-(_table_bytes(td) + extra_bytes) // TARGET_PART_BYTES))
+def _n_parts(nbytes: int) -> int:
+    return max(1, -(-nbytes // TARGET_PART_BYTES))
 
 
 def upsert(
-    spark: SparkSession,
-    td: TableDef,
-    new_df: DataFrame,
-    full_rewrite_max_bytes: int = FULL_REWRITE_MAX_BYTES,
+    spark: SparkSession, td: TableDef, batch: list[dict] | DataFrame
 ) -> None:
     """MERGE-by-id: update matching ids, insert the rest
-    (reference persist(): ``persistent/Session.java:436-457``).
+    (reference persist(): ``persistent/Session.java:436-457``).  ``batch``
+    is driver rows (a commit's persists, one row per id) or a DataFrame
+    (``persist_df``).
 
-    Small tables: one-pass full-rewrite merge. Large tables: targeted-
-    rewrite merge (the Delta MERGE file-pruning pattern) — an id-column
-    scan locates the part files that actually contain matched ids; ONLY
-    those parts are rewritten (minus matched rows) and the new rows land
-    as a fresh part. Write amplification is O(affected parts + new), not
-    O(table) — with id-clustered inserts (ring tables, incremental ids) an
-    upsert touches one or two parts of a 100 TB table.
-    """
+    One plan, the Delta MERGE file-pruning pattern.  The batch is staged
+    as parquet, then the parts that may hold a batch id are found: for
+    driver rows from each part's footer id min/max (no Spark job), for a
+    DataFrame by one located scan of the ids.  ONLY those parts are
+    rewritten, minus the batch ids and together with the batch, in one
+    write; when no part may hold one (an insert of new ids) the staged
+    batch becomes a new part by rename, with no Spark job.  Write
+    amplification is O(affected parts + batch), not O(table) — with
+    id-clustered inserts (ring tables, incremental ids) an upsert touches
+    one or two parts of a 100 TB table.
+
+    Tombstones stay where they are, except that the tombstone files holding
+    a re-inserted id are rewritten without it, so they cannot hide the new
+    row.  New files land before the replaced ones are retired."""
     if td.id_col is None:
         raise InvalidParameter(f"table {td.name} has no @Id column; use append")
-    cols = [f.name for f in td.require_schema().fields]
-    files = _parts(td)
-    if not files:
-        append_df(td, new_df.select(*cols))
-        return
-    # scoped AQE conf (r12): every shuffle inside a MERGE is BATCH-sized
-    # by construction (new-id distinct, affected-part distinct) while the
-    # heavy bytes move through coalesce+write, so size-derived partition
-    # coalescing is safe at any scale and removes the 32-task floor each
-    # of the merge's small stages pays per commit (same rationale as
-    # pipeline.iterative_stage_conf; measured 2.66 -> 1.47 s on the
-    # 10k-upsert bench with these settings session-wide).
-    from ..pipeline import set_iterative_stage_conf, restore_stage_conf
-
-    _conf = set_iterative_stage_conf(spark)
+    stage = td.path + f".tmp-{uuid.uuid4().hex}"
     try:
-        _upsert_body(spark, td, new_df, cols, files, full_rewrite_max_bytes)
+        if isinstance(batch, DataFrame):
+            staged = _stage_df(td, batch, stage)
+            affected, tombs, reinserted = _locate(spark, td, staged)
+        else:
+            staged, reinserted = _stage_rows(td, batch, stage)
+            ids = _sorted_or_none(reinserted.to_pylist())
+            affected = [f for f in _parts(td) if _may_hold(td, f, ids)]
+            tombs = [f for f in _tombstone_parts(td) if _may_hold(td, f, ids)]
+        if affected:
+            _merge_write(spark, td, affected, staged)
+        else:
+            for f in staged:
+                os.rename(f, _new_part(td))
+        # snapshot-pinned files archive instead of vanishing (time travel)
+        _retire_files(td, affected + _drop_tombstoned(td, tombs, reinserted))
     finally:
-        restore_stage_conf(spark, _conf)
+        shutil.rmtree(stage, ignore_errors=True)
 
 
-def _upsert_body(
-    spark: SparkSession,
-    td: TableDef,
-    new_df: DataFrame,
-    cols: list[str],
-    files: list[str],
-    full_rewrite_max_bytes: int,
-) -> None:
-    if _tombstone_parts(td):
-        # tombstoned ids may be re-inserted by this upsert; make content
-        # physical first so the old tombstones can't hide the new rows
-        compact(spark, td)
-        files = _parts(td)
-    from pyspark.sql import functions as F
+def _stage_rows(
+    td: TableDef, rows: list[dict], stage: str
+) -> tuple[list[str], pa.Array]:
+    """Stage a row batch as one parquet file, written on the driver by
+    pyarrow; returns the file and the batch's ids.  The merge then scans
+    parquet instead of ``spark.createDataFrame(rows)``, whose Python-runner
+    stage runs single-worker-serialized under the output-sizing
+    ``coalesce`` (measured: 4.5 s vs 0.9 s for the same 10k-row upsert)."""
+    table = _arrow_table(td, rows)
+    os.makedirs(stage)
+    path = os.path.join(stage, "batch.parquet")
+    pq.write_table(table, path, compression="zstd")
+    return [path], table.column(td.id_col).combine_chunks()
 
-    new_ids = new_df.select(td.id_col).distinct()
-    schema = td.require_schema()
-    if len(files) <= 2 or _table_bytes(td) <= full_rewrite_max_bytes:
-        # locating affected parts can't save enough — one-pass merge
-        cur = read_managed(spark, td)
-        merged = cur.join(
-            F.broadcast(new_ids), td.id_col, "left_anti"
-        ).unionByName(new_df.select(*cols))
-        overwrite(td, merged.coalesce(_target_parts(td)))
-        return
-    located = (
-        spark.read.schema(schema)
+
+def _stage_df(td: TableDef, df: DataFrame, stage: str) -> list[str]:
+    """Stage a DataFrame batch with one Spark write, cast to the table's
+    types, so the merge reads it back instead of re-running its plan."""
+    df.select(
+        *[F.col(f.name).cast(f.dataType) for f in td.require_schema().fields]
+    ).write.parquet(stage)
+    return sorted(glob.glob(os.path.join(stage, "*.parquet")))
+
+
+def _sorted_or_none(values: list) -> list | None:
+    try:
+        return sorted(values)
+    except TypeError:
+        return None
+
+
+def _may_hold(td: TableDef, path: str, ids: list | None) -> bool:
+    """Whether the parquet file ``path`` may hold one of the sorted ``ids``,
+    judged from the id column's min/max in each row group's footer — no
+    Spark job, no data read.  Missing statistics, floating-point ids (NaN
+    is left out of min/max) and ids that do not compare with the statistics
+    (or with each other: ``ids=None``) count as "may hold".  pyarrow and
+    Spark's parquet writer put exact min/max in the footer (only the column
+    index, not read here, truncates them)."""
+    if ids is None:
+        return True
+    md = pq.read_metadata(path)
+    col = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).path == td.id_col),
+        None,
+    )
+    if col is None:
+        return True
+    try:
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(col).statistics
+            if (
+                st is None
+                or not st.has_min_max
+                or st.physical_type in ("FLOAT", "DOUBLE")
+            ):
+                return True
+            i = bisect.bisect_left(ids, st.min)
+            if i < len(ids) and ids[i] <= st.max:
+                return True
+    except TypeError:
+        return True
+    return False
+
+
+def _locate(
+    spark: SparkSession, td: TableDef, staged: list[str]
+) -> tuple[list[str], list[str], pa.Array]:
+    """The located scan, for a batch whose ids are not on the driver: one
+    join of every part's and tombstone file's ids with the broadcast batch
+    ids.  Returns the parts holding a batch id, the tombstone files holding
+    one, and the ids those tombstone files hold."""
+    from urllib.parse import unquote, urlparse
+
+    from ..pipeline import iterative_stage_conf
+
+    id_schema = _id_schema(td)
+    parts, tombs = _parts(td), _tombstone_parts(td)
+    no_ids = pa.array([], _to_arrow(id_schema.fields[0].dataType))
+    if not staged or not (parts or tombs):
+        return [], [], no_ids
+    scans = [
+        spark.read.schema(id_schema)
         .parquet(*files)
-        .select(F.col(td.id_col), F.input_file_name().alias("__f"))
-        .join(F.broadcast(new_ids), td.id_col)
-        .select("__f")
+        .select(
+            td.id_col,
+            F.input_file_name().alias("__f"),
+            F.lit(is_tomb).alias("__t"),
+        )
+        for files, is_tomb in ((parts, False), (tombs, True))
+        if files
+    ]
+    scan = scans[0] if len(scans) == 1 else scans[0].unionByName(scans[1])
+    new_ids = spark.read.schema(id_schema).parquet(*staged).distinct()
+    hits = (
+        scan.join(F.broadcast(new_ids), td.id_col)
+        .select("__f", F.when(F.col("__t"), F.col(td.id_col)).alias("__id"))
         .distinct()
     )
+    # every shuffle here is batch-sized, so size-derived partition
+    # coalescing is safe at any scale and drops the small stages' task floor
+    with iterative_stage_conf(spark):
+        rows = hits.collect()
     # input_file_name() returns a URI (percent-encoded, file:// scheme) —
     # comparing it against raw filesystem paths silently matches NOTHING
     # for warehouses containing spaces/unicode, which would keep the old
-    # rows AND append the new ones (duplicate @Ids). Part names are
+    # rows AND append the new ones (duplicate @Ids). File names are
     # uuid-unique within the table, so compare decoded basenames.
-    from urllib.parse import unquote, urlparse
+    names = {os.path.basename(unquote(urlparse(r["__f"]).path)) for r in rows}
+    dead = [r["__id"] for r in rows if r["__id"] is not None]
+    return (
+        [f for f in parts if os.path.basename(f) in names],
+        [f for f in tombs if os.path.basename(f) in names],
+        pa.array(dead, no_ids.type),
+    )
 
-    located_names = {
-        os.path.basename(unquote(urlparse(r["__f"]).path))
-        for r in located.collect()
-    }
-    affected = {f for f in files if os.path.basename(f) in located_names}
-    if affected:
-        n_out = max(1, -(-sum(os.path.getsize(f) for f in affected) // TARGET_PART_BYTES))
-        survivors = (
-            spark.read.schema(schema)
-            .parquet(*sorted(affected))
-            .join(F.broadcast(new_ids), td.id_col, "left_anti")
-            .coalesce(n_out)
-        )
-        tmp = td.path + f".tmp-{uuid.uuid4().hex}"
-        survivors.write.mode("overwrite").parquet(tmp)
-        for f in glob.glob(os.path.join(tmp, "*.parquet")):
-            os.rename(f, _new_part(td))
-        # snapshot-pinned files archive instead of vanishing (time travel)
-        _retire_files(td, sorted(affected))
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
-    append_df(td, new_df.select(*cols))
+def _merge_write(
+    spark: SparkSession, td: TableDef, affected: list[str], staged: list[str]
+) -> None:
+    """The MERGE write: (affected parts minus the batch ids) ∪ batch, in one
+    write sized to ~TARGET_PART_BYTES parts.  The batch ids reach the
+    anti-join as a broadcast scan of the staged files, so the plan's size
+    does not grow with the batch (a literal per id would)."""
+    schema = td.require_schema()
+    batch = spark.read.schema(schema).parquet(*staged)
+    survivors = (
+        spark.read.schema(schema)
+        .parquet(*affected)
+        .join(F.broadcast(batch.select(td.id_col)), td.id_col, "left_anti")
+    )
+    n_out = _n_parts(sum(os.path.getsize(f) for f in affected + staged))
+    append_df(td, survivors.unionByName(batch).coalesce(n_out))
+
+
+def _drop_tombstoned(td: TableDef, tombs: list[str], ids: pa.Array) -> list[str]:
+    """Write each tombstone file in ``tombs`` that holds one of ``ids`` anew
+    without them (pyarrow on the driver: tombstone files hold ids only).
+    Returns the files so replaced, for the caller to retire."""
+    replaced = []
+    for f in tombs:
+        table = pq.ParquetFile(f).read()
+        col = table.column(td.id_col)
+        hit = pc.is_in(col, value_set=ids.cast(col.type))
+        if not pc.any(hit).as_py():
+            continue
+        kept = table.filter(pc.invert(hit))
+        if kept.num_rows:
+            _write_tombstone(td, kept)
+        replaced.append(f)
+    return replaced
 
 
 def apply_threshold(spark: SparkSession, td: TableDef) -> None:
@@ -663,16 +754,12 @@ def _retire_files(td: TableDef, files: list[str]) -> None:
     """Delete files a mutation replaced — unless a snapshot pins them, in
     which case they move to the archive (rename within one fs = atomic)."""
     pinned = _pinned_basenames(td)
-    archived = False
     for f in files:
         if os.path.basename(f) in pinned:
             os.makedirs(_archive_dir(td), exist_ok=True)
             os.rename(f, os.path.join(_archive_dir(td), os.path.basename(f)))
-            archived = True
         else:
             os.remove(f)
-    if archived:
-        pass  # archive is append-only here; drop_snapshot reclaims
 
 
 def drop_snapshot(td: TableDef, snap_id: int) -> None:
@@ -725,10 +812,7 @@ def read_snapshot(spark: SparkSession, td: TableDef, snap_id: int) -> DataFrame:
         return spark.createDataFrame([], schema)
     df = spark.read.schema(schema).parquet(*parts)
     tombs = [resolve(b, "_tombstones") for b in meta["tombstones"]]
-    if tombs and td.id_col:
-        dead = spark.read.parquet(*tombs).select(td.id_col).distinct()
-        df = df.join(dead, td.id_col, "left_anti")
-    return df
+    return without_tombstones(spark, td, df, tombs)
 
 
 def snapshot_changes(

@@ -128,15 +128,19 @@ class Session:
         """Point lookup by @Id (reference ``Session.find``,
         ``persistent/Session.java:326-342``). Catalyst pushes the equality
         to the parquet scan — the moral equivalent of the reference's id
-        index probe."""
+        index probe.  One ``collect`` job over every part (row groups whose
+        min/max exclude the id are skipped), not ``first()``: its take scans
+        one partition, then runs another job over more partitions whenever
+        those scanned so far did not hold the id."""
         td = self.engine.catalog.get(table)
         if td.id_col is None:
             raise InvalidParameter(f"table {td.name} has no @Id column")
-        return (
+        rows = (
             self.engine.read_table(td)
             .filter(F.col(td.id_col) == id_value)
-            .first()
+            .collect()
         )
+        return rows[0] if rows else None
 
     def delete(self, table: str, id_value: Any) -> None:
         """Stage a delete-by-id; applied at commit."""
@@ -255,16 +259,7 @@ class Session:
                     by_id = {}
                     for r in chunk:
                         by_id[r.get(td.id_col)] = r
-                    new_df, stage = store.stage_rows(
-                        self.spark, td, list(by_id.values())
-                    )
-                    try:
-                        store.upsert(self.spark, td, new_df)
-                    finally:
-                        try:
-                            os.remove(stage)
-                        except OSError:
-                            pass
+                    store.upsert(self.spark, td, list(by_id.values()))
                 i = j
             store.apply_threshold(self.spark, td)
         self._staged_ops.clear()

@@ -171,8 +171,8 @@ def test_with_sequential_id_is_dense(spark):
 
 
 def test_targeted_upsert_rewrites_only_affected_parts(spark, tmp_path):
-    """Force the targeted MERGE path: parts whose id range the upsert does
-    not touch must keep their original file, byte for byte."""
+    """A DataFrame upsert (located scan): parts whose id range the upsert
+    does not touch must keep their original file, byte for byte."""
     import os
 
     from interference_spark import Engine
@@ -185,7 +185,7 @@ def test_targeted_upsert_rewrites_only_affected_parts(spark, tmp_path):
     before = {f: os.path.getmtime(f) for f in store._parts(td)}
     assert len(before) == 3
     new = spark.createDataFrame([(250, -1), (300, -2)], "id long, val long")
-    store.upsert(spark, td, new, full_rewrite_max_bytes=0)  # force targeted
+    store.upsert(spark, td, new)
     after = set(store._parts(td))
     untouched = {f for f, m in before.items() if f in after}
     # the two parts not containing id 250 survive physically
@@ -290,6 +290,106 @@ def test_delete_leaves_other_parts_untouched(session, engine, fresh):
     session.commit()
     rows = {r["id"]: r["val"] for r in engine.table(fresh).collect()}
     assert rows[5] == 555 and 15 not in rows
+
+
+def test_commit_and_find_job_budget(spark, session, engine, fresh):
+    """Spark jobs per step, counted over the DAG scheduler's job ids: an
+    insert-only commit of ids above every part's id range runs none (footer
+    statistics rule the parts out; the staged batch becomes a part by
+    rename), an update commit at most two (the broadcast batch ids and the
+    one MERGE write), and a find on a table with tombstones at most two
+    (the tombstone broadcast and the lookup: no schema inference, no
+    distinct)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs(step):
+        first = int(sc.dagScheduler().nextJobId())
+        out = step()
+        return int(sc.dagScheduler().nextJobId()) - first, out
+
+    def commit(ids, val):
+        session.persist(fresh, [{"id": i, "val": val, "tag": "x"} for i in ids])
+        session.commit()
+
+    commit(range(100), 0)
+    session.delete(fresh, 7)
+    session.commit()
+    assert jobs(lambda: commit(range(100, 110), 1))[0] == 0
+    assert jobs(lambda: commit([3, 200], 2))[0] <= 2
+    n, row = jobs(lambda: session.find(fresh, 3))
+    assert n <= 2 and (row["id"], row["val"]) == (3, 2)
+    rows = {r["id"]: r["val"] for r in engine.table(fresh).collect()}
+    assert rows == {
+        **{i: 0 for i in range(100) if i not in (3, 7)},
+        **{i: 1 for i in range(100, 110)},
+        3: 2,
+        200: 2,
+    }
+
+
+def test_upsert_rewrites_only_the_tombstone_files_holding_its_ids(
+    spark, session, engine, fresh
+):
+    """Re-inserting deleted ids, from driver rows and from a DataFrame,
+    rewrites only the tombstone files that hold them: the rows come back,
+    the other tombstone file stays, and a snapshot taken before the
+    re-inserts still hides the deleted rows (the retired tombstone files
+    are archived)."""
+    td = engine.catalog.get(fresh)
+    session.persist(fresh, [{"id": i, "val": i, "tag": "x"} for i in range(10)])
+    session.commit()
+    for i in (2, 5, 50):  # one tombstone file each; no part holds id 50
+        session.delete(fresh, i)
+        session.commit()
+    tombs = store._tombstone_parts(td)
+    assert len(tombs) == 3
+    sid = engine.snapshot_table(fresh)
+    session.persist(fresh, {"id": 50, "val": -50, "tag": "rows"})
+    session.commit()
+    session.persist_df(
+        fresh, spark.createDataFrame([(2, -2, "df")], "id long, val long, tag string")
+    )
+    left = store._tombstone_parts(td)
+    assert len(left) == 1 and left[0] in tombs  # the file holding 5
+    rows = {r["id"]: r["val"] for r in engine.table(fresh).collect()}
+    assert rows == {**{i: i for i in range(10) if i != 5}, 2: -2, 50: -50}
+    asof = {r["id"] for r in engine.read_table_snapshot(fresh, sid).collect()}
+    assert asof == set(range(10)) - {2, 5}
+    engine.drop_table_snapshot(fresh, sid)
+
+
+def test_footer_pruning_counts_unknowns_as_may_hold(tmp_path):
+    """``store._may_hold`` rules a file out only on footer min/max: each
+    batch id is tested against each row group's range, and a file without
+    statistics, with floating-point ids or without the id column, or ids
+    that do not compare with the statistics, count as "may hold"."""
+    import types
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    td = types.SimpleNamespace(id_col="id")
+
+    def write(name, table, **kw):
+        path = str(tmp_path / name)
+        pq.write_table(table, path, **kw)
+        return path
+
+    ints = pa.table({"id": list(range(10)) + list(range(100, 110))})
+    two_groups = write("ints.parquet", ints, row_group_size=10)
+    assert pq.read_metadata(two_groups).num_row_groups == 2
+    held = lambda path, ids: store._may_hold(td, path, ids)  # noqa: E731
+    assert held(two_groups, [5]) and held(two_groups, [50, 105])
+    assert not held(two_groups, [50]) and not held(two_groups, [-1, 200])
+    assert not held(two_groups, [])
+    assert held(two_groups, ["a"])  # ids that do not compare with ints
+    assert held(two_groups, None)  # ids that do not compare with each other
+    assert held(write("nostats.parquet", ints, write_statistics=False), [50])
+    floats = pa.table({"id": [0.0, 1.0]})
+    assert held(write("floats.parquet", floats), [50.0])
+    assert held(write("noid.parquet", pa.table({"x": [1]})), [50])
+    strs = write("strs.parquet", pa.table({"id": ["a", "c", "f"]}))
+    assert held(strs, ["b"]) and not held(strs, ["m"])
 
 
 def test_tombstone_compaction_trigger(session, engine, fresh):
@@ -658,7 +758,7 @@ def test_targeted_upsert_in_warehouse_with_spaces(spark, tmp_path):
     for start in (0, 100, 200):
         store.append_rows(td, [{"id": i, "val": i} for i in range(start, start + 100)])
     new = spark.createDataFrame([(150, -1)], "id long, val long")
-    store.upsert(spark, td, new, full_rewrite_max_bytes=0)  # force targeted
+    store.upsert(spark, td, new)
     rows = eng.table("kvs").filter("id = 150").collect()
     assert [(r["id"], r["val"]) for r in rows] == [(150, -1)]  # ONE row, updated
     assert eng.table("kvs").count() == 300

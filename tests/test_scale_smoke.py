@@ -107,7 +107,7 @@ def test_upsert_on_5m_row_table_is_targeted(spark, tmp_path):
         F.col("id"), F.lit(-1).cast("long").alias("v")
     )
     _, dt = _elapsed(
-        lambda: store.upsert(spark, td, new, full_rewrite_max_bytes=0)
+        lambda: store.upsert(spark, td, new)
     )
     untouched = [
         p for p, m in parts_before.items()

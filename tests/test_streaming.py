@@ -159,6 +159,36 @@ def test_stream_resume_by_stream_id(session, engine, stream_table):
         sq2.stop()
 
 
+def test_stream_resume_after_insert_only_commit(session, engine):
+    """A resumed SELECT STREAM over an @Id (upsert) table delivers exactly
+    the rows an insert-only commit added: the commit publishes them as one
+    new part and leaves every existing part in place, so the file source
+    sees nothing else new."""
+    import uuid
+
+    name = f"W{uuid.uuid4().hex[:8]}"
+    engine.register_table(name, "id long, note string", id_col="id")
+    sql = f"select stream w.id, w.note from {name} w"
+    try:
+        session.persist(name, [{"id": i, "note": f"n{i}"} for i in range(6)])
+        session.commit()
+        sq = session.execute(sql, stream_id=f"resume-{name}")
+        try:
+            assert sorted(r["wid"] for r in sq.drain_available()) == list(range(6))
+        finally:
+            sq.stop()
+        session.persist(name, [{"id": i, "note": f"n{i}"} for i in range(6, 10)])
+        session.commit()
+        sq2 = session.execute(sql, stream_id=f"resume-{name}")
+        try:
+            got = sorted((r["wid"], r["wnote"]) for r in sq2.drain_available())
+        finally:
+            sq2.stop()
+        assert got == [(i, f"n{i}") for i in range(6, 10)]
+    finally:
+        engine.drop_table(name)
+
+
 def test_stream_static_join_enriches_tail(engine, session, stream_table):
     """EXTENSION (SURVEY §2.10): stream-static dimension join — both the
     snapshot and later commits get enriched against the static side."""

@@ -50,14 +50,18 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    # count py4j commands at the single shared gateway client
+    # count py4j commands at the single shared gateway client, leaving out
+    # memory-release commands ("m\n…"): Python's garbage collector sends
+    # them whenever it frees a JVM object handle, at times no code change
+    # controls, so counting them made two runs of one tree disagree
     client = sc._gateway._gateway_client
     real_send = client.send_command
     counter = {"n": 0}
 
-    def counting_send(*a, **kw):
-        counter["n"] += 1
-        return real_send(*a, **kw)
+    def counting_send(command, *a, **kw):
+        if not command.startswith("m\n"):
+            counter["n"] += 1
+        return real_send(command, *a, **kw)
 
     client.send_command = counting_send
 
