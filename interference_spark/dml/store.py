@@ -110,10 +110,16 @@ def without_tombstones(
     """``df`` minus the ids listed in the tombstone files ``tombs``.  The
     files are read with the catalog's id-only schema (no schema-inference
     job) and anti-joined as they are: an anti-join's build side may repeat
-    keys, so a ``distinct`` would only add a shuffle."""
+    keys, so a ``distinct`` would only add a shuffle.  The scan is packed
+    into size-derived partitions: each commit-time delete writes one ~1 KB
+    file, which the file source would otherwise read in a task of its own."""
     if not tombs or td.id_col is None:
         return df
-    dead = spark.read.schema(_id_schema(td)).parquet(*tombs)
+    dead = (
+        spark.read.schema(_id_schema(td))
+        .parquet(*tombs)
+        .coalesce(_n_parts(sum(os.path.getsize(f) for f in tombs)))
+    )
     return df.join(dead, td.id_col, "left_anti")
 
 

@@ -4095,8 +4095,9 @@ def stream_tumbling_keychange(spark, sf_dir):
 )
 def stream_sliding_count_window(spark, sf_dir):
     """Streaming WINDOW BY (A11/C3): per-arrival aggregate over the last-n
-    ring buffer held in applyInPandasWithState state — same emissions as the
-    batch window-frame formulation, so they share an oracle."""
+    ring buffer the driver emitter keeps per epoch beside the checkpoint —
+    same emissions as the batch window-frame formulation, so they share an
+    oracle."""
     e, name = _copy_events_managed(spark, sf_dir, "EvSlide")
     s = e.session()
     sq = s.execute(

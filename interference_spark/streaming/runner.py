@@ -82,37 +82,27 @@ def run_stream(session, q: Query, stream_id: str | None = None) -> StreamQueue:
     checkpoint = os.path.join(
         engine.warehouse, "_checkpoints", stream_id or uuid.uuid4().hex
     )
-    types = {f.name: _simple_type(f.dataType) for f in schema.fields}
     drop_order = False
+    emit = None
 
     if q.group_by or q.window_by is not None:
-        import functools
-
         from pyspark.sql import functions as F
 
         from ..dialect.compiler import _cond_expr
 
-        sdf = source
-        if q.where is not None:
-            sdf = sdf.alias(alias)
-            sdf = sdf.filter(_cond_expr(q.where))
-        # pre-cast to the simple pandas-state types
-        casts = [
-            F.col(f.name).cast(
-                {"long": "long", "double": "double", "string": "string"}[types[f.name]]
-            ).alias(f.name)
-            for f in schema.fields
-        ]
-        sdf = sdf.select(*casts)
-
+        cep = os.path.join(checkpoint, "cep")
+        if os.path.isdir(os.path.join(checkpoint, "state")) and not os.path.isdir(cep):
+            raise InvalidParameter(
+                f"stream {stream_id!r} was checkpointed with the CEP state in "
+                "Spark's state store, which this version no longer reads; "
+                "resuming would restart its windows empty — use a new stream_id"
+            )
         aggs = [
             (i.func, i.ref.name, i.out_name) for i in q.items if i.is_agg
         ]
         if q.window_by is not None:
-            out = sliding_count_window(
-                sdf, q.window_by.ref.name, q.window_by.interval, aggs, types
-            )
-            order_col = None
+            order_col = q.window_by.ref.name
+            emit = sliding_count_window(cep, order_col, q.window_by.interval, aggs)
         else:
             if len(q.group_by) > 1:
                 raise InvalidParameter(
@@ -123,18 +113,23 @@ def run_stream(session, q: Query, stream_id: str | None = None) -> StreamQueue:
                     "scalar GROUP BY keys are not supported on SELECT STREAM"
                 )
             gcol = q.group_by[0].name
-            out = tumbling_keychange(sdf, td.id_col, gcol, aggs, types)
-            # restore select-list order / names
-            bare = [i for i in q.items if not i.is_agg]
-            sel = []
-            for i in q.items:
-                if i.is_agg:
-                    sel.append(F.col(i.out_name))
-                else:
-                    sel.append(F.col(f"__g_{i.ref.name}").alias(i.out_name))
-            if bare:
-                out = out.select(*sel)
-            order_col = None
+            # select-list order and names; without a bare key in the select
+            # list the key still leads, as ``__g_<col>``
+            outs = [
+                (i.func, i.ref.name if i.is_agg else gcol, i.out_name)
+                for i in q.items
+            ]
+            if len(outs) == len(aggs):
+                outs = [(None, gcol, f"__g_{gcol}")] + outs
+            order_col = td.id_col
+            emit = tumbling_keychange(cep, order_col, gcol, outs)
+        out = source
+        if q.where is not None:
+            out = out.alias(alias).filter(_cond_expr(q.where))
+        # the simple types the emitters' JSON state holds
+        out = out.select(
+            *(F.col(c).cast(_simple_type(schema[c].dataType)).alias(c) for c in emit.inputs)
+        )
     else:
         dfs = {alias: source.alias(alias)}
         for t in q.tables[1:]:
@@ -181,6 +176,7 @@ def run_stream(session, q: Query, stream_id: str | None = None) -> StreamQueue:
         f"ifs_stream_{uuid.uuid4().hex[:8]}",
         checkpoint,
         drop_order=drop_order,
+        emit=emit,
     )
     session._streams.append(sq)
     return sq

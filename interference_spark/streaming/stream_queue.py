@@ -3,10 +3,12 @@
 Counterpart of the reference's ``sql/StreamQueue.java`` (bounded queue with
 ``poll()`` and ``stop()``, capacity 10000).  Backed by a Structured
 Streaming query writing via ``foreachBatch`` into a thread-safe driver-side
-queue; each micro-batch is ordered by the table's @Id column before
-enqueueing — the reference's own ordering assumption (its streams are fed in
-frame order keyed by monotonically increasing ids; manual "Tumbling
-windows": grouping order is based on the @Id value).
+queue.  Each micro-batch is collected once and ordered on the driver by the
+table's @Id column (the window column for WINDOW BY) before enqueueing —
+the reference's own ordering assumption (its streams are fed in frame order
+keyed by monotonically increasing ids; manual "Tumbling windows": grouping
+order is based on the @Id value).  A CEP stream then steps its driver
+emitter (``streaming/windows.py``) over the ordered rows.
 
 Divergence (SURVEY §7.4.4): the reference streams *uncommitted* inserts
 (dirty reads); we stream committed appends only — each committed append is a
@@ -17,11 +19,24 @@ from __future__ import annotations
 
 import queue
 import threading
-from typing import Any
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Row
 
+if TYPE_CHECKING:
+    from .windows import Emitter
+
 CAPACITY = 10_000  # reference sql/StreamQueue.java:44
+
+
+def _asc_nulls_first(v):
+    """Sort key for Spark's ascending order: nulls first, NaN above every
+    other number."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    return (1, v)
 
 
 class StreamQueue:
@@ -32,31 +47,32 @@ class StreamQueue:
         query_name: str,
         checkpoint_dir: str | None = None,
         drop_order: bool = False,
+        emit: Emitter | None = None,
     ) -> None:
         self._q: queue.Queue[Row] = queue.Queue(maxsize=CAPACITY)
         self._stopped = threading.Event()
+        cols = df.columns
+        pos = cols.index(order_col) if order_col else None
         # when the @Id was re-attached under a hidden name purely for
         # ordering, it is dropped before rows reach the consumer
-        self.columns = [
-            c for c in df.columns if not (drop_order and c == order_col)
-        ]
+        if drop_order:
+            self.columns = cols[:pos] + cols[pos + 1 :]
+            visible = Row(*self.columns)
+        elif emit is not None:
+            self.columns = emit.columns
+        else:
+            self.columns = cols
 
         def feed(batch_df: DataFrame, epoch_id: int) -> None:
+            # the micro-batch is collected whole anyway: order it here, so
+            # the drain runs one Spark job
+            rows = batch_df.collect()
+            if pos is not None:
+                rows.sort(key=lambda r: _asc_nulls_first(r[pos]))
             if drop_order:
-                # runner.py guarantees the hidden order column is present;
-                # a silent skip here would let it leak to consumers
-                assert order_col and order_col in batch_df.columns, (
-                    f"hidden order column {order_col!r} missing from "
-                    f"micro-batch columns {batch_df.columns}"
-                )
-            ordered = (
-                batch_df.orderBy(order_col)
-                if order_col and order_col in batch_df.columns
-                else batch_df
-            )
-            if drop_order:
-                ordered = ordered.drop(order_col)
-            rows = ordered.collect()
+                rows = [visible(*r[:pos], *r[pos + 1 :]) for r in rows]
+            if emit is not None:
+                rows = emit(epoch_id, rows)
             for r in rows:
                 # bounded put that stays interruptible: a plain blocking
                 # put() deadlocks once a batch exceeds CAPACITY and the

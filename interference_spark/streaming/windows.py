@@ -1,5 +1,5 @@
-"""Custom stateful streaming operators — the two pieces Structured Streaming
-doesn't provide natively (SURVEY §4 "custom work" 1-2):
+"""Custom CEP operators — the two pieces Structured Streaming doesn't
+provide natively (SURVEY §4 "custom work" 1-2):
 
 * **tumbling key-change emission** (reference A10/C2,
   ``sql/FrameGroupTask.java:43-100``): a group row is emitted when the group
@@ -8,25 +8,41 @@ doesn't provide natively (SURVEY §4 "custom work" 1-2):
   ``sql/SQLGroupContainer.java:120-158``): keep the last n rows; once full,
   emit the aggregate over the buffer for every arriving row.
 
-Both are built on ``applyInPandasWithState``.  The reference executes these
-globally ordered by @Id on a single master thread; we reproduce that with a
-constant grouping key (single state partition) — correct-by-construction,
-sequential by design.  For scalable variants, pass a real ``partition_by``
-key: state is then per key and Spark distributes it (the semantics become
-per-key arrival order, which is what a sharded CEP deployment wants).
+Both are driver emitters.  The reference executes them globally ordered by
+@Id on a single master thread, and a ``SELECT STREAM`` drain already
+collects its whole micro-batch to the driver, so :class:`Emitter` steps
+there, inside the stream's ``foreachBatch``: the drain's one Spark job is
+the ``collect`` — no shuffle into state partitions, no Python worker, no
+state store.
 
-Arrival order: rows are sorted by the order column *within* each micro-batch;
-batch boundaries follow file-commit order. This matches the reference's own
-assumption that ids are monotonically increasing in arrival order.
+Arrival order: rows are sorted by the order column *within* each micro-batch
+(``StreamQueue``); batch boundaries follow file-commit order. This matches
+the reference's own assumption that ids are monotonically increasing in
+arrival order.
+
+Exactly-once state: an emitter's state lives in ``<checkpoint>/cep/`` as
+one ``<epoch>.json`` per micro-batch.  Stepping epoch N loads the newest
+state file with epoch < N, computes the epoch's rows and the next state,
+and writes ``<N>.json`` (an fsynced temp file + ``os.replace``, so a
+reader sees the old file or the new one) before any row is enqueued;
+then only N and the file it was computed from (N−1) are kept.  Spark
+logs epoch N as committed only after ``foreachBatch`` returns, and after
+a failure it re-runs an uncommitted epoch under the same id over the same
+offsets — the same input rows.  The replay loads N−1 again (N is not
+< N), so it recomputes the same rows and the same state whether the
+failure came before, during or after the state write.  A committed epoch
+is never replayed, so no older file is ever needed.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator
+import os
+import re
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -34,12 +50,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 AGG_FUNCS = ("COUNT", "SUM", "MIN", "MAX", "AVG", "LAST")
 
 
-def _spark_type(t: str):
-    return {"long": T.LongType(), "double": T.DoubleType(), "string": T.StringType()}[t]
-
-
 def _agg_value(func: str, vals: list):
-    vals = [v for v in vals if v is not None]
+    # NaN counts as null, as it did when these operators ran over pandas
+    vals = [v for v in vals if v is not None and v == v]
     if func == "COUNT":
         return len(vals)
     if not vals:
@@ -61,123 +74,130 @@ def _agg_value(func: str, vals: list):
     raise ValueError(func)
 
 
-def _out_field_type(func: str, in_type: str) -> str:
-    if func == "COUNT":
-        return "long"
-    if func == "AVG":
-        return "double"
-    return in_type
+_STATE_FILE = re.compile(r"(\d+)\.json")
+
+
+class Emitter:
+    """A CEP operator stepped once per epoch on the driver.
+
+    ``inputs`` are the columns each input row carries, in order;
+    ``columns`` the output row's names.  ``step(rows, state)`` takes the
+    epoch's ordered rows and the previous state (None before the first
+    epoch) and returns ``(out_rows, state)``; the state must be JSON."""
+
+    def __init__(
+        self,
+        state_dir: str,
+        inputs: list[str],
+        columns: list[str],
+        step: Callable[[list, object], tuple[list[tuple], object]],
+    ) -> None:
+        self.state_dir = state_dir
+        self.inputs = inputs
+        self.columns = columns
+        self._step = step
+        self._row = Row(*columns)
+
+    def _epochs(self) -> list[int]:
+        try:
+            names = os.listdir(self.state_dir)
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(m.group(1)) for m in map(_STATE_FILE.fullmatch, names) if m
+        )
+
+    def _path(self, epoch: int) -> str:
+        return os.path.join(self.state_dir, f"{epoch}.json")
+
+    def __call__(self, epoch_id: int, rows: list) -> list[Row]:
+        epochs = self._epochs()
+        prev = max((e for e in epochs if e < epoch_id), default=None)
+        state = None
+        if prev is not None:
+            with open(self._path(prev)) as fh:
+                state = json.load(fh)
+        out, state = self._step(rows, state)
+        os.makedirs(self.state_dir, exist_ok=True)
+        tmp = os.path.join(self.state_dir, f".{epoch_id}.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(state, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self._path(epoch_id))
+        for e in epochs:
+            if e not in (prev, epoch_id):
+                os.remove(self._path(e))
+        return [self._row(*r) for r in out]
 
 
 def tumbling_keychange(
-    sdf: DataFrame,
+    state_dir: str,
     order_col: str,
     group_col: str,
-    aggs: list[tuple[str, str, str]],
-    col_types: dict[str, str],
-) -> DataFrame:
-    """Emit one row per *run* of equal group keys, at the moment the key
-    changes; the final open run stays buffered (exactly the reference's
-    behaviour — it emits only on change).
+    outs: list[tuple[str | None, str, str]],
+) -> Emitter:
+    """Emit one row per *run* of equal group keys, ordered by
+    ``order_col``, at the moment the key changes; the final open run stays
+    in the state (exactly the reference's behaviour — it emits only on
+    change).
 
-    aggs: [(FUNC, in_col, out_name)]; col_types: in_col -> long|double|string.
-    """
-    need = sorted({c for _, c, _ in aggs} | {order_col, group_col})
-    out_fields = [T.StructField(f"__g_{group_col}", _spark_type(col_types[group_col]))]
-    for func, c, out in aggs:
-        out_fields.append(T.StructField(out, _spark_type(_out_field_type(func, col_types[c]))))
-    out_schema = T.StructType(out_fields)
-    state_schema = T.StructType([T.StructField("payload", T.StringType())])
+    outs: ``[(FUNC, in_col, out_name)]`` in output order, FUNC one of
+    ``AGG_FUNCS`` or None for the group key itself."""
+    inputs = sorted({c for _, c, _ in outs} | {order_col, group_col})
+    pos = {c: i for i, c in enumerate(inputs)}
+    gpos = pos[group_col]
+    agg_cols = sorted({c for f, c, _ in outs if f is not None})
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = json.loads(state.get[0])
-        else:
-            st = {"key": None, "vals": {c: [] for _, c, _ in aggs}, "open": False}
-        emitted: list[dict] = []
+    def step(rows: list, st: dict | None):
+        st = st or {"key": None, "vals": {c: [] for c in agg_cols}, "open": False}
+        out = []
+        for r in rows:
+            k = r[gpos]
+            if st["open"] and k != st["key"]:
+                out.append(
+                    tuple(
+                        st["key"] if f is None else _agg_value(f, st["vals"][c])
+                        for f, c, _ in outs
+                    )
+                )
+                st["vals"] = {c: [] for c in agg_cols}
+            st["key"], st["open"] = k, True
+            for c in agg_cols:
+                st["vals"][c].append(r[pos[c]])
+        return out, st
 
-        def close_group():
-            row = {f"__g_{group_col}": st["key"]}
-            for func, c, out in aggs:
-                row[out] = _agg_value(func, st["vals"][c])
-            emitted.append(row)
-
-        batch_list = list(pdfs)  # an iterator is always truthy — materialize
-        batch = pd.concat(batch_list, ignore_index=True) if batch_list else pd.DataFrame()
-        if len(batch):
-            batch = batch.sort_values(order_col)
-            for _, r in batch.iterrows():
-                k = r[group_col]
-                if st["open"] and k != st["key"]:
-                    close_group()
-                    st["vals"] = {c: [] for _, c, _ in aggs}
-                # numeric group keys arrive as numpy scalars — convert to
-                # native python or json.dumps(state) raises on int64
-                st["key"] = str(k) if isinstance(k, pd.Timestamp) else _py(k)
-                st["open"] = True
-                for _, c, _ in aggs:
-                    v = r[c]
-                    st["vals"][c].append(None if pd.isna(v) else _py(v))
-        state.update((json.dumps(st),))
-        if emitted:
-            yield pd.DataFrame(emitted)
-
-    grouped = sdf.select(*need).withColumn("__gk", F.lit(0)).groupBy("__gk")
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return Emitter(state_dir, inputs, [o for _, _, o in outs], step)
 
 
 def sliding_count_window(
-    sdf: DataFrame,
+    state_dir: str,
     order_col: str,
     interval: int,
     aggs: list[tuple[str, str, str]],
-    col_types: dict[str, str],
-) -> DataFrame:
-    """WINDOW BY col INTERVAL = n over a stream: ring buffer of the last n
-    rows in state; from the n-th arrival onward, one aggregate row per
-    arriving row."""
-    need = sorted({c for _, c, _ in aggs} | {order_col})
-    out_fields = [
-        T.StructField(out, _spark_type(_out_field_type(func, col_types[c])))
-        for func, c, out in aggs
-    ]
-    out_schema = T.StructType(out_fields)
-    state_schema = T.StructType([T.StructField("payload", T.StringType())])
+) -> Emitter:
+    """WINDOW BY col INTERVAL = n over a stream: a ring buffer of the last
+    n rows, ordered by ``order_col`` (the window column), in the state;
+    from the n-th arrival onward, one aggregate row per arriving row.
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = json.loads(state.get[0]) if state.exists else []
-        emitted: list[dict] = []
-        batch_list = list(pdfs)  # an iterator is always truthy — materialize
-        batch = pd.concat(batch_list, ignore_index=True) if batch_list else pd.DataFrame()
-        if len(batch):
-            batch = batch.sort_values(order_col)
-            for _, r in batch.iterrows():
-                buf.append({c: (None if pd.isna(r[c]) else _py(r[c])) for c in need})
-                if len(buf) > interval:
-                    buf.pop(0)
-                if len(buf) == interval:
-                    row = {}
-                    for func, c, out in aggs:
-                        row[out] = _agg_value(func, [b[c] for b in buf])
-                    emitted.append(row)
-        state.update((json.dumps(buf),))
-        if emitted:
-            yield pd.DataFrame(emitted)
+    aggs: ``[(FUNC, in_col, out_name)]`` in output order."""
+    inputs = sorted({c for _, c, _ in aggs} | {order_col})
+    pos = {c: i for i, c in enumerate(inputs)}
 
-    grouped = sdf.select(*need).withColumn("__gk", F.lit(0)).groupBy("__gk")
-    return grouped.applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    def step(rows: list, buf: list | None):
+        buf = buf or []
+        out = []
+        for r in rows:
+            buf.append(list(r))
+            if len(buf) > interval:
+                buf.pop(0)
+            if len(buf) == interval:
+                out.append(
+                    tuple(_agg_value(f, [b[pos[c]] for b in buf]) for f, c, _ in aggs)
+                )
+        return out, buf
 
-
-def _py(v):
-    """numpy scalar → python native (json-serializable)."""
-    try:
-        return v.item()
-    except AttributeError:
-        return v
+    return Emitter(state_dir, inputs, [o for _, _, o in aggs], step)
 
 
 def misra_gries(
@@ -200,8 +220,8 @@ def misra_gries(
     with O(k) memory and an order-independent final answer.
 
     Single state partition by design (matches the reference CEP's global
-    arrival order); shard with a real key the same way the other stateful
-    operators do for a distributed variant (per-key guarantees).
+    arrival order); group by a real key instead of the constant one for a
+    distributed variant (per-key guarantees).
     """
     out_schema = T.StructType(
         [

@@ -327,6 +327,42 @@ def test_commit_and_find_job_budget(spark, session, engine, fresh):
     }
 
 
+def test_tombstone_scan_is_one_partition(spark, session, engine, fresh):
+    """Commit-time deletes write one small tombstone file each; a read packs
+    them into one partition, so it runs as many tasks after four delete
+    commits as after one."""
+    sc = spark.sparkContext._jsc.sc()
+    td = engine.catalog.get(fresh)
+
+    def tasks_of_read():
+        first = int(sc.dagScheduler().nextJobId())
+        rows = store.read_managed(spark, td).collect()
+        end = int(sc.dagScheduler().nextJobId())
+        sc.listenerBus().waitUntilEmpty()
+        stages = set()
+        for jid in range(first, end):
+            ids = sc.statusStore().job(jid).stageIds()
+            stages.update(int(ids.apply(i)) for i in range(ids.length()))
+        n = 0
+        for sid in stages:
+            st = sc.statusStore().lastStageAttempt(sid)
+            if st.status().toString() != "SKIPPED":
+                n += int(st.numTasks())
+        return n, sorted(r["id"] for r in rows)
+
+    session.persist(fresh, [{"id": i, "val": i, "tag": "x"} for i in range(20)])
+    session.commit()
+    session.delete(fresh, 0)
+    session.commit()
+    one, ids = tasks_of_read()
+    assert ids == list(range(1, 20))
+    for i in (1, 2, 3):
+        session.delete(fresh, i)
+        session.commit()
+    assert len(store._tombstone_parts(td)) == 4
+    assert tasks_of_read() == (one, list(range(4, 20)))
+
+
 def test_upsert_rewrites_only_the_tombstone_files_holding_its_ids(
     spark, session, engine, fresh
 ):

@@ -102,6 +102,185 @@ def test_sliding_count_window_stream(session, engine, stream_table):
         sq.stop()
 
 
+def test_resumed_drain_runs_one_spark_job(spark, session, engine, stream_table):
+    """A resumed drain after one commit is one Spark job — the collect of
+    its micro-batch — for a filter, a projection without the @Id, and the
+    tumbling and sliding emitters: the order is taken on the driver, and
+    the CEP state lives beside the checkpoint, not in a state store."""
+    sc = spark.sparkContext._jsc.sc()
+    t = stream_table
+    queries = {
+        "filter": f"select stream e.eventId, e.eventValue from {t} e "
+        f"where e.eventType = 1",
+        "projection": f"select stream e.eventValue from {t} e",
+        "tumbling": f"select stream sum(e.eventValue) s, e.groupValue "
+        f"from {t} e group by e.groupValue",
+        "sliding": f"select stream count(e.eventId) c, sum(e.eventValue) s "
+        f"from {t} e window by e.eventId interval = 3",
+    }
+    session.persist(t, _rows(12))
+    session.commit()
+    for kind, sql in queries.items():
+        sq = session.execute(sql, stream_id=f"{t}-{kind}")
+        try:
+            sq.drain_available()
+        finally:
+            sq.stop()
+    session.persist(t, _rows(8, start=12))
+    session.commit()
+    jobs = {}
+    for kind, sql in queries.items():
+        first = int(sc.dagScheduler().nextJobId())
+        sq = session.execute(sql, stream_id=f"{t}-{kind}")
+        try:
+            assert sq.drain_available()
+        finally:
+            sq.stop()
+        jobs[kind] = int(sc.dagScheduler().nextJobId()) - first
+    assert jobs == dict.fromkeys(queries, 1)
+
+
+def test_tumbling_resume_closes_the_open_run(session, engine, stream_table):
+    """A tumbling stream stopped with an open run and resumed by stream_id
+    keeps the run: rows committed later extend it, and the next key change
+    closes it with the rows of both sessions."""
+    sql = (
+        f"select stream sum(e.eventValue) s, count(e.eventId) c, e.groupValue "
+        f"from {stream_table} e group by e.groupValue"
+    )
+    sid = f"{stream_table}-tum"
+    session.persist(stream_table, _rows(10))  # g0(0-3) g1(4-7) g2(8-9) open
+    session.commit()
+    sq = session.execute(sql, stream_id=sid)
+    try:
+        got = [(r["egroupValue"], r["s"], r["c"]) for r in sq.drain_available()]
+    finally:
+        sq.stop()
+    assert got == [("g0", 60, 4), ("g1", 220, 4)]
+    session.persist(stream_table, _rows(2, start=10))  # g2 continues
+    session.persist(
+        stream_table,
+        {"eventId": 12, "eventType": 0, "eventValue": 1, "groupValue": "g9"},
+    )
+    session.commit()
+    sq = session.execute(sql, stream_id=sid)
+    try:
+        got = [(r["egroupValue"], r["s"], r["c"]) for r in sq.drain_available()]
+    finally:
+        sq.stop()
+    assert got == [("g2", 380, 4)]
+
+
+def test_sliding_resume_continues_the_ring_buffer(session, engine, stream_table):
+    sql = (
+        f"select stream count(e.eventId) c, sum(e.eventValue) s, max(e.eventId) m "
+        f"from {stream_table} e window by e.eventId interval = 3"
+    )
+    sid = f"{stream_table}-slide"
+    session.persist(stream_table, _rows(4))
+    session.commit()
+    sq = session.execute(sql, stream_id=sid)
+    try:
+        got = [(r["c"], r["s"], r["m"]) for r in sq.drain_available()]
+    finally:
+        sq.stop()
+    assert got == [(3, 30, 2), (3, 60, 3)]
+    session.persist(stream_table, _rows(2, start=4))
+    session.commit()
+    sq = session.execute(sql, stream_id=sid)
+    try:
+        got = [(r["c"], r["s"], r["m"]) for r in sq.drain_available()]
+    finally:
+        sq.stop()
+    assert got == [(3, 90, 4), (3, 120, 5)]
+
+
+def test_emitter_replay_is_deterministic_and_keeps_two_epochs(tmp_path):
+    """Stepping an emitter again with an epoch it already wrote (Spark's
+    replay of an uncommitted micro-batch) gives the same rows and the same
+    state, and only the newest epoch and the one before it stay on disk."""
+    import os
+
+    from interference_spark.streaming.windows import (
+        sliding_count_window,
+        tumbling_keychange,
+    )
+
+    def batches(inputs):
+        # five epochs of three rows each, columns in the emitter's order
+        vals = {"id": lambda i: i, "k": lambda i: f"k{i // 2}", "v": lambda i: i * 1.5}
+        return [
+            [tuple(vals[c](i) for c in inputs) for i in range(3 * e, 3 * e + 3)]
+            for e in range(5)
+        ]
+
+    emitters = {
+        "tumbling": tumbling_keychange(
+            str(tmp_path / "t"), "id", "k",
+            [("SUM", "v", "s"), (None, "k", "key"), ("LAST", "id", "last")],
+        ),
+        "sliding": sliding_count_window(
+            str(tmp_path / "s"), "id", 4, [("AVG", "v", "a"), ("MIN", "k", "lo")]
+        ),
+    }
+    for name, em in emitters.items():
+        data = batches(em.inputs)
+
+        def state(epoch):
+            with open(os.path.join(em.state_dir, f"{epoch}.json")) as fh:
+                return fh.read()
+
+        out = [em(e, rows) for e, rows in enumerate(data)]
+        assert sorted(os.listdir(em.state_dir)) == ["3.json", "4.json"], name
+        first = state(4)
+        assert em(4, data[4]) == out[4] and state(4) == first, name
+        assert sorted(os.listdir(em.state_dir)) == ["3.json", "4.json"], name
+        assert out[4] and list(out[4][0].asDict()) == em.columns, name
+    # empty epochs emit nothing and carry the open run (id 14, key k7)
+    tum = emitters["tumbling"]
+    assert tum(5, []) == [] and tum(6, []) == []
+    assert [tuple(r) for r in tum(7, [(15, "k9", 0.0)])] == [(21.0, "k7", 14)]
+    assert sorted(os.listdir(tum.state_dir)) == ["6.json", "7.json"]
+
+
+def test_emitter_aggregates_count_nan_as_null(tmp_path):
+    from interference_spark.streaming.windows import sliding_count_window
+
+    em = sliding_count_window(
+        str(tmp_path), "id", 2, [("COUNT", "v", "c"), ("MIN", "v", "lo"), ("SUM", "v", "s")]
+    )
+    assert em.inputs == ["id", "v"]
+    out = em(0, [(0, 1.0), (1, float("nan")), (2, 3.0)])
+    assert [tuple(r) for r in out] == [(1, 1.0, 1.0), (1, 3.0, 3.0)]
+
+
+def test_old_state_store_checkpoint_is_refused(session, engine, stream_table):
+    """A CEP stream_id whose checkpoint holds the state-store plan's
+    ``state/`` directory but no ``cep/`` state must not resume with empty
+    windows; a DISTINCT stream keeps its Spark state and resumes."""
+    import os
+
+    from interference_spark import errors
+
+    session.persist(stream_table, _rows(4))
+    session.commit()
+    sid = f"{stream_table}-old"
+    os.makedirs(os.path.join(engine.warehouse, "_checkpoints", sid, "state", "0"))
+    with pytest.raises(errors.InvalidParameter, match=sid):
+        session.execute(
+            f"select stream count(e.eventId) c, e.groupValue "
+            f"from {stream_table} e group by e.groupValue",
+            stream_id=sid,
+        )
+    sql = f"select stream distinct e.eventType from {stream_table} e"
+    for want in ({0, 1, 2}, set()):
+        sq = session.execute(sql, stream_id=f"{stream_table}-distinct")
+        try:
+            assert {r["eeventType"] for r in sq.drain_available()} == want
+        finally:
+            sq.stop()
+
+
 def test_process_stream(session, engine, stream_table):
     def make():
         class DropType2:

@@ -48,7 +48,7 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    dag = sc._jsc.sc().dagScheduler()
 
     # count py4j commands at the single shared gateway client, leaving out
     # memory-release commands ("m\n…"): Python's garbage collector sends
@@ -66,7 +66,9 @@ def main() -> None:
     client.send_command = counting_send
 
     def jobs() -> int:
-        return len(tracker.getJobIdsForGroup(None))
+        # job ids the DAG scheduler handed out: counts every job group,
+        # stream micro-batches (run under their query's group) included
+        return int(dag.nextJobId())
 
     rows = []
     for name in names:
