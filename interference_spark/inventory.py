@@ -2576,10 +2576,10 @@ def decontaminate_semantic(spark, sf_dir):
     n-gram `decontaminate_ngrams` pass: every corpus vector's max
     quantized cosine against a small eval/benchmark slice (vec_id % 53);
     contaminated at ≥ 0.5.  Catches paraphrased benchmark leakage exact
-    n-gram overlap misses.  Eval side broadcast, corpus streams through
-    one JVM-fold projection (no shuffle until the combinable per-id max);
-    quantized-BIGINT cosines → the full decision table hash-matches the
-    oracle."""
+    n-gram overlap misses.  Eval side collected once, corpus streams
+    through one Arrow UDF that emits each row's max (no join, no
+    shuffle); quantized-BIGINT cosines → the full decision table
+    hash-matches the oracle."""
     from .pipeline.similarity import semantic_decontaminate
 
     e = engine_for(spark, sf_dir)
@@ -9562,11 +9562,10 @@ def rank_bm25_topk(spark, sf_dir):
     global aggregate (n_docs, Σdl, per-term document frequencies)
     broadcasts back, scoring is a pure projection over matched docs, and
     the ranking is TakeOrderedAndProject — no global sort.  The idf's ln
-    is micronat-quantized by spec and the per-document sum over query
-    terms accumulates in exact DECIMAL casts (27,14 per term, re-cast
-    per addition — value-identical to the old SUM(DECIMAL(38,14))
-    aggregate), so the score is order-independent and bit-identical
-    across engines."""
+    is micronat-quantized by spec and each per-term score is rounded
+    half-even to integer 1e-14 units (the value of the oracle's
+    CAST(ts AS DECIMAL(38,14))), summed as BIGINT and divided once, so
+    the score is order-independent and bit-identical across engines."""
     from .pipeline.retrieval import bm25_topk
 
     e = engine_for(spark, sf_dir)

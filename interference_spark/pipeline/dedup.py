@@ -131,81 +131,6 @@ def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_signatures_jvm(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 128,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures computed ENTIRELY JVM-side — the 100 TB scale
-    path (``token_hash="xxhash64"``): shingles built with
-    transform/slice/concat_ws, shingle hashes via Spark's built-in
-    ``xxhash64``, the ``num_perm`` permutation minima as one aggregate of
-    ``min(pmod(h·aᵢ + bᵢ, p))`` expressions — whole-stage codegen, zero
-    Python (asserted in the property test).  The explode is combined
-    map-side (a doc's shingles live in one partition), so the shuffle
-    carries ``num_perm`` partial minima per doc, not shingle rows.
-
-    NOT the oracle default: DuckDB cannot recompute Spark's xxhash64, so
-    this family is property-tested (identical shingle sets collide,
-    signature-Jaccard tracks true Jaccard) rather than value-hashed; the
-    md5 pandas variant stays driver-oracled.  Same shingle semantics as
-    ``_doc_shingles``: distinct k-token shingles, short docs → one
-    whole-doc shingle, empty docs → the "" shingle.  The permutation
-    family is the same seeded (a, b) set applied to the xxhash64 value
-    folded to 32 bits, with the multiply reduced mod 2⁶¹−1 EXACTLY via
-    Mersenne splitting (no wraparound) — a different but equally valid
-    universal family."""
-    a, b = _perm_params(num_perm, seed)
-    toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
-        lambda t: t != "",
-    )
-    n = F.size(toks)
-    shingles = F.array_distinct(
-        F.when(
-            n >= shingle_k,
-            F.transform(
-                F.sequence(F.lit(0), n - shingle_k),
-                lambda i: F.concat_ws(
-                    " ", F.slice(toks, i + 1, shingle_k)
-                ),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-    exploded = df.select(F.col(id_col), F.explode(shingles).alias("__s")).select(
-        # fold the signed 64-bit xxhash64 into [0, 2^32) so the modular
-        # multiply below can stay overflow-free under ANSI mode
-        id_col, F.pmod(F.xxhash64("__s"), F.lit(1 << 32)).alias("__h")
-    )
-    # exact (h·aᵢ + bᵢ) mod M without 64-bit overflow: split aᵢ into
-    # hi·2³¹ + lo (each product ≤ 2⁶³ − 2³²), and use the Mersenne
-    # identity 2⁶¹ ≡ 1 (mod M) to reduce the ·2³¹ step:
-    # x·2³¹ = (x div 2³⁰)·2⁶¹ + (x mod 2³⁰)·2³¹ ≡ x div 2³⁰ + (x mod 2³⁰)·2³¹
-    M = F.lit(_MERSENNE)
-    h = F.col("__h")
-
-    def _perm_val(i: int):
-        ai, bi = int(a[i]), int(b[i])
-        a_hi, a_lo = ai >> 31, ai & ((1 << 31) - 1)
-        t1 = F.pmod(h * F.lit(a_hi), M)
-        t1m = F.pmod(
-            t1.bitwiseAND(F.lit((1 << 30) - 1)) * F.lit(1 << 31)
-            + F.shiftrightunsigned(t1, 30),
-            M,
-        )
-        return F.pmod(t1m + F.pmod(h * F.lit(a_lo), M) + F.lit(bi), M)
-
-    mins = [F.min(_perm_val(i)).alias(f"__m{i}") for i in range(num_perm)]
-    agg = exploded.groupBy(id_col).agg(*mins)
-    return agg.select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{i}") for i in range(num_perm)]).alias("signature"),
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -213,21 +138,11 @@ def minhash_signatures(
     num_perm: int = 128,
     shingle_k: int = 3,
     seed: int = 42,
-    token_hash: str = "md5",
 ) -> DataFrame:
     """(id, signature array<long>) via a vectorized Pandas UDF — Arrow
-    batches in, numpy (a*h+b) % p minima out.  ``token_hash="xxhash64"``
-    switches to the all-JVM :func:`minhash_signatures_jvm` plan (the
-    scale path; not oracle-compatible because DuckDB cannot recompute
-    Spark's xxhash64)."""
+    batches in, numpy (a*h+b) % p minima out."""
     from . import ensure_parallelism
 
-    if token_hash == "xxhash64":
-        return minhash_signatures_jvm(
-            df, text_col, id_col, num_perm, shingle_k, seed
-        )
-    if token_hash != "md5":
-        raise ValueError(f"unknown token_hash {token_hash!r}")
     df = ensure_parallelism(df)
     a, b = _perm_params(num_perm, seed)
 
@@ -263,7 +178,6 @@ def minhash_dedup_pairs(
     shingle_k: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    token_hash: str = "md5",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH, scored by signature-estimated
     Jaccard; id_a < id_b. The band bucket is the shuffle key — pairs are only
@@ -275,10 +189,7 @@ def minhash_dedup_pairs(
     from . import register_cache
 
     sigs = register_cache(
-        minhash_signatures(
-            df, text_col, id_col, num_perm, shingle_k, seed,
-            token_hash=token_hash,
-        )
+        minhash_signatures(df, text_col, id_col, num_perm, shingle_k, seed)
     )
     # candidates travel as narrow (id, bucket) rows — the 128-long signature
     # arrays never enter the band shuffle (they'd dominate its byte volume);
@@ -469,84 +380,16 @@ def incremental_minhash_dedup(
 
 
 # ------------------------------------------------------------- simhash
-def simhash_jvm(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash computed ENTIRELY JVM-side — the 100 TB scale path
-    (``token_hash="xxhash64"`` on :func:`simhash` / :func:`simhash_pairs`):
-    tokens via split+explode, token hashes via Spark's built-in
-    ``xxhash64``, per-bit ±1 votes as 64 conditional sums in ONE
-    aggregate, fingerprint packing as a bitwise-OR fold — the whole plan
-    is whole-stage codegen with zero Python (asserted in
-    `tests/test_plan_lint.py`).  The (id, token) explode is combined
-    map-side (a doc's tokens live in one partition), so the shuffle
-    carries 64 partial sums per doc, not token rows.
-
-    NOT the oracle default: DuckDB cannot recompute Spark's xxhash64, so
-    this variant is property-tested (identical docs collide, near-dup
-    Hamming locality, banding completeness) rather than value-hashed; the
-    md5 pandas variant remains the driver-oracled default.  Same
-    semantics otherwise: distinct whitespace tokens, unweighted votes,
-    ties (vote 0) → bit 0, tokenless docs → fingerprint 0."""
-    toks = F.array_distinct(
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    )
-    exploded = df.select(F.col(id_col), F.explode(toks).alias("__tok")).select(
-        id_col, F.xxhash64("__tok").alias("__h")
-    )
-    votes = [
-        F.sum(
-            F.when(
-                F.shiftrightunsigned(F.col("__h"), b).bitwiseAND(F.lit(1)) == 1,
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-        ).alias(f"__v{b}")
-        for b in range(64)
-    ]
-    agg = exploded.groupBy(id_col).agg(*votes)
-    packed = None
-    for b in range(64):
-        bit = F.when(
-            F.col(f"__v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-        packed = bit if packed is None else packed.bitwiseOR(bit)
-    fps = agg.select(F.col(id_col), packed.alias("simhash"))
-    # tokenless docs never reach the explode; re-attach as fingerprint 0
-    return (
-        df.select(id_col)
-        .join(fps, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("simhash"), F.lit(0).cast("long")).alias("simhash"),
-        )
-    )
-
-
 def simhash(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 64,
-    token_hash: str = "md5",
 ) -> DataFrame:
     """64-bit SimHash over whitespace tokens (md5-derived token hashes,
-    unweighted bit votes). Vectorized Pandas UDF.  ``token_hash=
-    "xxhash64"`` switches to the all-JVM :func:`simhash_jvm` plan (no
-    Python anywhere — the scale path; not oracle-compatible because
-    DuckDB cannot recompute Spark's xxhash64)."""
+    unweighted bit votes). Vectorized Pandas UDF."""
     from . import ensure_parallelism
 
-    if token_hash == "xxhash64":
-        if bits != 64:
-            # round-4 advice: simhash_jvm hard-codes 64 bits (xxhash64's
-            # full output); silently returning a 64-bit fingerprint for
-            # bits=32 would diverge from the md5 path, which honors bits
-            raise ValueError(
-                f"token_hash='xxhash64' only supports bits=64, got {bits}"
-            )
-        return simhash_jvm(df, text_col, id_col)
-    if token_hash != "md5":
-        raise ValueError(f"unknown token_hash {token_hash!r}")
     df = ensure_parallelism(df)
 
     @F.pandas_udf(T.LongType())
@@ -607,7 +450,6 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    token_hash: str = "md5",
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ k.
 
@@ -638,7 +480,7 @@ def simhash_pairs(
     # you'd materialize fingerprints to a table instead — same idea)
     from . import register_cache
 
-    sh = register_cache(simhash(df, text_col, id_col, token_hash=token_hash))
+    sh = register_cache(simhash(df, text_col, id_col))
     uf = sh.select("simhash").distinct()
     band = [
         f"(shiftrightunsigned(simhash, {offs[i]}) & {(1 << widths[i]) - 1}L)"

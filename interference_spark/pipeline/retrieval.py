@@ -21,8 +21,10 @@ Float-determinism contract (see the inventory module docstring): the only
 transcendental, the idf's ``ln``, is quantized to integer micronats
 (``floor(ln(·)·1e6)`` as BIGINT) as part of the spec; per-(doc, term)
 scores are then deterministic products/quotients of bit-identical
-doubles, and the per-document sum over query terms accumulates in
-``DECIMAL(38,14)`` so partitioning and order can't perturb it.
+doubles, each rounded half-even to an integer count of 1e-14 units
+(the value of ``CAST(ts AS DECIMAL(38,14))``); the per-document sum over
+query terms adds those integers, so partitioning and order can't perturb
+it, and divides once by 1e14.
 
 The idf uses the always-positive BM25+ style variant
 ``ln(1 + (N - df + 0.5) / (df + 0.5))`` — on web-scale corpora stopword
@@ -75,10 +77,8 @@ def bm25_scores(
     # map-side projection per doc plus ONE 1-row global aggregate
     # carrying n_docs / sum_dl / every per-term document frequency
     # (broadcast back).  Scoring is then a pure projection: per-term
-    # scores are the same doubles as before, and the per-document sum
-    # accumulates the same DECIMAL(38,14) casts — decimal addition is
-    # exact, so a fixed-order + chain is bit-identical to the old
-    # order-free SUM aggregate.
+    # scores become integer 1e-14 units, their long sum is exact in
+    # any order, and one division turns it back into a double.
     def tf_col(t: str):
         # closure, NOT a defaulted lambda parameter: a second lambda
         # param (even defaulted) flips F.filter into its
@@ -131,16 +131,14 @@ def bm25_scores(
         )
         ts = (idf_q.cast("double") / F.lit(_MICRO)) * tfn
         # unmatched terms contribute nothing — exactly the rows the old
-        # (doc, term) tf table never held.  decimal(27,14), NOT (38,14):
-        # at (38,14) the + chain below would hit the 38-digit precision
-        # cap and Spark would silently drop to scale 13 (allowPrecision-
-        # Loss), diverging from the old SUM(decimal(38,14)) aggregate in
-        # the 14th decimal; at (27,14) — identical VALUE for any real
-        # BM25 score magnitude — each addition fits, and the re-cast
-        # after every + keeps the chain exact at any term count.
-        return F.when(
-            tf > 0, ts.cast("decimal(27,14)")
-        ).otherwise(F.lit(0).cast("decimal(27,14)"))
+        # (doc, term) tf table never held.  Each score becomes an integer
+        # count of 1e-14 units, rint(ts·1e14): that is the value DuckDB's
+        # CAST(ts AS DECIMAL(38,14)) stores.  Spark's decimal cast rounds
+        # the shortest decimal string HALF_UP instead, which differs from
+        # it in the last digit on some inputs.
+        return F.when(tf > 0, F.rint(ts * F.lit(1e14)).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
 
     n_matched = reduce(
         lambda a, c: a + c,
@@ -150,13 +148,12 @@ def bm25_scores(
         ],
     )
     score = reduce(
-        lambda a, c: (a + c).cast("decimal(27,14)"),
-        [term_score(i) for i in range(len(terms))],
+        lambda a, c: a + c, [term_score(i) for i in range(len(terms))]
     )
     return j.select(
         F.col(id_col),
         n_matched.cast("long").alias("n_terms_matched"),
-        score.cast("double").alias("score"),
+        (score.cast("double") / F.lit(1e14)).alias("score"),
     )
 
 

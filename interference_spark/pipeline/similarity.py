@@ -803,7 +803,6 @@ def semantic_decontaminate(
     threshold: float = 0.5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    impl: str = "vectorized",
 ) -> DataFrame:
     """Eval-set decontamination by EMBEDDING similarity — the semantic
     sibling of the n-gram `decontaminate` pass: for every corpus vector,
@@ -814,104 +813,65 @@ def semantic_decontaminate(
     Returns one row per corpus vector: ``(id, max_eval_cos,
     contaminated)``.  Every cosine is a floor-quantized int64 sum turned
     into a double by one division, and ``max`` is comparison-based (no
-    float accumulation), so the decision table hash-matches a SQL oracle
-    — under BOTH implementations, which compute bit-identical values:
+    float accumulation), so the decision table hash-matches a SQL oracle.
 
-    * ``impl="vectorized"`` (default): the eval matrix is collected
-      (bounded — eval sets are 10²-10⁴ vectors) into an Arrow-batched
-      pandas UDF that floor-quantizes the per-element products and sums
-      them in int64 (order-free), emitting each row's max directly —
-      corpus × |eval| numpy work, NO shuffle and no join at all.
-      Measured ~50× faster than the fold path (1M×100 evals: 80 s → see
-      SCALING.md): Spark's higher-order-function lambdas evaluate on the
-      interpreted path, per element, while numpy does the same arithmetic
-      in vectorized batches.
-    * ``impl="fold"``: pure JVM expression tree (broadcast cross join +
-      zip_with/aggregate folds + map-side-combining per-id max) — zero
-      Python anywhere, for deployments that disallow Python workers.
+    Plan: the eval matrix is collected (bounded — eval sets are 10²-10⁴
+    vectors) into an Arrow-batched pandas UDF that floor-quantizes the
+    per-element products and sums them in int64 (order-free), emitting
+    each row's max directly — corpus × |eval| numpy work, NO shuffle and
+    no join at all.  A broadcast cross join with ``zip_with``/``aggregate``
+    folds computes the same values but was measured 16× slower at sf0.1
+    (SCALING.md): Spark's higher-order-function lambdas evaluate on the
+    interpreted path, per element, while numpy does the same arithmetic
+    in vectorized batches.
 
     For very large eval sets you'd bucket both sides with the
     hyperplane-LSH machinery instead (same verify arithmetic)."""
-    if impl == "vectorized":
-        rows = eval_df.select(_as_double(F.col(vec_col)).alias("e")).collect()
-        emat = np.array([r["e"] for r in rows], dtype=np.float64)  # (k, d)
-        if len(emat) == 0:
-            return corpus.select(
-                F.col(id_col),
-                F.lit(0.0).alias("max_eval_cos"),
-                F.lit(False).alias("contaminated"),
-            )
-        nb = np.floor(emat * emat * 1e14).astype(np.int64).sum(axis=1)
-        sqrt_nb = np.sqrt(nb.astype(np.float64))  # (k,)
-        # zero-norm guard (round-4 advice): an all-zero vector's quantized
-        # norm is 0 → 0/0 = NaN, and Spark's NaN-is-greatest ordering
-        # would call the row contaminated; same denom==0 → 1.0 convention
-        # as semantic_dedup / _argmax_centroid_exact (cosine becomes 0)
-        sqrt_nb[sqrt_nb == 0.0] = 1.0
-
-        @F.pandas_udf(T.DoubleType())
-        def max_cos(vecs: pd.Series) -> pd.Series:
-            out = np.empty(len(vecs), dtype=np.float64)
-            if len(vecs) == 0:
-                return pd.Series(out)
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            na = np.floor(X * X * 1e14).astype(np.int64).sum(axis=1)
-            sqrt_na = np.sqrt(na.astype(np.float64))
-            sqrt_na[sqrt_na == 0.0] = 1.0  # same zero-norm guard
-            chunk = 1024  # bound the (rows, k, d) product block
-            for s in range(0, len(X), chunk):
-                xb = X[s : s + chunk]
-                dots = (
-                    np.floor(xb[:, None, :] * emat[None, :, :] * 1e14)
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )  # (rows, k) — same ints as the fold/oracle
-                cos = dots.astype(np.float64) / (
-                    sqrt_na[s : s + chunk, None] * sqrt_nb[None, :]
-                )
-                out[s : s + len(xb)] = cos.max(axis=1)
-            return pd.Series(out)
-
-        cvec = _as_double(F.col(vec_col))
+    rows = eval_df.select(_as_double(F.col(vec_col)).alias("e")).collect()
+    emat = np.array([r["e"] for r in rows], dtype=np.float64)  # (k, d)
+    if len(emat) == 0:
         return corpus.select(
             F.col(id_col),
-            max_cos(cvec).alias("max_eval_cos"),
-        ).select(
-            id_col,
-            "max_eval_cos",
-            (F.col("max_eval_cos") >= F.lit(threshold)).alias("contaminated"),
+            F.lit(0.0).alias("max_eval_cos"),
+            F.lit(False).alias("contaminated"),
         )
-    if impl != "fold":
-        raise ValueError(f"unknown impl {impl!r}")
-    q = F.lit(1e14)
+    nb = np.floor(emat * emat * 1e14).astype(np.int64).sum(axis=1)
+    sqrt_nb = np.sqrt(nb.astype(np.float64))  # (k,)
+    # zero-norm guard (round-4 advice): an all-zero vector's quantized
+    # norm is 0 → 0/0 = NaN, and Spark's NaN-is-greatest ordering
+    # would call the row contaminated; same denom==0 → 1.0 convention
+    # as semantic_dedup / _argmax_centroid_exact (cosine becomes 0)
+    sqrt_nb[sqrt_nb == 0.0] = 1.0
 
-    def _fold(arr: Column) -> Column:
-        return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    @F.pandas_udf(T.DoubleType())
+    def max_cos(vecs: pd.Series) -> pd.Series:
+        out = np.empty(len(vecs), dtype=np.float64)
+        if len(vecs) == 0:
+            return pd.Series(out)
+        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        na = np.floor(X * X * 1e14).astype(np.int64).sum(axis=1)
+        sqrt_na = np.sqrt(na.astype(np.float64))
+        sqrt_na[sqrt_na == 0.0] = 1.0  # same zero-norm guard
+        chunk = 1024  # bound the (rows, k, d) product block
+        for s in range(0, len(X), chunk):
+            xb = X[s : s + chunk]
+            dots = (
+                np.floor(xb[:, None, :] * emat[None, :, :] * 1e14)
+                .astype(np.int64)
+                .sum(axis=2)
+            )  # (rows, k) — same ints as the oracle
+            cos = dots.astype(np.float64) / (
+                sqrt_na[s : s + chunk, None] * sqrt_nb[None, :]
+            )
+            out[s : s + len(xb)] = cos.max(axis=1)
+        return pd.Series(out)
 
-    ev = eval_df.select(
-        F.col(id_col).alias("__eid"), _as_double(F.col(vec_col)).alias("__ev")
-    )
-    cv = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("__cv")
-    )
-    pairs = cv.crossJoin(F.broadcast(ev))
-    dot = _fold(F.zip_with("__cv", "__ev", lambda x, y: F.floor(x * y * q)))
-    na = _fold(F.transform("__cv", lambda x: F.floor(x * x * q)))
-    nb = _fold(F.transform("__ev", lambda x: F.floor(x * x * q)))
-
-    # zero-norm guard (round-4 advice): denom==0 → 1.0, matching the
-    # vectorized path and the semantic_dedup convention bit for bit
-    def _sqrt1(norm: Column) -> Column:
-        return F.when(norm == 0, F.lit(1.0)).otherwise(F.sqrt(norm.cast("double")))
-
-    cos = dot.cast("double") / (_sqrt1(na) * _sqrt1(nb))
-    return (
-        pairs.select(id_col, cos.alias("__cos"))
-        .groupBy(id_col)
-        .agg(F.max("__cos").alias("max_eval_cos"))
-        .select(
-            id_col,
-            "max_eval_cos",
-            (F.col("max_eval_cos") >= F.lit(threshold)).alias("contaminated"),
-        )
+    cvec = _as_double(F.col(vec_col))
+    return corpus.select(
+        F.col(id_col),
+        max_cos(cvec).alias("max_eval_cos"),
+    ).select(
+        id_col,
+        "max_eval_cos",
+        (F.col("max_eval_cos") >= F.lit(threshold)).alias("contaminated"),
     )

@@ -124,7 +124,7 @@ def test_bm25_matches_python_spec(spark, docs, terms):
         for r in bm25_scores(_df(spark, docs), sorted(terms)).collect()
     }
     assert got == want
-    # scores agree to float tolerance (decimal accumulation rounds at 1e-14)
+    # scores agree to float tolerance (each term score rounds to 1e-14 units)
     for r in bm25_scores(_df(spark, docs), sorted(terms)).collect():
         t = nonempty[r.doc_id]
         s = 0.0

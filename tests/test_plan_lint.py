@@ -152,10 +152,10 @@ def test_image_ahash_no_shuffle(spark):
 
 
 def test_semantic_decontaminate_plan_shapes(spark):
-    """Default (vectorized) path: per-row max inside the Arrow UDF — the
-    plan must contain NO shuffle and no join at all.  Fold path: eval side
-    BROADCAST (BroadcastNestedLoopJoin, never CartesianProduct) with a
-    map-side-combining per-id max."""
+    """Per-row max inside the Arrow UDF — the plan must contain NO
+    shuffle and no join at all — and the decision table must equal the
+    `decontaminate_semantic` DuckDB oracle exactly."""
+    import duckdb
     from pyspark.sql import functions as F
 
     from interference_spark.pipeline.similarity import semantic_decontaminate
@@ -170,17 +170,15 @@ def test_semantic_decontaminate_plan_shapes(spark):
     assert "Join" not in vplan, vplan[:2000]
     assert "ArrowEvalPython" in vplan or "Python" in vplan, vplan[:2000]
 
-    fold = semantic_decontaminate(corpus, ev, threshold=0.5, impl="fold")
-    fplan = fold._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in fplan, fplan[:2000]
-    assert "BroadcastNestedLoopJoin" in fplan, fplan[:2000]
-    assert "partial_max" in fplan or "partial max" in fplan, fplan[:2000]
-
-    # the two implementations must produce bit-identical decision tables
-    cols = ["vec_id", "max_eval_cos", "contaminated"]
-    assert sorted(map(tuple, vec.select(cols).collect())) == sorted(
-        map(tuple, fold.select(cols).collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'"
     )
+    res = con.execute(inventory.oracle_sql()["decontaminate_semantic"])
+    cols = [d[0] for d in res.description]
+    want = sorted(res.fetchall())
+    assert want
+    assert sorted(map(tuple, vec.select(cols).collect())) == want
 
 
 def test_incremental_minhash_band_shuffle_is_narrow(spark):

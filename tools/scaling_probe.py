@@ -203,7 +203,6 @@ def probe(spark, sizes: list[int], only: set[str] | None = None) -> dict:
         incremental_minhash_dedup,
         minhash_dedup_pairs,
         minhash_signatures,
-        simhash,
         simhash_pairs,
     )
     from interference_spark.pipeline.bpe import bpe_train
@@ -251,16 +250,11 @@ def probe(spark, sizes: list[int], only: set[str] | None = None) -> dict:
             threshold=0.9,
         ),
         # fixed 100-vector eval side (the realistic shape: eval sets do
-        # not grow with the corpus) → corpus-linear fold work
+        # not grow with the corpus) → corpus-linear UDF work
         "decontaminate_semantic": lambda n: semantic_decontaminate(
             _embs(spark, n).filter(F.col("vec_id") >= 100),
             _embs(spark, 100),
             threshold=0.5,
-        ),
-        # all-JVM SimHash fingerprints (xxhash64 path) — no banding, pure
-        # per-doc signature throughput of the zero-Python plan
-        "simhash_jvm_fingerprints": lambda n: simhash(
-            _docs(spark, n), token_hash="xxhash64"
         ),
         # r5: exact-substring decontamination, contains path — fixed
         # 100-snippet pattern side (eval sets do not grow with the
@@ -1066,13 +1060,10 @@ def _funnel_minhash(spark, sf_dir: str):
     """The curation funnel's PRODUCTION composition: identical C4 →
     Gopher → near-dup-cluster → DSIR staging to the
     `corpus_curation_funnel_v2` entry, with the near-dup stage swapped
-    from exact char-trigram Jaccard (the oracle-replayable gate shape)
-    to banded MinHash-LSH over the all-JVM xxhash64 path — the
-    bounded-alphabet-proof detector a 100 TB run uses.  Stages are
-    shipped operators; the same composition ALSO ships as the fully
-    ORACLED entry `corpus_curation_funnel_v3` (md5 hash family — the
-    oracle-replayable one); this probe variant keeps xxhash64 because
-    the probe's subject is end-to-end wall-clock on the all-JVM path."""
+    from exact char-trigram Jaccard to banded MinHash-LSH — the
+    bounded-alphabet-proof detector a 100 TB run uses.  This is the md5
+    MinHash composition the `corpus_curation_funnel_v3` entry checks
+    against its DuckDB oracle; the probe times it end to end."""
     from interference_spark import inventory
     from interference_spark.pipeline.dedup import (
         dedup_clusters,
@@ -1109,9 +1100,7 @@ def _funnel_minhash(spark, sf_dir: str):
         .join(gop.filter("gopher_ok"), "doc_id", "left_semi")
         .select("doc_id", "lang", "text")
     )
-    pairs = minhash_dedup_pairs(
-        s12, threshold=0.8, token_hash="xxhash64"
-    ).select("id_a", "id_b")
+    pairs = minhash_dedup_pairs(s12, threshold=0.8).select("id_a", "id_b")
     labels = dedup_clusters(s12, pairs)
     s123 = s12.join(
         labels.filter("cluster_id = doc_id").select("doc_id"),
@@ -1246,9 +1235,7 @@ def _funnel_minhash_staged(spark, sf_dir: str) -> dict:
     del docs, c4, gf, gop
     tick("rules_s12", t0)
     t0 = time.perf_counter()
-    pairs = minhash_dedup_pairs(
-        s12, threshold=0.8, token_hash="xxhash64"
-    ).select("id_a", "id_b")
+    pairs = minhash_dedup_pairs(s12, threshold=0.8).select("id_a", "id_b")
     labels = dedup_clusters(s12, pairs)
     s123 = (
         s12.join(
@@ -1346,9 +1333,7 @@ def probe_funnel_prepare(spark, n: int, outdir: str) -> dict:
     )
     res["rules_s12"] = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    pairs = minhash_dedup_pairs(
-        s12, threshold=0.8, token_hash="xxhash64"
-    ).select("id_a", "id_b")
+    pairs = minhash_dedup_pairs(s12, threshold=0.8).select("id_a", "id_b")
     labels = dedup_clusters(s12, pairs)
     s123 = s12.join(
         labels.filter("cluster_id = doc_id").select("doc_id"),
