@@ -8033,6 +8033,7 @@ def bpe_subword_stats(spark, sf_dir):
     fertility ratio (one exact BIGINT/BIGINT division).  The corpus joins
     the word table on the token (broadcast/bucketed at scale) — exact
     integer sums, so the whole report value-hashes."""
+    from .pipeline import local_frame
     from .pipeline.bpe import bpe_train, subword_stats
 
     e = engine_for(spark, sf_dir)
@@ -8040,7 +8041,7 @@ def bpe_subword_stats(spark, sf_dir):
     merges, words = bpe_train(docs, n_merges=_BPE_MERGES)
     out = subword_stats(docs, words, by="lang")
     rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def _bpe_encode_oracle(k: int = _BPE_MERGES, mod: int = 101) -> str:
@@ -8187,6 +8188,7 @@ def bpe_encode_ids(spark, sf_dir):
     construction, segmentation, and position densification all replay in
     the oracle, so the entire tokenizer — rules AND application —
     value-hashes."""
+    from .pipeline import local_frame
     from .pipeline.bpe import bpe_encode, bpe_train, bpe_vocab
 
     e = engine_for(spark, sf_dir)
@@ -8194,7 +8196,7 @@ def bpe_encode_ids(spark, sf_dir):
     merges, words = bpe_train(docs, n_merges=_BPE_MERGES)
     out = bpe_encode(docs.filter("doc_id % 101 = 0"), words, bpe_vocab(merges, words))
     rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 # =====================================================================
@@ -8386,6 +8388,7 @@ def byte_bpe_encode_ids(spark, sf_dir):
     pre-tokens fall back to their byte segmentation, so there is no OOV
     mode.  Word-table and vocab joins broadcast; the only shuffle
     partitions by document."""
+    from .pipeline import local_frame
     from .pipeline.byte_bpe import (
         byte_bpe_encode,
         byte_bpe_train,
@@ -8399,7 +8402,7 @@ def byte_bpe_encode_ids(spark, sf_dir):
         docs.filter("doc_id % 11 = 0"), words, byte_bpe_vocab(merges)
     )
     rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @query(
@@ -8421,6 +8424,7 @@ def byte_bpe_roundtrip(spark, sf_dir):
     train→vocab→encode→decode stack, including the newline/tab/
     multi-byte mutation path.  The encoder's fuzzed round-trip property
     lives in tests/test_byte_bpe.py; this is its driver-gated twin."""
+    from .pipeline import local_frame
     from .pipeline.byte_bpe import (
         byte_bpe_decode,
         byte_bpe_encode,
@@ -8443,7 +8447,7 @@ def byte_bpe_roundtrip(spark, sf_dir):
     enc = byte_bpe_encode(sample, words, byte_bpe_vocab(merges))
     out = byte_bpe_decode(enc)
     rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @query(

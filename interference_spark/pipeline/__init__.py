@@ -64,6 +64,33 @@ def lit_int_array(values) -> Column:
     )
 
 
+#: Rows an iterative trainer may bring to the driver in one collect: BPE's
+#: distinct-word table (``bpe.train_from_words``) and WordPiece's fused
+#: symbol+pair count table (``wordpiece.wordpiece_train``).  At or below
+#: it the trainer learns on the driver from that one collect; above it the
+#: round runs distributed, so driver memory stays bounded at any scale.
+DRIVER_COLLECT_CAP = 65536
+
+
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A driver-built DataFrame as an Arrow ``LocalRelation``: ``rows``
+    (tuples in schema order) plus a DDL string or ``StructType`` become
+    one pyarrow Table, so collecting the frame runs no Spark job.  A
+    plain-list ``createDataFrame`` plans an RDD scan instead, and each
+    collect of it starts a Python-worker job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    asch = to_arrow_schema(st)
+    cols = list(zip(*rows)) if rows else [()] * len(asch)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)], schema=asch
+    )
+    return spark.createDataFrame(table, st)
+
+
 @contextmanager
 def iterative_stage_conf(spark):
     """Scoped AQE settings for ITERATIVE algorithms (GD loops, merge

@@ -9,13 +9,19 @@ This is the textbook Sennrich-style algorithm re-shaped for Spark:
   ``sym`` is the space-joined current segmentation — at 100 TB the word
   table (billions of rows) is what shuffles, never the corpus, and corpus
   frequency enters every count as the exact BIGINT ``freq`` weight.
-* One merge iteration = (1) adjacent-pair counts: a map-side-combined
-  groupBy over exploded ``zip(sym, sym[1:])`` pairs — ONE shuffle whose
-  key cardinality is the pair vocabulary; (2) argmax: ``LIMIT 1`` to the
-  driver (a single row — the driver never holds data); (3) the merge
-  applied to every word as a JVM higher-order ``aggregate`` fold (no
-  Python, no UDF).  k merges = k bounded shuffles; each iteration's word
-  table is persisted and the previous one released, so lineage stays O(1).
+* A word table up to ``pipeline.DRIVER_COLLECT_CAP`` rows is collected
+  once and the merges are learned on the driver (``learn_on_driver``),
+  as published BPE learns over its word-frequency dictionary: the probe
+  of the word table costs three Spark jobs (its shuffle, AQE's cache
+  materialization, the collect), and no merge costs any.
+* Above the cap one merge iteration = (1) adjacent-pair counts: a
+  map-side-combined groupBy over exploded ``zip(sym, sym[1:])`` pairs —
+  ONE shuffle whose key cardinality is the pair vocabulary; (2) argmax:
+  the top window to the driver (≤ 64 rows at the oracle contract);
+  (3) the merge applied to every word as a JVM higher-order
+  ``aggregate`` fold (no Python, no UDF).  k merges = k bounded
+  shuffles; each iteration's word table is checkpointed and the previous
+  one released, so lineage stays O(1).
 * The greedy-leftmost merge is a LEFT FOLD over the symbol list: append
   the next symbol, or — when it equals ``right`` and the accumulator's
   last token equals ``left`` — replace that last token with the
@@ -31,6 +37,8 @@ the reporting layer (ratios quantized there).
 """
 
 from __future__ import annotations
+
+import heapq
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -212,6 +220,144 @@ def merge_fold_batch(sym: Column, rules: list[tuple[str, str]]) -> Column:
     return F.when(F.size(s) == 1, sym).otherwise(F.aggregate(rest, init, step))
 
 
+_MERGES_DDL = (
+    "merge_rank long, left string, right string, merged string, "
+    "pair_count long"
+)
+_WORDS_DDL = "word string, freq long, sym string"
+
+
+def round_window(merges_per_round: int, n_left: int) -> int:
+    """How many top-ranked pairs one round reads when ``n_left`` merges
+    are still to learn.  At ``merges_per_round=1`` (the sequential/oracle
+    contract) the window feeds ``select_exact_prefix``, which batches the
+    longest PROVABLY bit-identical prefix per round — same results, fewer
+    count->argmax->fold rounds (r12: 8 rounds -> 3 on the test corpus); a
+    wider window only widens the provable prefix.  Above 1 the window is
+    wide enough that the greedy disjoint filter usually finds its
+    survivors; a short round (conflicts ate the tail) just re-counts
+    sooner — never wrong, only slower."""
+    if merges_per_round == 1:
+        return 64
+    return max(32, 8 * min(merges_per_round, n_left))
+
+
+def select_round(
+    ranked: list[tuple[str, str, int]],
+    rules: list[tuple[int, str, str, str, int]],
+    n_left: int,
+    merges_per_round: int,
+) -> list[tuple[str, str, int]]:
+    """One round's merges from ``ranked`` — the top ``round_window`` rows
+    of the pair table in (cnt DESC, l ASC, r ASC) order — given the
+    ``rules`` learned so far.  Both training paths call this, so they
+    learn the same rules: ``select_exact_prefix`` at
+    ``merges_per_round=1``, ``select_disjoint`` above it."""
+    if merges_per_round == 1:
+        return select_exact_prefix(
+            ranked,
+            n_left,
+            window_truncated=len(ranked) == round_window(1, n_left),
+            prior_merged=frozenset(m for _, _, _, m, _ in rules),
+        )
+    return select_disjoint(ranked, min(merges_per_round, n_left))
+
+
+def learn_on_driver(
+    table: list[tuple[str, int, str]], n_merges: int, merges_per_round: int
+) -> tuple[list[tuple[int, str, str, str, int]], list[tuple[str, int, str]]]:
+    """The merge loop over a collected ``(word, freq, sym)`` table, in
+    one Python process — as published BPE learns over its word-frequency
+    dictionary (Sennrich et al., ACL 2016).  Returns ``(rules, table)``
+    with ``rules`` as the merge-table rows and ``table`` the final
+    segmentations, equal to the Spark loop's output: the same exact pair
+    counts (``freq`` >= 1, as ``word_table`` counts it), the same
+    (cnt DESC, l ASC, r ASC) order (Python compares str by code point,
+    Spark by UTF-8 bytes — the same order), ``select_round`` on the same
+    window, and the same greedy-leftmost fold as ``merge_fold`` /
+    ``merge_fold_batch``.
+
+    Counts are kept incrementally: a round re-segments only the words
+    that held a selected pair and moves their pair counts; the ranked
+    window comes from a lazy heap (stale entries are dropped as they
+    surface), so a round costs the words it touches, not the table."""
+    segs = [sym.split(" ") for _, _, sym in table]
+    freqs = [int(f) for _, f, _ in table]
+    counts: dict[tuple[str, str], int] = {}
+    holders: dict[tuple[str, str], set[int]] = {}
+    for i, s in enumerate(segs):
+        for p in zip(s, s[1:]):
+            counts[p] = counts.get(p, 0) + freqs[i]
+            holders.setdefault(p, set()).add(i)
+    heap = [(-c, l, r) for (l, r), c in counts.items()]
+    heapq.heapify(heap)
+
+    def move(i: int, sign: int) -> None:
+        f = sign * freqs[i]
+        s = segs[i]
+        for p in zip(s, s[1:]):
+            c = counts.get(p, 0) + f
+            if c:
+                counts[p] = c
+                heapq.heappush(heap, (-c, p[0], p[1]))
+            else:
+                del counts[p]
+            if sign > 0:
+                holders.setdefault(p, set()).add(i)
+
+    def ranked(cap: int) -> list[tuple[str, str, int]]:
+        nonlocal heap
+        if len(heap) > 4 * len(counts) + 4096:  # mostly stale: rebuild
+            heap = [(-c, l, r) for (l, r), c in counts.items()]
+            heapq.heapify(heap)
+        top: list[tuple[int, str, str]] = []
+        seen: set[tuple[str, str]] = set()
+        while heap and len(top) < cap:
+            e = heapq.heappop(heap)
+            p = (e[1], e[2])
+            if counts.get(p) == -e[0] and p not in seen:
+                seen.add(p)
+                top.append(e)
+        for e in top:
+            heapq.heappush(heap, e)
+        return [(l, r, -nc) for nc, l, r in top]
+
+    rules: list[tuple[int, str, str, str, int]] = []
+    rank = 1
+    while rank <= n_merges:
+        n_left = n_merges - rank + 1
+        cand = ranked(round_window(merges_per_round, n_left))
+        if not cand:
+            break
+        sel = select_round(cand, rules, n_left, merges_per_round)
+        for l, r, cnt in sel:
+            rules.append((rank, l, r, l + r, cnt))
+            rank += 1
+        # merge_fold_batch: an incoming symbol merges with the previous
+        # output token under the rule whose right it is (rights are
+        # pairwise distinct in a batch; the top-ranked rule would win)
+        left_of: dict[str, str] = {}
+        for l, r, _ in sel:
+            left_of.setdefault(r, l)
+        touched = set().union(*(holders.get((l, r), ()) for l, r, _ in sel))
+        for i in touched:
+            s = segs[i]
+            out = [s[0]]
+            for x in s[1:]:
+                l = left_of.get(x)
+                if l is not None and out[-1] == l:
+                    out[-1] = l + x
+                else:
+                    out.append(x)
+            if len(out) < len(s):
+                move(i, -1)
+                segs[i] = out
+                move(i, +1)
+    return rules, [
+        (w, f, " ".join(s)) for (w, _, _), f, s in zip(table, freqs, segs)
+    ]
+
+
 def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
@@ -222,17 +368,29 @@ def bpe_train(
 
     Returns ``(merges, words)``: ``merges`` is the learned rule table
     ``(merge_rank, left, right, merged, pair_count)`` (≤ n_merges rows —
-    training stops early if no adjacent pair remains), built on the
-    driver from the per-round top rows (bounded: ≤ ~8·merges_per_round
-    rows per round — the driver never holds data); ``words`` is the
-    final segmented word table ``(word, freq, sym)``, materialized via
+    training stops early if no adjacent pair remains); ``words`` is the
+    final segmented word table ``(word, freq, sym)``.
+
+    A word table up to the cap is held on the driver: the distinct-word
+    table is probed with one collect of at most
+    ``pipeline.DRIVER_COLLECT_CAP + 1`` rows, and when it fits the whole
+    merge loop runs in Python (``learn_on_driver``) and both results are
+    Arrow-built local relations — collecting them runs no Spark job, and
+    training leaves no cached or checkpointed blocks behind.
+
+    Above the cap the loop runs in Spark, where the driver holds only
+    the per-round top rows (≤ ~8·merges_per_round rows per round):
+    pair-count shuffle, top-window collect, and the merge applied as a
+    JVM fold, with each round's table materialized via
     ``localCheckpoint`` (see the in-loop comment: persist would keep the
     full fold lineage and the driver goes quadratic re-rendering plans).
-    Release contract: ``unpersist()`` does NOT free localCheckpoint
-    blocks — Spark's ContextCleaner frees them asynchronously once the
-    DataFrame is garbage-collected, so callers just drop their
-    reference.  Training that stops before its first merge returns the
-    persisted input table itself, which ``release_caches()`` frees.
+    Release contract on that path: ``unpersist()`` does NOT free
+    localCheckpoint blocks — Spark's ContextCleaner frees them
+    asynchronously once the DataFrame is garbage-collected, so callers
+    just drop their reference.  Training that stops there before its
+    first merge returns the persisted input table itself, which
+    ``release_caches()`` frees.  Both paths learn the same rules and
+    segmentations.
 
     ``merges_per_round`` is the scale knob.  At 1 (default, the oracle
     contract) each merge is its own count→argmax→fold round — textbook
@@ -261,55 +419,57 @@ def train_from_words(
     ``bpe_train`` and byte-level ``byte_bpe.byte_bpe_train`` (the loop
     never inspects symbols, only splits/joins on the ``' '`` separator,
     so any alphabet whose symbols contain no literal space works).
-    Contract (ranks, tie-breaks, batching, localCheckpoint lineage
-    truncation) is exactly ``bpe_train``'s — see its docstring."""
+    Contract (ranks, tie-breaks, batching, the driver/Spark split at
+    ``pipeline.DRIVER_COLLECT_CAP``, localCheckpoint lineage truncation
+    above it) is exactly ``bpe_train``'s — see its docstring."""
     if merges_per_round < 1:
         raise ValueError(
             f"merges_per_round must be >= 1, got {merges_per_round}"
         )
-    from . import iterative_stage_conf, register_cache
+    from . import (
+        DRIVER_COLLECT_CAP,
+        iterative_stage_conf,
+        local_frame,
+        register_cache,
+    )
 
     spark = words.sparkSession
-    rules: list[tuple[int, str, str, str, int]] = []
     with iterative_stage_conf(spark):
-        # no eager count: the first round's pair-count collect populates
-        # the persisted word table while scanning it, so a separate
-        # materialization job would be pure scheduler floor.  Ledgered:
-        # training that stops before its first merge returns this very
-        # table, so only release_caches() can free it.
+        # The probe reads the ledgered table, so a table above the cap is
+        # computed once and the Spark loop's first round scans the cache.
+        # Ledgered: training that stops before its first merge returns
+        # this very table, so only release_caches() can free it.
         cur = register_cache(words)
+        probe = cur.limit(DRIVER_COLLECT_CAP + 1).collect()
+        if len(probe) <= DRIVER_COLLECT_CAP:
+            cur.unpersist()
+            rules, table = learn_on_driver(
+                [(r["word"], r["freq"], r["sym"]) for r in probe],
+                n_merges,
+                merges_per_round,
+            )
+            return (
+                local_frame(spark, rules, _MERGES_DDL),
+                local_frame(spark, table, _WORDS_DDL),
+            )
+        rules: list[tuple[int, str, str, str, int]] = []
         rank = 1
         while rank <= n_merges:
-            want = min(merges_per_round, n_merges - rank + 1)
-            # fetch enough ranked candidates that the greedy disjoint filter
-            # usually finds `want` survivors; a short round (conflicts ate
-            # the tail) just re-counts sooner — never wrong, only slower.
-            # At merges_per_round=1 (the sequential/oracle contract) the
-            # window instead feeds select_exact_prefix, which batches the
-            # longest PROVABLY bit-identical prefix per round — same results,
-            # fewer count->argmax->fold rounds (r12: 8 rounds -> 3 on the
-            # test corpus); a wider window only widens the provable prefix.
-            exact = merges_per_round == 1
-            cap = 64 if exact else max(32, 8 * want)
+            n_left = n_merges - rank + 1
             cand = (
                 _pair_counts(cur)
                 .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-                .limit(cap)
+                .limit(round_window(merges_per_round, n_left))
                 .collect()
             )
             if not cand:
                 break
-            if exact:
-                sel = select_exact_prefix(
-                    [(c["l"], c["r"], int(c["cnt"])) for c in cand],
-                    n_merges - rank + 1,
-                    window_truncated=len(cand) == cap,
-                    prior_merged=frozenset(m for _, _, _, m, _ in rules),
-                )
-            else:
-                sel = select_disjoint(
-                    [(c["l"], c["r"], int(c["cnt"])) for c in cand], want
-                )
+            sel = select_round(
+                [(c["l"], c["r"], int(c["cnt"])) for c in cand],
+                rules,
+                n_left,
+                merges_per_round,
+            )
             for l, r, cnt in sel:
                 rules.append((rank, l, r, l + r, cnt))
                 rank += 1
@@ -328,12 +488,7 @@ def train_from_words(
             nxt = cur.withColumn("sym", col).localCheckpoint(eager=True)
             cur.unpersist()
             cur = nxt
-    merges = spark.createDataFrame(
-        rules,
-        "merge_rank long, left string, right string, merged string, "
-        "pair_count long",
-    )
-    return merges, cur
+    return local_frame(spark, rules, _MERGES_DDL), cur
 
 
 def bpe_vocab(merges: DataFrame, words: DataFrame) -> DataFrame:
@@ -346,6 +501,8 @@ def bpe_vocab(merges: DataFrame, words: DataFrame) -> DataFrame:
     vocab-sized window — bounded by alphabet + n_merges, never by the
     corpus."""
     from pyspark.sql import Window
+
+    from . import local_frame
 
     spark = words.sparkSession
     chars = (
@@ -363,15 +520,14 @@ def bpe_vocab(merges: DataFrame, words: DataFrame) -> DataFrame:
         .cast("long")
         .alias("token_id"),
     )
-    mrows = [
-        (r["merged"], b + int(r["merge_rank"]) - 1)
-        for r in merges.collect()  # ≤ n_merges rows — driver-bounded
-    ]
-    mtok = spark.createDataFrame(
-        mrows or [("", -1)], "token string, token_id long"
+    mtok = local_frame(
+        spark,
+        [
+            (r["merged"], b + int(r["merge_rank"]) - 1)
+            for r in merges.collect()  # ≤ n_merges rows — driver-bounded
+        ],
+        "token string, token_id long",
     )
-    if not mrows:
-        mtok = mtok.filter(F.lit(False))
     return (
         cid.unionByName(mtok)
         .groupBy("token")

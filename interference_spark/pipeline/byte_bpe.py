@@ -210,9 +210,10 @@ def byte_bpe_train(
     """Train byte-level BPE merges: the byte word table through the
     shared ``bpe.train_from_words`` loop (ranks, exact-BIGINT counts,
     count DESC / left ASC / right ASC tie-break, symbol-disjoint
-    batching, localCheckpoint lineage truncation — all identical to the
-    character-level trainer, so the SQL oracle unrolls the same way).
-    Returns ``(merges, words)``."""
+    batching, the driver loop up to ``pipeline.DRIVER_COLLECT_CAP``
+    pre-tokens and the localCheckpoint-truncated Spark loop above it —
+    all identical to the character-level trainer, so the SQL oracle
+    unrolls the same way).  Returns ``(merges, words)``."""
     from .bpe import train_from_words
 
     return train_from_words(
@@ -228,8 +229,10 @@ def byte_bpe_vocab(merges: DataFrame) -> DataFrame:
     needed, unlike the character-level ``bpe_vocab``), merges take
     ``256 + merge_rank - 1``; a merged string that collides (two rule
     pairs can concatenate to the same string) keeps the smallest id."""
-    spark = merges.sparkSession
-    base = spark.createDataFrame(
+    from . import local_frame
+
+    base = local_frame(
+        merges.sparkSession,
         [(c, b) for b, c in sorted(bytes_to_unicode().items())],
         "token string, token_id long",
     )

@@ -59,23 +59,10 @@ folds are order-pinned left folds.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _UNK = "[UNK]"
-
-# Driver-traffic cap for the one-collect training round: the fused
-# symbol+pair count table is collected whole when it holds at most this
-# many rows (~3 MB of narrow rows), and the score/argmax run in pure
-# Python — bit-identical to the distributed plan because every op is an
-# exactly-rounded IEEE double op (long→double cast, one multiply, one
-# divide) and Python str comparison is code-point order, which equals
-# Spark's UTF8String binary order (UTF-8 preserves code-point order).
-# Above the cap the round falls back to the distributed two-collect
-# plan, so driver traffic stays bounded at any scale.
-_FUSED_COLLECT_CAP = 65536
-
 
 def _best_pair(
     scnt: dict[str, int], pairs: list[tuple[str, str, int]]
@@ -84,8 +71,11 @@ def _best_pair(
     WordPiece round, computed on the driver: maximize
     ``cnt / (scnt[l] · scnt[r])`` with ties broken by ascending ``l``
     then ``r`` — the exact total order of the distributed
-    ``orderBy(desc(score), asc(l), asc(r)).limit(1)`` it replaces (same
-    IEEE doubles, same string order; see ``_FUSED_COLLECT_CAP``)."""
+    ``orderBy(desc(score), asc(l), asc(r)).limit(1)`` it replaces: every
+    op is an exactly-rounded IEEE double op (long→double cast, one
+    multiply, one divide), and Python str comparison is code-point order,
+    which equals Spark's UTF8String binary order (UTF-8 preserves
+    code-point order)."""
 
     def key(p: tuple[str, str, int]):
         l, r, cnt = p
@@ -192,14 +182,21 @@ def wordpiece_train(
 
     Returns ``(merges, words)``: ``merges`` is the learned rule table
     ``(merge_rank, left, right, merged, pair_count, left_count,
-    right_count, score)`` built on the driver from one top row per
-    iteration (the driver never holds data); ``words`` the final
-    segmented word table ``(word, freq, sym)``.  Iterative-algorithm
-    shape identical to ``bpe_train``: each round's word table is
-    ``localCheckpoint``-materialized so plan depth stays O(1) (persist
-    would keep the full fold lineage — the driver goes quadratic
-    re-rendering plans; measured in ``bpe_train``'s in-loop comment)."""
-    from . import iterative_stage_conf, register_cache
+    right_count, score)``, an Arrow local relation built on the driver
+    from one winning row per iteration; ``words`` the final segmented
+    word table ``(word, freq, sym)``.  A round's fused count table up to
+    ``pipeline.DRIVER_COLLECT_CAP`` rows is held on the driver for the
+    argmax; above it only the symbol counts and the top row are.  Each
+    round's word table is ``localCheckpoint``-materialized so plan depth
+    stays O(1) (persist would keep the full fold lineage — the driver
+    goes quadratic re-rendering plans; measured in ``bpe_train``'s Spark
+    loop)."""
+    from . import (
+        DRIVER_COLLECT_CAP,
+        iterative_stage_conf,
+        local_frame,
+        register_cache,
+    )
     from .text import _qstr
 
     spark = docs.sparkSession
@@ -211,25 +208,34 @@ def wordpiece_train(
         # Ledgered: training that stops before its first merge returns
         # this very table, so only release_caches() can free it.
         cur = register_cache(wordpiece_word_table(docs, text_col))
+        over_cap = False
         for rank in range(1, n_merges + 1):
             # ONE pass over the word table computes symbol and pair counts
             # together (r12; before: the symbol-count subtree was evaluated
             # TWICE under the two broadcast joins plus a third pass for pair
             # counts — 4 word-table passes and 4 jobs per round).  The fused
-            # table is vocabulary²-bounded; when it fits the driver cap the
-            # whole table comes back in ONE collect and the score/argmax run
-            # in pure Python, bit-identical to the distributed plan (see
-            # ``_best_pair``) — one job per round instead of two plus a
-            # persist.  Above the cap the round falls back to the
-            # distributed plan: persist the fused table, bring only the
-            # vocab-SIZED symbol counts to the driver (the same
-            # bounded-driver-traffic contract as the 1-row argmax), re-enter
-            # them into the pair scoring as one parsed map literal — or,
-            # above a plan-size guard, as a broadcast-joined local table —
-            # in both cases the same exact BIGINTs the join produced, so
-            # the score doubles are bit-identical.
-            probe = _fused_counts(cur).limit(_FUSED_COLLECT_CAP + 1).collect()
-            if len(probe) <= _FUSED_COLLECT_CAP:
+            # table is vocabulary²-bounded.  When it fits
+            # ``DRIVER_COLLECT_CAP`` the probe IS the whole table and the
+            # score/argmax run in pure Python, bit-identical to the
+            # distributed plan (see ``_best_pair``).  Above the cap the
+            # round runs the distributed plan: bring only the vocab-SIZED
+            # symbol counts to the driver (the same bounded-driver-traffic
+            # contract as the 1-row argmax), re-enter them into the pair
+            # scoring as one parsed map literal — or, above a plan-size
+            # guard, as a broadcast-joined local table — in both cases the
+            # same exact BIGINTs the join produced, so the score doubles
+            # are bit-identical.  The fused table is persisted BEFORE the
+            # probe once a round has come back over the cap, so the probe
+            # and the distributed plan share one computation of it; under
+            # the cap the persist would only add AQE's cache-materializing
+            # job to every round (sf0.001, 8 merges: 26 -> 34 jobs).
+            fused = _fused_counts(cur)
+            if over_cap:
+                fused.persist()
+            probe = fused.limit(DRIVER_COLLECT_CAP + 1).collect()
+            over_cap = len(probe) > DRIVER_COLLECT_CAP
+            if not over_cap:
+                fused.unpersist()
                 scnt = {
                     r["a"]: int(r["cnt"]) for r in probe if r["k"] == "s"
                 }
@@ -242,7 +248,8 @@ def wordpiece_train(
                     break
                 l, r_, cnt, lcnt, rcnt, sc = _best_pair(scnt, pairs)
             else:
-                fused = _fused_counts(cur).persist()
+                if not fused.is_cached:
+                    fused.persist()
                 scnt = {
                     r["a"]: int(r["cnt"])
                     for r in fused.filter(F.col("k") == "s").collect()
@@ -263,15 +270,8 @@ def wordpiece_train(
                     )
                 else:
                     sdf = F.broadcast(
-                        spark.createDataFrame(
-                            pd.DataFrame(
-                                {
-                                    "tok": list(scnt),
-                                    "scnt": pd.Series(
-                                        list(scnt.values()), dtype="int64"
-                                    ),
-                                }
-                            )
+                        local_frame(
+                            spark, list(scnt.items()), "tok string, scnt long"
                         )
                     )
                     looked = (
@@ -312,7 +312,8 @@ def wordpiece_train(
             ).localCheckpoint(eager=True)
             cur.unpersist()
             cur = nxt
-    merges = spark.createDataFrame(
+    merges = local_frame(
+        spark,
         rules,
         "merge_rank long, left string, right string, merged string, "
         "pair_count long, left_count long, right_count long, score double",

@@ -130,27 +130,37 @@ def _bpe_py(corpus: list[str], n_merges: int):
     return rules, segs
 
 
+@pytest.mark.parametrize("path", ["driver", "spark_loop"])
 @given(corpus=corpus_strategy, n_merges=st.integers(1, 5))
 @FUZZ
-def test_byte_bpe_train_matches_python_spec(spark, corpus, n_merges):
+def test_byte_bpe_train_matches_python_spec(spark, path, corpus, n_merges):
+    """Both training paths — the driver loop, and the Spark loop with
+    the cap lowered to 0 — equal the Python replica."""
+    from interference_spark import pipeline
     from interference_spark.pipeline.byte_bpe import byte_bpe_train
 
     rules, segs = _bpe_py(corpus, n_merges)
-    merges, words = byte_bpe_train(_df(spark, corpus), n_merges=n_merges)
-    got_rules = [
-        (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
-        for r in merges.orderBy("merge_rank").collect()
-    ]
-    got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if path == "spark_loop":
+            mp.setattr(pipeline, "DRIVER_COLLECT_CAP", 0)
+        merges, words = byte_bpe_train(_df(spark, corpus), n_merges=n_merges)
+        got_rules = [
+            (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
+            for r in merges.orderBy("merge_rank").collect()
+        ]
+        got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
     assert got_rules == rules, (corpus, n_merges)
     assert got_segs == segs, (corpus, n_merges)
 
 
+@pytest.mark.parametrize("path", ["driver", "spark_loop"])
 @given(corpus=corpus_strategy, n_merges=st.integers(0, 5))
 @FUZZ
-def test_round_trip_exact(spark, corpus, n_merges):
+def test_round_trip_exact(spark, path, corpus, n_merges):
     """decode(encode(x)) == x EXACTLY for arbitrary mixed-class text —
-    whitespace runs, tabs, newlines, and multi-byte UTF-8 included."""
+    whitespace runs, tabs, newlines, and multi-byte UTF-8 included — with
+    the tokenizer trained on either path."""
+    from interference_spark import pipeline
     from interference_spark.pipeline.byte_bpe import (
         byte_bpe_decode,
         byte_bpe_encode,
@@ -159,9 +169,12 @@ def test_round_trip_exact(spark, corpus, n_merges):
     )
 
     docs = _df(spark, corpus)
-    merges, words = byte_bpe_train(docs, n_merges=n_merges)
-    enc = byte_bpe_encode(docs, words, byte_bpe_vocab(merges))
-    got = {r.doc_id: r.text for r in byte_bpe_decode(enc).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if path == "spark_loop":
+            mp.setattr(pipeline, "DRIVER_COLLECT_CAP", 0)
+        merges, words = byte_bpe_train(docs, n_merges=n_merges)
+        enc = byte_bpe_encode(docs, words, byte_bpe_vocab(merges))
+        got = {r.doc_id: r.text for r in byte_bpe_decode(enc).collect()}
     assert got == dict(enumerate(corpus)), corpus
 
 

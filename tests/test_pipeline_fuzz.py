@@ -251,13 +251,16 @@ def test_remove_cross_corpus_substrings_matches_python_spec(spark, a, b, k):
     assert got == want
 
 
+@pytest.mark.parametrize("path", ["driver", "spark_loop"])
 @given(corpus=corpus_strategy, k=st.integers(1, 4), n_merges=st.integers(1, 6))
 @FUZZ
-def test_bpe_batched_matches_python_spec(spark, corpus, k, n_merges):
+def test_bpe_batched_matches_python_spec(spark, path, corpus, k, n_merges):
     """Random corpora, batch sizes, and budgets: bpe_train's batched
     schedule must reproduce the driver-side replica of the gated
     symbol-disjoint spec (same selection, same counts, same final
-    segmentations)."""
+    segmentations) — on the driver path and on the Spark loop (cap
+    lowered to 0)."""
+    from interference_spark import pipeline
     from interference_spark.pipeline.bpe import bpe_train, select_disjoint
 
     freqs = {}
@@ -296,14 +299,17 @@ def test_bpe_batched_matches_python_spec(spark, corpus, k, n_merges):
                         out.append(x)
                 segs[w] = out
 
-    merges, words = bpe_train(
-        _df(spark, corpus), n_merges=n_merges, merges_per_round=k
-    )
-    got_rules = [
-        (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
-        for r in merges.orderBy("merge_rank").collect()
-    ]
-    got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if path == "spark_loop":
+            mp.setattr(pipeline, "DRIVER_COLLECT_CAP", 0)
+        merges, words = bpe_train(
+            _df(spark, corpus), n_merges=n_merges, merges_per_round=k
+        )
+        got_rules = [
+            (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
+            for r in merges.orderBy("merge_rank").collect()
+        ]
+        got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
     assert got_rules == rules, (corpus, k, n_merges)
     assert got_segs == segs, (corpus, k, n_merges)
 

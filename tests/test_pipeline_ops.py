@@ -1505,12 +1505,14 @@ def _ref_bpe_batched(word_freqs, n_merges, k):
     return rules, segs
 
 
-def test_bpe_batched_matches_replica(spark):
+def test_bpe_batched_matches_replica(spark, monkeypatch):
     """merges_per_round=k must reproduce the driver-side replica of the
     batched spec rule for rule, and k=1 must stay bit-identical to
-    textbook sequential BPE (the oracle contract)."""
+    textbook sequential BPE (the oracle contract) — on both training
+    paths: the driver loop, and the Spark loop (cap lowered to 0)."""
     import random
 
+    from interference_spark import pipeline
     from interference_spark.pipeline.bpe import bpe_train, select_disjoint
 
     rng = random.Random(11)
@@ -1542,15 +1544,18 @@ def test_bpe_batched_matches_replica(spark):
         assert _ref_bpe_batched(freqs, 6, 1) == _ref_bpe(freqs, 6)
         for k in (2, 3):
             want_rules, want_segs = _ref_bpe_batched(freqs, 6, k)
-            merges, words = bpe_train(df, n_merges=6, merges_per_round=k)
-            got_rules = [
-                (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
-                for r in merges.orderBy("merge_rank").collect()
-            ]
-            assert got_rules == want_rules, (docs, k)
-            got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
-            assert got_segs == want_segs, (docs, k)
-        
+            for cap in (pipeline.DRIVER_COLLECT_CAP, 0):
+                monkeypatch.setattr(pipeline, "DRIVER_COLLECT_CAP", cap)
+                merges, words = bpe_train(df, n_merges=6, merges_per_round=k)
+                got_rules = [
+                    (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
+                    for r in merges.orderBy("merge_rank").collect()
+                ]
+                assert got_rules == want_rules, (docs, k, cap)
+                got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
+                assert got_segs == want_segs, (docs, k, cap)
+            monkeypatch.undo()
+
     # disjointness blocks shared symbols AND freshly merged tokens
     cand = [("a", "b", 9), ("b", "c", 8), ("ab", "x", 7), ("c", "d", 6)]
     assert select_disjoint(cand, 3) == [("a", "b", 9), ("c", "d", 6)]
@@ -1634,11 +1639,13 @@ def test_select_exact_prefix_bit_identical_fuzz():
         assert got[1] == want[1], (trial, docs, n_merges, cap)
 
 
-def test_bpe_train_matches_reference(spark):
-    """The distributed BPE (JVM fold + pair-count shuffle + 1-row argmax)
-    must reproduce a driver-side textbook implementation rule for rule —
-    including greedy-leftmost runs (aaaa + (a,a) -> [aa, aa]) and the
-    deterministic tie-break."""
+def test_bpe_train_matches_reference(spark, monkeypatch):
+    """Both BPE training paths — the driver loop and the distributed one
+    (JVM fold + pair-count shuffle + top-window argmax, reached by
+    lowering the cap to 0) — must reproduce a driver-side textbook
+    implementation rule for rule, including greedy-leftmost runs
+    (aaaa + (a,a) -> [aa, aa]) and the deterministic tie-break."""
+    from interference_spark import pipeline
     from interference_spark.pipeline.bpe import bpe_train, subword_stats
 
     docs = [
@@ -1655,22 +1662,24 @@ def test_bpe_train_matches_reference(spark):
         for w in t.split():
             freqs[w] = freqs.get(w, 0) + 1
     want_rules, want_segs = _ref_bpe(freqs, 6)
-
-    merges, words = bpe_train(df, n_merges=6)
-    got_rules = [
-        (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
-        for r in merges.orderBy("merge_rank").collect()
-    ]
-    assert got_rules == want_rules
-    got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
-    assert got_segs == want_segs
-
-    stats = {r.lang: r for r in subword_stats(df, words).collect()}
     n_tok = sum(freqs.values())
     n_sub = sum(len(want_segs[w]) * f for w, f in freqs.items())
-    assert stats["en"].n_tokens == n_tok
-    assert stats["en"].n_subwords == n_sub
-    assert stats["en"].subwords_per_token == n_sub / n_tok
+
+    for cap in (pipeline.DRIVER_COLLECT_CAP, 0):
+        monkeypatch.setattr(pipeline, "DRIVER_COLLECT_CAP", cap)
+        merges, words = bpe_train(df, n_merges=6)
+        got_rules = [
+            (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
+            for r in merges.orderBy("merge_rank").collect()
+        ]
+        assert got_rules == want_rules, cap
+        got_segs = {r.word: r.sym.split(" ") for r in words.collect()}
+        assert got_segs == want_segs, cap
+
+        stats = {r.lang: r for r in subword_stats(df, words).collect()}
+        assert stats["en"].n_tokens == n_tok
+        assert stats["en"].n_subwords == n_sub
+        assert stats["en"].subwords_per_token == n_sub / n_tok
 
 
 def test_token_budget_mix(spark):
@@ -3497,14 +3506,20 @@ def test_gumbel_topk_select_seeded_and_weight_sensitive(spark):
 
 @pytest.mark.parametrize("n_chars", [12, 2600])
 def test_wordpiece_over_cap_fallback_matches_fused(spark, monkeypatch, n_chars):
-    """Above ``_FUSED_COLLECT_CAP`` a round takes the distributed plan
-    (persisted fused counts, symbol counts re-entered as a map literal,
-    or as a broadcast-joined table above 4096 symbols).  With the cap
-    lowered to a few rows, both fallbacks learn the same merge table as
-    the under-cap driver argmax, row for row and score double for score
-    double, and leave the same segmentations."""
+    """Above ``pipeline.DRIVER_COLLECT_CAP`` a round takes the distributed
+    plan (persisted fused counts, symbol counts re-entered as a map
+    literal, or as a broadcast-joined table above 4096 symbols).  With
+    the cap lowered to a few rows, both fallbacks learn the same merge
+    table as the under-cap driver argmax, row for row and score double
+    for score double, and leave the same segmentations.  Once a round has
+    come back over the cap, the next round's probe reads the persisted
+    fused table, so the distributed plan does not compute it again: a
+    later over-cap round runs 6 jobs (7 with the broadcast lookup) —
+    fused-count shuffle, cache materialization, probe, symbol counts,
+    argmax, checkpoint — where recomputing the table ran one more."""
     import numpy as np
 
+    from interference_spark import pipeline
     from interference_spark.pipeline import wordpiece
 
     rng = np.random.default_rng(5)
@@ -3526,22 +3541,27 @@ def test_wordpiece_over_cap_fallback_matches_fused(spark, monkeypatch, n_chars):
     segs0 = [[w[0]] + ["##" + c for c in w[1:]] for w in set(words)]
     syms = {t for seg in segs0 for t in seg}
     pairs = {(a, b) for seg in segs0 for a, b in zip(seg, seg[1:])}
-    assert len(syms) + len(pairs) <= wordpiece._FUSED_COLLECT_CAP
+    assert len(syms) + len(pairs) <= pipeline.DRIVER_COLLECT_CAP
     if n_chars > 100:
         assert len(syms) > 4096  # the broadcast-join lookup, not the map
+    sc = spark.sparkContext._jsc.sc()
 
-    def train():
-        merges, segs = wordpiece.wordpiece_train(docs, n_merges=3)
+    def train(n_merges=3):
+        first = int(sc.dagScheduler().nextJobId())
+        merges, segs = wordpiece.wordpiece_train(docs, n_merges=n_merges)
+        jobs = int(sc.dagScheduler().nextJobId()) - first
         return (
             [tuple(r) for r in merges.orderBy("merge_rank").collect()],
             sorted(map(tuple, segs.select("word", "sym").collect())),
-        )
+        ), jobs
 
-    fused = train()
-    monkeypatch.setattr(wordpiece, "_FUSED_COLLECT_CAP", 4)
-    fallback = train()
+    fused, _ = train()
+    monkeypatch.setattr(pipeline, "DRIVER_COLLECT_CAP", 4)
+    fallback, jobs3 = train()
     assert len(fused[0]) == 3
     assert fallback == fused
+    _, jobs2 = train(n_merges=2)
+    assert jobs3 - jobs2 == 6 + (n_chars > 100), (jobs2, jobs3)
 
 
 def test_wordpiece_argmax_is_likelihood_gain_not_frequency(spark):
@@ -3827,12 +3847,17 @@ def test_lit_arrays_match_lit_loop_on_edge_values(spark):
         assert df.first().a == ints
 
 
-def test_word_table_released_when_training_stops_before_first_merge(spark):
-    """Zero merges, or a first pair count that comes back empty, return
-    the persisted initial word table itself; release_caches() must free
-    it.  Delta-based like the ledger plan lint: earlier tests in the
-    session may leave localCheckpoint blocks, so the assertion is that
-    no RDD these runs persisted survives the release."""
+def test_word_table_released_when_training_stops_before_first_merge(
+    spark, monkeypatch
+):
+    """Zero merges, or a first pair count that comes back empty: below
+    the cap BPE learns on the driver and persists nothing; above it (cap
+    lowered to 0) BPE, like WordPiece, returns the persisted initial word
+    table itself, and release_caches() must free it.  Delta-based like
+    the ledger plan lint: earlier tests in the session may leave
+    localCheckpoint blocks, so the assertion is that no RDD these runs
+    persisted survives the release."""
+    from interference_spark import pipeline
     from interference_spark.pipeline import release_caches
     from interference_spark.pipeline.bpe import bpe_train
     from interference_spark.pipeline.wordpiece import wordpiece_train
@@ -3850,10 +3875,95 @@ def test_word_table_released_when_training_stops_before_first_merge(spark):
     single = spark.createDataFrame([(1, "a b a")], "doc_id long, text string")
     for _merges, words in (
         bpe_train(df, n_merges=0),
-        wordpiece_train(df, n_merges=0),
         bpe_train(single, n_merges=3),  # no pair: stops on the first count
+    ):
+        assert words.count() in (2, 3)
+    assert persisted() - pre == set(), "the driver path persists nothing"
+
+    monkeypatch.setattr(pipeline, "DRIVER_COLLECT_CAP", 0)
+    for _merges, words in (
+        bpe_train(df, n_merges=0),
+        wordpiece_train(df, n_merges=0),
+        bpe_train(single, n_merges=3),
     ):
         words.count()
     assert persisted() - pre, "the runs should have cached their word tables"
     release_caches(blocking=True)
     assert persisted() - pre == set()
+
+
+def test_bpe_training_below_the_cap_leaves_no_blocks(spark):
+    """Below the cap, BPE and byte-level BPE training leave no cached or
+    checkpointed blocks: after five runs of each, with every result still
+    referenced (so Spark's ContextCleaner cannot have freed anything),
+    neither the persisted-RDD map nor the RDD storage info holds an RDD
+    these runs made.  The Spark loop leaves a ``localCheckpoint`` block
+    set per merge round; that leak above the cap is still open."""
+    from interference_spark.pipeline.bpe import bpe_train
+    from interference_spark.pipeline.byte_bpe import byte_bpe_train
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def held() -> tuple[set, set]:
+        it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        infos = sc.getRDDStorageInfo()
+        return ids, {infos[i].id() for i in range(len(infos))}
+
+    pre_ids, pre_info = held()
+    df = spark.createDataFrame(
+        [(1, "low low lower newest"), (2, "widest newest aaaa"), (3, "é ab ab")],
+        "doc_id long, text string",
+    )
+    kept = []
+    for n in range(1, 6):
+        for train in (bpe_train, byte_bpe_train):
+            merges, words = train(df, n_merges=n)
+            assert merges.count() == n and words.count() > 0
+            kept.append((merges, words))
+    ids, info = held()
+    assert ids - pre_ids == set()
+    assert info - pre_info == set()
+
+
+def test_local_frame_is_a_zero_job_local_relation(spark):
+    """``pipeline.local_frame`` keeps values exactly (null long, NaN and
+    -0.0 doubles, arrays with nulls, empty input) and builds a
+    ``LocalRelation``: collecting it runs no Spark job, so a silent
+    fallback to a plain-list ``createDataFrame`` would fail here."""
+    import math
+
+    from interference_spark.pipeline import local_frame
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs(step):
+        first = int(sc.dagScheduler().nextJobId())
+        out = step()
+        return int(sc.dagScheduler().nextJobId()) - first, out
+
+    rows = [
+        (1, "a", float("nan"), [1.5, -0.0, None]),
+        (None, "é", -0.0, None),
+        (-(2**63), None, float("-inf"), []),
+    ]
+    df = local_frame(spark, rows, "n long, s string, d double, v array<double>")
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    n, got = jobs(df.collect)
+    assert n == 0
+    assert [r.n for r in got] == [1, None, -(2**63)]
+    assert [r.s for r in got] == ["a", "é", None]
+    assert math.isnan(got[0].d) and got[2].d == float("-inf")
+    assert got[1].d == 0.0 and math.copysign(1.0, got[1].d) == -1.0
+    assert got[0].v[:2] == [1.5, 0.0] and got[0].v[2] is None
+    assert math.copysign(1.0, got[0].v[1]) == -1.0
+    assert got[1].v is None and got[2].v == []
+
+    empty = local_frame(spark, [], "token string, token_id long")
+    assert empty.columns == ["token", "token_id"]
+    assert jobs(empty.collect) == (0, [])
+    big = local_frame(spark, [(i, str(i)) for i in range(65536)], "a long, b string")
+    n, got = jobs(big.collect)
+    assert n == 0 and len(got) == 65536 and got[-1] == (65535, "65535")

@@ -249,20 +249,25 @@ def test_clean_repeated_passages_plan(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_bpe_encode_vocab_is_build_side(spark):
+def test_bpe_encode_vocab_is_build_side(spark, monkeypatch):
     """The vocab join must build on the (alphabet+merges-sized) vocab —
-    pinned by hint so a small corpus slice can't flip it."""
+    pinned by hint so a small corpus slice can't flip it — whether the
+    tokenizer was trained on the driver (local-relation outputs) or by
+    the Spark loop (cap lowered to 0)."""
+    from interference_spark import pipeline
     from interference_spark.pipeline.bpe import bpe_encode, bpe_train, bpe_vocab
 
     df = spark.createDataFrame(
         [(1, "low lower newest"), (2, "low widest aaaa")],
         "doc_id long, text string",
     )
-    merges, words = bpe_train(df, n_merges=2)
-    enc = bpe_encode(df, words, bpe_vocab(merges, words))
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    lines = [ln for ln in plan.splitlines() if "BroadcastHashJoin [token" in ln]
-    assert lines and all("BuildRight" in ln for ln in lines), plan[:3000]
+    for cap in (pipeline.DRIVER_COLLECT_CAP, 0):
+        monkeypatch.setattr(pipeline, "DRIVER_COLLECT_CAP", cap)
+        merges, words = bpe_train(df, n_merges=2)
+        enc = bpe_encode(df, words, bpe_vocab(merges, words))
+        plan = enc._jdf.queryExecution().executedPlan().toString()
+        lines = [ln for ln in plan.splitlines() if "BroadcastHashJoin [token" in ln]
+        assert lines and all("BuildRight" in ln for ln in lines), (cap, plan[:3000])
 
 
 def test_perplexity_lm_plan(spark):
@@ -597,10 +602,12 @@ def test_select_dsir_gumbel_plan_is_partial_topk(spark):
     assert "CartesianProduct" not in plan, plan[:2000]
 
 
-def test_byte_bpe_encode_plan_shape(spark):
+def test_byte_bpe_encode_plan_shape(spark, monkeypatch):
     """Byte-level encode: no Window node (positions come from the
     per-document regroup — the r9 reshape), the vocab join builds on
-    the broadcast vocab, and everything stays JVM-side."""
+    the broadcast vocab, and everything stays JVM-side — on both
+    training paths (driver, and the Spark loop with the cap at 0)."""
+    from interference_spark import pipeline
     from interference_spark.pipeline.byte_bpe import (
         byte_bpe_encode,
         byte_bpe_train,
@@ -608,15 +615,17 @@ def test_byte_bpe_encode_plan_shape(spark):
     )
 
     docs = inventory.engine_for(spark, SF_DIR).table("documents")
-    merges, words = byte_bpe_train(docs.limit(50), n_merges=2)
-    enc = byte_bpe_encode(docs.limit(50), words, byte_bpe_vocab(merges))
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan[:2000]
-    assert "Python" not in plan and "Arrow" not in plan, plan[:2000]
-    lines = [
-        ln for ln in plan.splitlines() if "BroadcastHashJoin [token" in ln
-    ]
-    assert lines and all("BuildRight" in ln for ln in lines), plan[:3000]
+    for cap in (pipeline.DRIVER_COLLECT_CAP, 0):
+        monkeypatch.setattr(pipeline, "DRIVER_COLLECT_CAP", cap)
+        merges, words = byte_bpe_train(docs.limit(50), n_merges=2)
+        enc = byte_bpe_encode(docs.limit(50), words, byte_bpe_vocab(merges))
+        plan = enc._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, (cap, plan[:2000])
+        assert "Python" not in plan and "Arrow" not in plan, (cap, plan[:2000])
+        lines = [
+            ln for ln in plan.splitlines() if "BroadcastHashJoin [token" in ln
+        ]
+        assert lines and all("BuildRight" in ln for ln in lines), (cap, plan[:3000])
 
 
 def test_stream_backoff_counts_plan_is_combiner_friendly(spark):

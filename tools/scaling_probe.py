@@ -157,26 +157,33 @@ def _line_docs(spark, n: int, lines: int = 8, words_per_line: int = 6):
 
 def probe_bpe_merges(
     spark, merge_counts: list[int], merges_per_round: int = 32,
-    n_docs: int = 100_000,
+    n_docs: int = 100_000, path: str = "auto",
 ) -> dict:
     """Round-count scaling of batched BPE training: fixed corpus, growing
     n_merges.  Near-linear sec-vs-merges slope (and rounds ~= merges/k)
     is the evidence that merges_per_round removes the per-merge
-    sequential-job ceiling."""
+    sequential-job ceiling.  ``path`` picks the training loop: ``auto``
+    (the library's choice: the driver loop when the word table fits
+    ``pipeline.DRIVER_COLLECT_CAP``), ``driver`` (cap raised above the
+    table) or ``spark_loop`` (cap lowered to 0).  Rounds are counted at
+    ``bpe.select_round``, which both loops call once per round."""
+    import interference_spark.pipeline as pipeline_mod
     import interference_spark.pipeline.bpe as bpe_mod
 
     docs = _rich_docs(spark, n_docs).persist()
     docs.count()
     out: dict[int, dict] = {}
-    orig = bpe_mod._pair_counts
+    orig, orig_cap = bpe_mod.select_round, pipeline_mod.DRIVER_COLLECT_CAP
+    cap = {"auto": orig_cap, "driver": 2**31 - 2, "spark_loop": 0}[path]
     for nm in merge_counts:
         rounds = {"n": 0}
 
-        def counted(words):
+        def counted(*a, **kw):
             rounds["n"] += 1
-            return orig(words)
+            return orig(*a, **kw)
 
-        bpe_mod._pair_counts = counted
+        bpe_mod.select_round = counted
+        pipeline_mod.DRIVER_COLLECT_CAP = cap
         try:
             t0 = time.perf_counter()
             merges, words = bpe_mod.bpe_train(
@@ -190,8 +197,9 @@ def probe_bpe_merges(
                 "learned": int(learned),
             }
         finally:
-            bpe_mod._pair_counts = orig
-        print(f"bpe_merges {nm}: {out[nm]}", flush=True)
+            bpe_mod.select_round = orig
+            pipeline_mod.DRIVER_COLLECT_CAP = orig_cap
+        print(f"bpe_merges {path} {nm}: {out[nm]}", flush=True)
         spark.catalog.clearCache()
     docs.unpersist()
     return out
@@ -1630,9 +1638,10 @@ def main() -> None:
         print(json.dumps({"dsir_auto": probe_dsir_auto(spark, n_docs, vocab)}))
         spark.stop()
         return
-    if args and args[0] == "--bpe-merges":  # --bpe-merges 128,512,1024 [k]
+    if args and args[0] == "--bpe-merges":  # --bpe-merges 128,512,1024 [k [path]]
         counts = [int(c) for c in args[1].split(",")]
         k = int(args[2]) if len(args) > 2 else 32
+        path = args[3] if len(args) > 3 else "auto"
         spark = build_spark(
             app_name="scaling-probe",
             master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count() or 8)}]",
@@ -1641,8 +1650,8 @@ def main() -> None:
             ),
             extra_conf={"spark.driver.memory": "48g"},
         )
-        res = probe_bpe_merges(spark, counts, merges_per_round=k)
-        print(json.dumps({"merges_per_round": k, "bpe_merges": res}))
+        res = probe_bpe_merges(spark, counts, merges_per_round=k, path=path)
+        print(json.dumps({"merges_per_round": k, "path": path, "bpe_merges": res}))
         spark.stop()
         return
     if args and args[0] == "--substring-skew":  # [sizes, default 100k,1M]
