@@ -16,16 +16,6 @@ from pyspark.sql import functions as F
 from .catalog import Catalog, TableDef
 
 
-def _path_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def build_spark(
     app_name: str = "interference_spark",
     master: str | None = None,

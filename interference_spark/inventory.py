@@ -5070,10 +5070,11 @@ def decontaminate_substring(spark, sf_dir):
     13-gram pass approximates: a corpus doc is contaminated when any eval
     snippet (here: the first 64 chars of each held-out doc, doc_id % 97)
     occurs at ANY character offset — no token boundary, no shingle
-    alignment.  Snippets broadcast; JVM Contains predicates in
-    whole-stage codegen; per-doc hit counts.  The Aho-Corasick variant
-    (one automaton pass per doc, pattern-count-independent — the 10⁵+
-    pattern scale path) is property-tested equal."""
+    alignment.  At this entry's snippet counts the operator picks the
+    broadcast contains join (JVM Contains predicates in whole-stage
+    codegen, per-doc hit counts); above ``SUBSTRING_CONTAINS_MAX``
+    snippets it runs Aho-Corasick (one automaton pass per doc), which is
+    property-tested equal."""
     from .pipeline.text import substring_decontaminate
 
     e = engine_for(spark, sf_dir)

@@ -143,21 +143,24 @@ def _hex_to_char() -> tuple[tuple[str, str], ...]:
     )
 
 
+def _literal_map(pairs) -> Column:
+    """A string → string literal map built by ONE ``F.expr`` parse (one
+    py4j round trip instead of one ``F.lit`` per key and per value)."""
+    from .text import _qstr
+
+    body = ", ".join(f"{_qstr(k)}, {_qstr(v)}" for k, v in pairs)
+    return F.expr(f"map({body})")
+
+
 def _hex_map() -> Column:
     """256-entry literal map hex-pair → stand-in char (constant;
     evaluated against vocab-sized tables, not the corpus)."""
-    items: list[Column] = []
-    for hx, c in _hex_to_char():
-        items += [F.lit(hx), F.lit(c)]
-    return F.create_map(*items)
+    return _literal_map(_hex_to_char())
 
 
 def _char_to_hex_map() -> Column:
     """The inverse literal map, for decode."""
-    items: list[Column] = []
-    for hx, c in _hex_to_char():
-        items += [F.lit(c), F.lit(hx)]
-    return F.create_map(*items)
+    return _literal_map((c, hx) for hx, c in _hex_to_char())
 
 
 def pre_tokens(col: Column, pretokenizer: str = "spec") -> Column:

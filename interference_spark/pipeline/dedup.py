@@ -10,9 +10,11 @@ Scale design (the point of each algorithm at 100 TB):
 * **simhash**       — 64-bit fingerprint; near-dup = Hamming ≤ k found by
                       pigeonhole banding (k/4-bit exact-match buckets),
                       verified with ``bit_count(xor)`` JVM-side.
-* **ngram jaccard** — exact verification path: explode distinct n-grams,
-                      self-join per gram (the classic "inverted index join"),
-                      so cost is Σ posting-list², not n².
+* **ngram jaccard** — exact; the gram vocabulary picks the plan: a
+                      prefix-filtered set-similarity join (only each doc's
+                      rarest grams post candidates, so common grams never
+                      blow up Σ posting-list²), or bit-packed all-pairs
+                      popcount when the vocabulary is small.
 * **embedding**     — random-hyperplane LSH buckets, same-bucket verify
                       with quantized-integer cosine (deterministic on any
                       partitioning AND engine — oracle-reproducible).
@@ -43,12 +45,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
         .drop("__h")
     )
-
-
-def exact_dedup_keep(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """The deduplicated corpus itself (all columns, min-id winner)."""
-    keep = exact_dedup(df, text_col, id_col).select(id_col)
-    return df.join(keep, id_col, "left_semi")
 
 
 def incremental_dedup(
@@ -88,15 +84,6 @@ def _md5_32(s: str) -> int:
     """Stable 32-bit shingle/token hash (md5 low 4 bytes, little-endian;
     independent of PYTHONHASHSEED — DuckDB oracles recompute it in SQL)."""
     return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:4], "little")
-
-
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct k-word shingles → stable 32-bit hashes (kept for tests /
-    oracle generation; the hot path batches via ``_batch_codes``)."""
-    shingles = _doc_shingles(text, k)
-    return np.fromiter(
-        (_md5_32(s) for s in shingles), dtype=np.uint64, count=len(shingles)
-    )
 
 
 def _batch_codes(texts, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -565,30 +552,34 @@ def _guard_candidate_volume(
         )
 
 
+# Distinct-gram vocabulary up to which ngram_jaccard_pairs runs the
+# bit-packed all-pairs plan (broadcast side ≤ N × 8·⌈V/64⌉ bytes)
+BITMAP_VOCAB_CAP = 4096
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    prefix_filter: bool = True,
-    bitmap_vocab_cap: int = 4096,
     max_candidate_pairs: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs at or above ``threshold``.
 
-    Adaptive between two exact plans (identical output):
+    Two exact plans with identical output; the corpus picks one:
 
-    * **prefix-filtered set-similarity join** (default for real corpora —
-      the PPJoin/Vernica-style plan; cf. PAPERS.md "Distributed Streaming
-      Set Similarity Join", ICDE 2020): candidates are generated only from
-      each doc's |g| - ceil(t·|g|) + 1 *globally rarest* grams — any pair
+    * **prefix-filtered set-similarity join** when the vocabulary is
+      above ``BITMAP_VOCAB_CAP`` (real corpora; the PPJoin/Vernica-style
+      plan, cf. PAPERS.md "Distributed Streaming Set Similarity Join",
+      ICDE 2020): candidates are generated only from each doc's
+      |g| - ceil(t·|g|) + 1 *globally rarest* grams — any pair
       with Jaccard ≥ t provably shares one — plus a length filter
       (t·|a| ≤ |b| ≤ |a|/t) and the PPJoin positional filter, then exact
       ``array_intersect`` verification. LOSSLESS pruning that collapses
       the Σ(posting-list²) blowup on common grams.
     * **bit-packed all-pairs** when the corpus' distinct-gram vocabulary is
-      small (≤ ``bitmap_vocab_cap``): tiny vocabularies are exactly where
+      small (≤ ``BITMAP_VOCAB_CAP``): tiny vocabularies are exactly where
       prefix filtering provably cannot prune (every posting list is huge —
       measured: a 377-gram corpus makes 82% of ALL pairs candidates, and
       the true ≥t output is itself Θ(N²)), so the optimal plan is to make
@@ -597,12 +588,16 @@ def ngram_jaccard_pairs(
       popcount(a AND b) per pair in whole-stage codegen — exact set
       intersection, no hashing, no arrays of strings.
 
-    The one-row vocabulary count that picks the plan is a cheap first pass
-    (and the degenerate case it detects is data-dependent, not SF-dependent:
-    the switch holds at any corpus size).
-
-    ``prefix_filter=False`` keeps the naive full-posting join (cheaper at
-    tiny scale — no frequency pass).
+    One bounded read of the distinct grams (at most
+    ``BITMAP_VOCAB_CAP`` + 1) picks the plan and, when it fits, is the
+    bitmap plan's vocabulary.  The gram table is persisted through
+    ``register_cache`` (``release_caches()`` frees it) so the n-gram
+    transform runs once for the probe and the chosen plan.  The
+    degenerate case the probe detects is data-dependent, not
+    SF-dependent: the switch holds at any corpus size.  A naive
+    full-posting join (every gram's whole posting list self-joined)
+    finds the same pairs but was slower than the probe-picked plan in
+    every measurement (SCALING.md), so it is not offered.
 
     ``max_candidate_pairs`` (VERDICT r9 ask #3) is the runtime guard in
     the spirit of ``max_posting_len``: when set, whichever exact plan was
@@ -620,55 +615,22 @@ def ngram_jaccard_pairs(
             f"max_candidate_pairs must be >= 1, got {max_candidate_pairs}"
         )
 
-    if not prefix_filter:
-        exploded = grams.select(id_col, "n_grams", F.explode("grams").alias("g"))
-        if max_candidate_pairs is not None:
-            est = (
-                exploded.groupBy("g")
-                .count()
-                .agg(
-                    F.sum(
-                        F.col("count") * (F.col("count") - 1) / 2
-                    ).alias("pairs")
-                )
-                .first()["pairs"]
-            )
-            _guard_candidate_volume(
-                int(est or 0),
-                max_candidate_pairs,
-                "naive full-posting n-gram join",
-            )
-        l = exploded.select(
-            F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"), "g"
-        )
-        r = exploded.select(
-            F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"), "g"
-        )
-        inter = (
-            l.join(r, "g")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "na", "nb")
-            .agg(F.count("*").alias("inter"))
-        )
-        jac = F.col("inter").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("inter")
-        ).cast("double")
-        return (
-            inter.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    # gram arrays feed the plan-selection count AND whichever branch runs
+    # gram arrays feed the plan-selection read AND whichever branch runs
     # (index build + both verify sides, or the bitmap build) — persist
     # BEFORE branching so the expensive ngram transform runs once, not 3×
     # on the bitmap path
     from . import register_cache
 
     grams = register_cache(grams)
-    # plan selection: one cheap vocabulary-count pass (see docstring)
-    n_vocab = grams.select(F.explode("grams").alias("g")).distinct().count()
-    if n_vocab <= bitmap_vocab_cap:
+    # plan selection: one bounded vocabulary read (see docstring)
+    vocab = [
+        r["g"]
+        for r in grams.select(F.explode("grams").alias("g"))
+        .distinct()
+        .limit(BITMAP_VOCAB_CAP + 1)
+        .collect()
+    ]
+    if len(vocab) <= BITMAP_VOCAB_CAP:
         if max_candidate_pairs is not None:
             n_docs = grams.count()
             _guard_candidate_volume(
@@ -676,7 +638,7 @@ def ngram_jaccard_pairs(
                 max_candidate_pairs,
                 f"bit-packed all-pairs Jaccard over {n_docs:,} docs",
             )
-        return _bitmap_allpairs_jaccard(grams, id_col, threshold)
+        return _bitmap_allpairs_jaccard(grams, id_col, threshold, vocab)
 
     from pyspark.sql import Window as W
     exploded = grams.select(id_col, "n_grams", F.explode("grams").alias("g"))
@@ -753,23 +715,20 @@ def ngram_jaccard_pairs(
 
 
 def _bitmap_allpairs_jaccard(
-    grams: DataFrame, id_col: str, threshold: float
+    grams: DataFrame, id_col: str, threshold: float, vocab: list[str]
 ) -> DataFrame:
     """Exact all-pairs Jaccard for small-vocabulary corpora: pack each gram
     set into ⌈V/64⌉ int64 words (one vectorized Arrow batch pass), then a
     broadcast nested-loop self-join evaluates Σ bit_count(a AND b) per pair
     inside whole-stage codegen. Exact set semantics — the bit index IS the
-    gram identity, no hashing. Used only when V ≤ ``bitmap_vocab_cap``, so
+    gram identity, no hashing. Used only when V ≤ ``BITMAP_VOCAB_CAP``, so
     the broadcast side is ≤ N × (8·⌈V/64⌉) bytes of narrow rows; the output
     at thresholds where this plan wins is itself Θ(N²), so pair evaluation
-    — not candidate generation — is the optimal place to spend."""
+    — not candidate generation — is the optimal place to spend.
+    ``vocab`` is the corpus' distinct grams, in any order."""
     from . import ensure_parallelism
 
-    spark = grams.sparkSession
-    vocab = sorted(
-        r["g"] for r in grams.select(F.explode("grams").alias("g")).distinct().collect()
-    )
-    index = {g: i for i, g in enumerate(vocab)}
+    index = {g: i for i, g in enumerate(sorted(vocab))}
     n_words = (len(vocab) + 63) // 64
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -930,9 +889,7 @@ def jaccard_threshold_sweep(
         raise ValueError("thresholds must be non-empty")
     spark = df.sparkSession
     ts = sorted(float(t) for t in thresholds)
-    pairs = ngram_jaccard_pairs(
-        df, text_col, id_col, n=n, threshold=ts[0], prefix_filter=False
-    )
+    pairs = ngram_jaccard_pairs(df, text_col, id_col, n=n, threshold=ts[0])
     th = spark.createDataFrame([(t,) for t in ts], "threshold double")
     hit = pairs.crossJoin(F.broadcast(th)).filter(
         F.col("jaccard") >= F.col("threshold")
@@ -971,9 +928,7 @@ def cross_source_dup_matrix(
     re-crawls, cross-posted content) vs which only self-duplicate.
     Canonical ``source_a ≤ source_b`` orientation; output is bounded by
     the square of the source count, never the pair space."""
-    pairs = ngram_jaccard_pairs(
-        df, text_col, id_col, n=n, threshold=threshold, prefix_filter=False
-    )
+    pairs = ngram_jaccard_pairs(df, text_col, id_col, n=n, threshold=threshold)
     src = df.select(F.col(id_col), F.col(source_col))
     sa = src.select(
         F.col(id_col).alias("id_a"), F.col(source_col).alias("__sa")

@@ -9,13 +9,15 @@ Two tiers, as a 100 TB design demands:
   sort shuffle).
 * **IVF** — deterministic coarse quantizer: k-means centroids (fixed
   lowest-id init + distributed Lloyd rounds, no RNG anywhere), assignment
-  via one numpy matmul per Arrow batch; search probes only the ``nprobe``
-  nearest partitions.  At scale the assignment is written
-  partitioned-by-centroid so a query touches ~nprobe/k of the data.
+  scored with floor-quantized integer sums in an Arrow-batched pandas UDF;
+  search probes only the ``nprobe`` nearest partitions.  At scale the
+  assignment is written partitioned-by-centroid so a query touches
+  ~nprobe/k of the data.  Every score and mean is an integer sum turned
+  into a double by one division, so the index hash-matches a SQL oracle.
 
-An exact-decimal variant backs the DuckDB correctness oracle: float sums
-are order-dependent, so the oracle path accumulates exact decimals and only
-then converts to double — bit-identical across engines.
+An exact-decimal cosine top-k backs the DuckDB correctness oracle: float
+sums are order-dependent, so the oracle path accumulates exact decimals
+and only then converts to double — bit-identical across engines.
 """
 
 from __future__ import annotations
@@ -188,159 +190,6 @@ def quantized_cosine_topk(
         .orderBy(F.desc("qcos"), F.asc(id_col))
         .limit(k)
     )
-
-
-# ---------------------------------------------------------------- IVF
-def ivf_train(
-    df: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[tuple[int, list[float]]]:
-    """Distributed Lloyd iterations: init = the n lowest-id vectors
-    (reproducible, no RNG), then ``iters`` rounds of assign-(argmax
-    cosine)-and-average, entirely as DataFrame ops — the per-round shuffle
-    is (centroid, dim_pos) partial means, never vectors to the driver
-    (only the n_centroids × dim means are collected). Empty clusters keep
-    their previous centroid. Reproducible for a FIXED partitioning (what
-    the rows-only determinism check verifies); the float ``avg`` means can
-    differ at the last ulp across partitionings — use
-    :func:`ivf_train_exact` when cross-run/cross-engine bit-equality
-    matters."""
-    cents = [
-        (int(r[id_col]), [float(x) for x in r[vec_col]])
-        for r in df.orderBy(id_col).limit(n_centroids).collect()
-    ]
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    for _ in range(iters):
-        assigned = df.select(
-            _argmax_centroid(F.col(vec_col), cents).alias("centroid"),
-            F.posexplode(vec_d).alias("pos", "x"),
-        )
-        means = (
-            assigned.groupBy("centroid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_c: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_c.setdefault(r["centroid"], {})[r["pos"]] = r["m"]
-        cents = [
-            (
-                cid,
-                [by_c[cid][p] for p in sorted(by_c[cid])]
-                if cid in by_c
-                else old,
-            )
-            for cid, old in cents
-        ]
-    return cents
-
-
-def ivf_build(
-    df: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    train_iters: int = 2,
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Deterministic IVF index: k-means centroids (``ivf_train``);
-    assignment = argmax cosine. Returns (assignments DF with `centroid`
-    column, centroid list). At 100 TB: write assignments partitioned by
-    `centroid` so probing reads only matching partitions (partition
-    pruning)."""
-    cents = ivf_train(df, n_centroids, train_iters, vec_col, id_col)
-    assigned = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _argmax_centroid(F.col(vec_col), cents).alias("centroid"),
-    )
-    return assigned, cents
-
-
-def _argmax_centroid(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
-    """Nearest centroid by cosine, as ONE numpy matmul per Arrow batch
-    against the broadcast (k × d) centroid matrix — k dot products per row
-    as a JVM expression tree is ~50× slower. Ties break to the higher
-    centroid id (centroids scanned in descending id order)."""
-    order = sorted(cents, key=lambda cv: -cv[0])
-    ids = np.array([cid for cid, _ in order], dtype=np.int64)
-    c = np.stack([np.asarray(v, dtype=np.float64) for _, v in order])
-    norms = np.linalg.norm(c, axis=1)
-    norms[norms == 0] = 1.0
-    cn = c / norms[:, None]
-
-    @F.pandas_udf(T.LongType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        mn = np.linalg.norm(m, axis=1)
-        mn[mn == 0] = 1.0
-        sims = (m / mn[:, None]) @ cn.T
-        return pd.Series(ids[np.argmax(sims, axis=1)])
-
-    return assign(vec)
-
-
-def probe_centroids(
-    cents: list[tuple[int, list[float]]], query_vec: list[float], nprobe: int
-) -> list[int]:
-    """The nprobe centroid ids nearest (cosine) to the query; ties break to
-    the lower centroid id. Driver-side: k × d floats, negligible."""
-    qa = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(qa) or 1.0
-
-    def cos_to(cvec):
-        ca = np.asarray(cvec, dtype=np.float64)
-        cn = np.linalg.norm(ca) or 1.0
-        return float(ca @ qa / (cn * qn))
-
-    ranked = sorted(cents, key=lambda cv: (-cos_to(cv[1]), cv[0]))
-    return [cid for cid, _ in ranked[:nprobe]]
-
-
-def ivf_search(
-    assigned: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe the nprobe centroids nearest to the query, brute-force inside.
-    Over an in-memory assignment this still scans every row (the filter
-    discards ~(1 - nprobe/k) of them after reading); use
-    ``ivf_write`` + ``ivf_search_stored`` for the pruned scale path."""
-    probe_ids = probe_centroids(cents, query_vec, nprobe)
-    cand = assigned.filter(F.col("centroid").isin(probe_ids))
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
-
-
-def ivf_write(assigned: DataFrame, path: str) -> None:
-    """Persist the IVF assignment PARTITIONED BY centroid — the layout that
-    makes probing read ~nprobe/n_centroids of the bytes instead of all of
-    them: ``centroid IN (...)`` becomes a partition filter (directory-level
-    pruning, zero data files opened for unprobed centroids)."""
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-
-
-def ivf_search_stored(
-    spark,
-    path: str,
-    cents: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Pruned IVF probe over an ``ivf_write`` layout: the centroid IN-list
-    is a partition filter, so only the nprobe probed directories are listed
-    and read — this is what caps probe cost at 100 TB."""
-    probe_ids = probe_centroids(cents, query_vec, nprobe)
-    cand = spark.read.parquet(path).filter(F.col("centroid").isin(probe_ids))
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
 
 def _score_pairs_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -516,7 +365,7 @@ def hard_negatives(
     )
 
 
-# -------------------------------------------------- exact-math IVF (oracled)
+# ------------------------------------------------ IVF (exact math, oracled)
 _QI = 1e10  # fixed-point scale for IVF scores/means
 
 
@@ -525,7 +374,7 @@ def _argmax_centroid_exact(vec: Column, cents: list[tuple[int, list[float]]]) ->
     (Σ_j floor(x_j·c_j·1e10)) / sqrt(Σ_j floor(c_j²·1e10)) — integer
     numerators, one double division+sqrt from identical ints, so any
     engine computes the identical score and the identical argmax
-    (ties → higher centroid id, like the float variant)."""
+    (ties → higher centroid id)."""
     order = sorted(cents, key=lambda cv: -cv[0])
     ids = np.array([cid for cid, _ in order], dtype=np.int64)
     c = np.stack([np.asarray(v, dtype=np.float64) for _, v in order])
@@ -555,13 +404,15 @@ def ivf_train_exact(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[tuple[int, list[float]]]:
-    """`ivf_train` with quantized-integer accumulation throughout: both
-    the assignment scores and the per-(centroid, dim) means are sums of
-    floor-quantized longs, so the trained centroids are bit-identical on
-    any partitioning AND recomputable by a SQL oracle — this is the
-    variant the full-oracle IVF entry runs. (The float variant keeps
-    Spark-native `avg`; its per-round means depend on partition order at
-    the last ulp, which a cross-engine oracle cannot tolerate.)"""
+    """Deterministic distributed k-means (Lloyd iterations): init = the
+    n lowest-id vectors (no RNG), then ``iters`` rounds of
+    assign-and-average as DataFrame ops — the per-round shuffle is
+    (centroid, dim_pos) partial sums, only the n_centroids × dim means
+    reach the driver; empty clusters keep their previous centroid.  Both
+    the assignment scores and the means are sums of floor-quantized
+    longs (a float ``avg`` would differ at the last ulp across
+    partitionings), so the trained centroids are bit-identical on any
+    partitioning AND recomputable by a SQL oracle."""
     cents = [
         (int(r[id_col]), [float(x) for x in r[vec_col]])
         for r in df.orderBy(id_col).limit(n_centroids).collect()
@@ -669,11 +520,12 @@ def ivf_build_exact(
     id_col: str = "vec_id",
     train_iters: int = 2,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """`ivf_build` with the exact quantized quantizer throughout
-    (:func:`ivf_train_exact` + :func:`_argmax_centroid_exact`): the
-    assignment — and therefore the partition layout `ivf_write` produces —
-    is bit-identical on any partitioning and recomputable by a SQL
-    oracle."""
+    """Deterministic IVF index: quantized k-means centroids
+    (:func:`ivf_train_exact`) and each vector's nearest centroid
+    (:func:`_argmax_centroid_exact`).  Returns (assignments DF with a
+    `centroid` column, centroid list).  The assignment — and therefore
+    the partition layout `ivf_write` produces — is bit-identical on any
+    partitioning and recomputable by a SQL oracle."""
     cents = ivf_train_exact(df, n_centroids, train_iters, vec_col, id_col)
     assigned = df.select(
         F.col(id_col),
@@ -681,6 +533,14 @@ def ivf_build_exact(
         _argmax_centroid_exact(F.col(vec_col), cents).alias("centroid"),
     )
     return assigned, cents
+
+
+def ivf_write(assigned: DataFrame, path: str) -> None:
+    """Persist the IVF assignment PARTITIONED BY centroid — the layout that
+    makes probing read ~nprobe/n_centroids of the bytes instead of all of
+    them: ``centroid IN (...)`` becomes a partition filter (directory-level
+    pruning, zero data files opened for unprobed centroids)."""
+    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
 
 
 def ivf_search_stored_exact(
@@ -693,11 +553,11 @@ def ivf_search_stored_exact(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """`ivf_search_stored` with exact quantized probe ranking and scoring:
-    the centroid IN-list is still a partition filter over the
-    ``ivf_write`` layout (directory-level pruning — the 100 TB probe
-    path), and every produced number matches :func:`ivf_search_exact` on
-    the same data, so the stored path shares the same SQL oracle."""
+    """Pruned IVF probe over an ``ivf_write`` layout: the centroid IN-list
+    is a partition filter (directory-level pruning — only the nprobe
+    probed directories are listed and read, which caps probe cost at
+    100 TB), and every produced number matches :func:`ivf_search_exact`
+    on the same data, so the stored path shares the same SQL oracle."""
     probe_ids = probe_centroids_exact(cents, query_vec, nprobe)
     cand = spark.read.parquet(path).filter(F.col("centroid").isin(probe_ids))
     return _quantized_topk_single(cand, query_vec, k, vec_col, id_col)

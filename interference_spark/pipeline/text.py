@@ -34,15 +34,6 @@ def token_count(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND
-    letter/digit/punctuation boundaries — a cheap, deterministic stand-in
-    for BPE tokenizers when estimating token budgets at corpus scale."""
-    t = F.trim(text)
-    pieces = F.regexp_extract_all(t, F.lit(r"([A-Za-z]+|\d+|[^\sA-Za-z\d])"), 1)
-    return F.size(pieces)
-
-
 def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 over whitespace-normalized, lower-cased
     text. Stable across engines (md5 of UTF-8 bytes)."""
@@ -1707,8 +1698,8 @@ class AhoCorasick:
     the multi-pattern substring scan.  Public-knowledge algorithm (Aho &
     Corasick 1975); built once per executor from the broadcast pattern
     list, then every document is scanned ONCE regardless of pattern count
-    — the scale path `substring_decontaminate(impl="aho_corasick")` uses
-    it inside an Arrow-batched pandas UDF."""
+    — `substring_decontaminate` runs it inside an Arrow-batched pandas UDF
+    when the pattern table is above ``SUBSTRING_CONTAINS_MAX``."""
 
     __slots__ = ("goto", "fail", "out")
 
@@ -1743,9 +1734,10 @@ class AhoCorasick:
                 self.out[v] |= self.out[self.fail[v]]
 
     def match_count(self, text: str) -> int:
-        """Number of DISTINCT patterns occurring in ``text`` (duplicate
-        pattern strings count once per pattern id, matching the
-        contains-join's row semantics)."""
+        """Number of pattern ids occurring in ``text``: a pattern counts
+        once however often it occurs, and a pattern string listed twice
+        counts twice (two ids), matching the contains-join's one row per
+        snippet row."""
         node = 0
         hits: set[int] = set()
         for ch in text:
@@ -1757,38 +1749,47 @@ class AhoCorasick:
         return len(hits)
 
 
+# Snippet count up to which substring_decontaminate runs the broadcast
+# contains join, Aho-Corasick above it: on sf0.1 contains won at 20-65
+# snippets, tied at 80 and lost from 100 up (SCALING.md)
+SUBSTRING_CONTAINS_MAX = 80
+
+
 def substring_decontaminate(
     corpus: DataFrame,
     patterns: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     pattern_col: str = "snippet",
-    impl: str = "contains",
 ) -> DataFrame:
     """EXACT-substring eval-set decontamination — the verbatim-leakage
     check the n-gram pass approximates: a corpus doc is contaminated when
     any eval snippet occurs inside it at ANY character offset (no token
     boundary, no shingle alignment).  Returns one row per corpus doc:
-    ``(id, n_hits, contaminated)`` where ``n_hits`` counts the snippets
-    contained (duplicate snippet rows count separately under
-    ``impl="contains"`` and are deduplicated to pattern ids under
-    ``impl="aho_corasick"`` — pass distinct patterns for identical
-    results; empty snippets are dropped on both paths).
+    ``(id, n_hits, contaminated)`` where ``n_hits`` counts the snippet
+    rows contained in the doc (each row once however often it occurs; a
+    snippet listed twice counts twice; empty snippets are dropped).
 
-    * ``impl="contains"`` (default, oracle-replayable): snippets
-      broadcast, JVM ``Contains`` predicate on a left join, per-doc
-      count — O(docs × patterns) character scans in whole-stage codegen.
-      Right for eval sets of 10²-10⁴ snippets.
-    * ``impl="aho_corasick"``: one automaton pass per document
-      regardless of pattern count — O(doc_len + matches).  The scale
-      path when the pattern set reaches 10⁵+ (every eval answer string,
-      canary corpus): built once from the broadcast list, applied in an
-      Arrow-batched pandas UDF; property-tested equal to the contains
-      path."""
+    One bounded read of the snippet table (at most
+    ``SUBSTRING_CONTAINS_MAX`` + 1 rows) picks the plan; both give the
+    same rows:
+
+    * up to ``SUBSTRING_CONTAINS_MAX`` snippets: snippets broadcast, JVM
+      ``Contains`` predicate on a left join, per-doc count —
+      O(docs × patterns) character scans in whole-stage codegen, no
+      Python worker.
+    * above it: Aho-Corasick — one automaton pass per document
+      regardless of pattern count, O(doc_len + matches), built once per
+      executor from the collected list and applied in an Arrow-batched
+      pandas UDF.
+
+    The contains join's cost grows with the pattern count while the
+    automaton's barely does."""
     pats = patterns.select(F.col(pattern_col).alias("__snip")).filter(
         F.col("__snip") != ""
     )
-    if impl == "contains":
+    n_probe = len(pats.limit(SUBSTRING_CONTAINS_MAX + 1).collect())
+    if n_probe <= SUBSTRING_CONTAINS_MAX:
         hit = corpus.join(
             F.broadcast(pats),
             F.contains(F.col(text_col), F.col("__snip")),
@@ -1803,8 +1804,6 @@ def substring_decontaminate(
                 (F.col("n_hits") > 0).alias("contaminated"),
             )
         )
-    if impl != "aho_corasick":
-        raise ValueError(f"unknown impl {impl!r}")
     plist = [r["__snip"] for r in pats.collect()]
     holder: list[AhoCorasick] = []  # built lazily once per executor
 

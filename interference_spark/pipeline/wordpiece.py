@@ -103,17 +103,6 @@ def wordpiece_word_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return words.withColumn("sym", F.array_join(marked, " "))
 
 
-def symbol_counts(words: DataFrame) -> DataFrame:
-    """Weighted occurrence counts ``(tok, scnt)`` of every symbol in the
-    current segmentations — one exploded map-side-combined groupBy;
-    result is vocabulary-sized."""
-    return (
-        words.select("freq", F.explode(F.split("sym", " ")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.sum("freq").cast("long").alias("scnt"))
-    )
-
-
 def _fused_counts(words: DataFrame) -> DataFrame:
     """Symbol AND adjacent-pair counts from ONE pass over the word
     table (r12, guide §2.3: the training loop previously exploded the

@@ -118,37 +118,64 @@ def test_co_partitioned_join_adds_no_extra_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 2
 
 
-def test_ngram_prefix_filter_is_lossless(spark):
-    from interference_spark.pipeline.dedup import ngram_jaccard_pairs
+def test_ngram_prefix_filter_is_lossless(spark, engine, monkeypatch):
+    """Both exact Jaccard plans — bit-packed all-pairs (small vocabulary,
+    the default here) and the prefix-filtered join (cap patched below the
+    vocabulary) — return exactly the pairs a pure-Python char-trigram
+    Jaccard finds, on a hand corpus and on real documents."""
+    from itertools import combinations
 
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumped over the lazy dog"),
-            (3, "pack my box with five dozen liquor jugs"),
-            (4, "pack my box with five dozen liquor jug"),
-            (5, "completely unrelated text about spark engines"),
-        ],
-        "doc_id long, text string",
-    )
-    naive = {
-        (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in ngram_jaccard_pairs(docs, threshold=0.6, prefix_filter=False).collect()
-    }
-    pref = {
-        (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in ngram_jaccard_pairs(docs, threshold=0.6, prefix_filter=True).collect()
-    }
-    assert pref == naive and len(naive) == 2  # (1,2) and (3,4)
+    from interference_spark.pipeline import dedup
+
+    def py_grams(t, n=3):
+        return {t[i : i + n] for i in range(max(len(t) - n + 1, 1))}
+
+    def py_pairs(rows, t):
+        g = {i: py_grams(x) for i, x in rows}
+        out = set()
+        for a, b in combinations(sorted(g), 2):
+            j = len(g[a] & g[b]) / len(g[a] | g[b])
+            if j >= t:
+                out.add((a, b, j))
+        return out
+
+    hand = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumped over the lazy dog"),
+        (3, "pack my box with five dozen liquor jugs"),
+        (4, "pack my box with five dozen liquor jug"),
+        (5, "completely unrelated text about spark engines"),
+    ]
+    real = [
+        (r.doc_id, r.text)
+        for r in engine.table("documents")
+        .orderBy("doc_id")
+        .limit(80)
+        .collect()
+    ]
+    default_cap = dedup.BITMAP_VOCAB_CAP
+    for rows, t in ((hand, 0.6), (real, 0.5)):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        want = py_pairs(rows, t)
+        assert want, t
+        for cap, bitmap in ((default_cap, True), (1, False)):
+            monkeypatch.setattr(dedup, "BITMAP_VOCAB_CAP", cap)
+            out = dedup.ngram_jaccard_pairs(docs, threshold=t)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastNestedLoopJoin" in plan) == bitmap, plan[:2000]
+            got = {(r.id_a, r.id_b, r.jaccard) for r in out.collect()}
+            assert got == want, (t, cap)
+    assert {(a, b) for a, b, _ in py_pairs(hand, 0.6)} == {(1, 2), (3, 4)}
 
 
-def test_ngram_candidate_volume_guard(spark):
+def test_ngram_candidate_volume_guard(spark, monkeypatch):
     """VERDICT r9 ask #3: the exact Jaccard paths fail FAST with a typed
     error naming the MinHash-LSH sibling when the estimated candidate
     volume exceeds the caller's budget; a generous budget is a no-op
-    (identical pairs), and the guard covers all three exact plans."""
+    (identical pairs), and the guard covers both exact plans."""
     import pytest
 
+    from interference_spark.pipeline import dedup
     from interference_spark.pipeline.dedup import (
         CandidateVolumeExceeded,
         ngram_jaccard_pairs,
@@ -184,18 +211,9 @@ def test_ngram_candidate_volume_guard(spark):
     big = docs.withColumn(
         "text", F.concat_ws(" ", *[F.col("text")] * 3)
     )
+    monkeypatch.setattr(dedup, "BITMAP_VOCAB_CAP", 1)
     with pytest.raises(CandidateVolumeExceeded, match="MinHash-LSH"):
-        ngram_jaccard_pairs(
-            big,
-            threshold=0.6,
-            bitmap_vocab_cap=1,
-            max_candidate_pairs=1,
-        )
-    # naive path guard
-    with pytest.raises(CandidateVolumeExceeded, match="minhash_dedup_pairs"):
-        ngram_jaccard_pairs(
-            docs, threshold=0.6, prefix_filter=False, max_candidate_pairs=1
-        )
+        ngram_jaccard_pairs(big, threshold=0.6, max_candidate_pairs=1)
     with pytest.raises(ValueError, match="max_candidate_pairs"):
         ngram_jaccard_pairs(docs, max_candidate_pairs=0)
 
@@ -204,8 +222,7 @@ def test_ivf_recall_vs_exact(spark):
     from interference_spark.inventory import engine_for
     from interference_spark.pipeline.similarity import (
         cosine_topk,
-        ivf_build,
-        ivf_search,
+        ivf_search_exact,
     )
     from pyspark.sql import functions as F
 
@@ -213,8 +230,12 @@ def test_ivf_recall_vs_exact(spark):
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     corpus = emb.filter(F.col("vec_id") != 0)
     exact = {r.vec_id for r in cosine_topk(corpus, qvec, k=10).collect()}
-    assigned, cents = ivf_build(corpus, n_centroids=16)
-    approx = {r.vec_id for r in ivf_search(assigned, cents, qvec, k=10, nprobe=4).collect()}
+    approx = {
+        r.vec_id
+        for r in ivf_search_exact(
+            corpus, qvec, k=10, nprobe=4, n_centroids=16
+        ).collect()
+    }
     # nprobe=4/16 of a near-random corpus: demand at least half the true top-k
     assert len(exact & approx) >= 5
 
@@ -376,37 +397,6 @@ def test_contaminated_doc_ids(spark):
     )
     got = {r["doc_id"] for r in contaminated_doc_ids(cand, ev, n=8).collect()}
     assert got == {1}
-
-def test_ivf_stored_probe_prunes_partitions(spark, tmp_path):
-    """ivf_write + ivf_search_stored: the centroid IN-list becomes a
-    partition filter (directory pruning — the 100 TB probe path), and the
-    pruned probe returns exactly the in-memory ivf_search results."""
-    from interference_spark.pipeline.similarity import (
-        ivf_build,
-        ivf_search,
-        ivf_search_stored,
-        ivf_write,
-        probe_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    base = emb.filter("vec_id <> 0")
-    assigned, cents = ivf_build(base, n_centroids=8, train_iters=1)
-    path = str(tmp_path / "ivf")
-    ivf_write(assigned, path)
-
-    got = ivf_search_stored(spark, path, cents, qvec, k=5, nprobe=2)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    probe_ids = probe_centroids(cents, qvec, 2)
-    # the IN-list is a PARTITION filter (directory pruning), not a
-    # post-scan data filter
-    import re
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "centroid" in m.group(1), plan
-    assert all(str(pid) in m.group(1) for pid in probe_ids), plan
-    want = ivf_search(assigned, cents, qvec, k=5, nprobe=2)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
 
 def test_exact_group_percentiles_property(spark):
     """Histogram-cumulation percentiles == brute-force sorted-rank picks."""
@@ -1742,6 +1732,34 @@ def test_remove_repeated_passages(spark):
     assert got[4] == (2, 1, "u v w x y z aa bb cc dd ee")
 
 
+def test_literal_maps_parse_equals_lit_maps(spark):
+    """The one-parse ``map(...)`` literals equal the per-entry ``F.lit``
+    maps on all 256 entries, quote and backslash included."""
+    from pyspark.sql import functions as F
+
+    from interference_spark.pipeline.byte_bpe import (
+        _char_to_hex_map,
+        _hex_map,
+        _hex_to_char,
+    )
+
+    pairs = _hex_to_char()
+    assert {"'", "\\"} <= {c for _, c in pairs}
+
+    def lit_map(kv):
+        return F.create_map(*[F.lit(x) for k, v in kv for x in (k, v)])
+
+    row = spark.range(1).select(
+        _hex_map().alias("h"),
+        lit_map(pairs).alias("hl"),
+        _char_to_hex_map().alias("c"),
+        lit_map((c, hx) for hx, c in pairs).alias("cl"),
+    ).first()
+    assert len(row["h"]) == len(row["c"]) == 256
+    assert row["h"] == row["hl"] == dict(pairs)
+    assert row["c"] == row["cl"] == {c: hx for hx, c in pairs}
+
+
 def test_bpe_vocab_and_encode(spark):
     """bpe_vocab/bpe_encode contract against the textbook reference:
     base chars get ids 0..B-1 in binary order, merges get B+rank-1
@@ -1882,12 +1900,17 @@ def test_bpe_train_early_stop_and_plan(spark):
     assert "Python" not in fplan and "Arrow" not in fplan, fplan
 
 
-def test_substring_decontaminate_impls_agree(spark):
-    """Contains-join and Aho-Corasick paths must agree exactly, including
-    overlapping patterns, a pattern that is a prefix of another, multiple
-    occurrences (counted once per pattern), and the empty-pattern-set
-    edge (all docs reported clean)."""
+def test_substring_decontaminate_impls_agree(spark, monkeypatch):
+    """Contains-join and Aho-Corasick paths (each forced by patching the
+    cutoff) must agree exactly, including overlapping patterns, a
+    pattern that is a prefix of another, multiple occurrences (counted
+    once per pattern), a snippet listed twice (counted twice), and the
+    empty-pattern-set edge (all docs reported clean)."""
+    from interference_spark.pipeline import text
     from interference_spark.pipeline.text import substring_decontaminate
+
+    # cutoff above any pattern count -> contains; -1 -> Aho-Corasick
+    plans = {"contains": 10_000, "aho_corasick": -1}
 
     corpus = spark.createDataFrame(
         [
@@ -1902,29 +1925,36 @@ def test_substring_decontaminate_impls_agree(spark):
     pats = spark.createDataFrame(
         [("ab",), ("abc",), ("bc",), ("zzz",), ("",)], "snippet string"
     )
+    twice = spark.createDataFrame([("ab",), ("ab",), ("b",)], "snippet string")
+    empty = spark.createDataFrame([], "snippet string")
     want = {1: 3, 2: 1, 3: 0, 4: 1, 5: 0}
-    for impl in ("contains", "aho_corasick"):
+    for impl, cutoff in plans.items():
+        monkeypatch.setattr(text, "SUBSTRING_CONTAINS_MAX", cutoff)
         got = {
             r.doc_id: (r.n_hits, r.contaminated)
-            for r in substring_decontaminate(corpus, pats, impl=impl).collect()
+            for r in substring_decontaminate(corpus, pats).collect()
         }
         assert got == {k: (v, v > 0) for k, v in want.items()}, impl
-
-    empty = spark.createDataFrame([], "snippet string")
-    for impl in ("contains", "aho_corasick"):
         got = {
             r.doc_id: r.n_hits
-            for r in substring_decontaminate(corpus, empty, impl=impl).collect()
+            for r in substring_decontaminate(corpus, twice).collect()
+        }
+        assert got == {1: 3, 2: 0, 3: 0, 4: 3, 5: 0}, impl
+        got = {
+            r.doc_id: r.n_hits
+            for r in substring_decontaminate(corpus, empty).collect()
         }
         assert got == {i: 0 for i in range(1, 6)}, impl
 
 
-def test_substring_decontaminate_plan_and_scale_parity(spark):
+def test_substring_decontaminate_plan_and_scale_parity(spark, monkeypatch):
     """The contains path must BROADCAST the snippets (never shuffle the
-    corpus) and keep the scan JVM-only; the two impls must agree on real
-    testdata with the entry's snippet rule."""
+    corpus) and keep the scan JVM-only; the two plans (Aho-Corasick
+    forced by patching the cutoff) must agree on real testdata with the
+    entry's snippet rule."""
     from pyspark.sql import functions as F
 
+    from interference_spark.pipeline import text
     from interference_spark.pipeline.text import substring_decontaminate
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1952,13 +1982,41 @@ def test_substring_decontaminate_plan_and_scale_parity(spark):
     assert "Python" not in plan and "Arrow" not in plan, plan[:2000]
 
     a = sorted(map(tuple, out.collect()))
-    b = sorted(
-        map(
-            tuple,
-            substring_decontaminate(corpus, ev, impl="aho_corasick").collect(),
-        )
-    )
+    monkeypatch.setattr(text, "SUBSTRING_CONTAINS_MAX", -1)
+    b = sorted(map(tuple, substring_decontaminate(corpus, ev).collect()))
     assert a == b
+
+
+def test_substring_decontaminate_picks_plan_from_pattern_count(spark):
+    """At or below ``SUBSTRING_CONTAINS_MAX`` snippets the default runs
+    the broadcast contains join, above it Aho-Corasick in an Arrow UDF;
+    empty snippet rows do not count toward the cutoff."""
+    from interference_spark.pipeline.text import (
+        SUBSTRING_CONTAINS_MAX,
+        substring_decontaminate,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "p1 and p7"), (2, "nothing")], "doc_id long, text string"
+    )
+
+    def plan_for(n_pats):
+        pats = spark.range(n_pats).selectExpr(
+            "concat('p', id) AS snippet"
+        ).union(spark.createDataFrame([("",)], "snippet string"))
+        out = substring_decontaminate(corpus, pats)
+        return out, out._jdf.queryExecution().executedPlan().toString()
+
+    for n_pats, contains in (
+        (SUBSTRING_CONTAINS_MAX, True),
+        (SUBSTRING_CONTAINS_MAX + 1, False),
+    ):
+        out, plan = plan_for(n_pats)
+        assert ("BroadcastNestedLoopJoin" in plan) == contains, plan[:2000]
+        assert ("ArrowEvalPython" in plan) != contains, plan[:2000]
+        got = {r.doc_id: r.n_hits for r in out.collect()}
+        # doc 1 holds exactly the snippets p1 and p7
+        assert got == {1: 2, 2: 0}, n_pats
 
 
 def test_pq_train_encode_search(spark):
@@ -2411,7 +2469,7 @@ def test_containment_vs_jaccard_asymmetry(spark):
     assert rep[2].n_containers == 0 and rep[2].best_containment == 0.0
     assert rep[3].n_containers == 0
     # symmetric jaccard misses the pair at the same bar
-    jac = ngram_jaccard_pairs(docs, n=3, threshold=0.9, prefix_filter=False).collect()
+    jac = ngram_jaccard_pairs(docs, n=3, threshold=0.9).collect()
     assert not any({r.id_a, r.id_b} == {1, 2} for r in jac)
 
 
@@ -2810,9 +2868,7 @@ def test_threshold_sweep_monotone_and_consistent(spark):
     assert [r.threshold for r in rows] == [0.5, 0.6, 0.7, 0.8, 0.9]
     for lo, hi in zip(rows, rows[1:]):
         assert lo.n_pairs >= hi.n_pairs and lo.n_docs >= hi.n_docs
-    direct = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.5, prefix_filter=False
-    ).count()
+    direct = ngram_jaccard_pairs(docs, n=3, threshold=0.5).count()
     assert rows[0].n_pairs == direct
     with pytest.raises(ValueError, match="non-empty"):
         jaccard_threshold_sweep(docs, thresholds=())

@@ -264,9 +264,11 @@ def probe(spark, sizes: list[int], only: set[str] | None = None) -> dict:
             _embs(spark, 100),
             threshold=0.5,
         ),
-        # r5: exact-substring decontamination, contains path — fixed
-        # 100-snippet pattern side (eval sets do not grow with the
-        # corpus) → corpus-linear broadcast-contains scan
+        # r5: exact-substring decontamination — fixed 100-snippet
+        # pattern side (eval sets do not grow with the corpus); 100 is
+        # above text.SUBSTRING_CONTAINS_MAX, so this times the
+        # Aho-Corasick plan (the r5 SCALING.md row timed the contains
+        # plan, before the pattern count picked it)
         "decontaminate_substring": lambda n: substring_decontaminate(
             _docs(spark, n).filter(F.col("doc_id") >= 100),
             _docs(spark, 100).select(
