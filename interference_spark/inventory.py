@@ -10862,7 +10862,7 @@ def stream_dsir_select(spark, sf_dir):
     src = os.path.join(e.warehouse, f"dsirsel_src_{tag}")
     ck = src + "_ck"
 
-    dsir_log_weights(snap, t_lm, r_lm, broadcast_lm=True).write.mode(
+    dsir_log_weights(snap, t_lm, r_lm).write.mode(
         "append"
     ).parquet(store)
     docs.filter("doc_id % 4 = 1").coalesce(1).write.mode("append").parquet(src)
@@ -10875,7 +10875,7 @@ def stream_dsir_select(spark, sf_dir):
     )
 
     def select_batch(batch, _bid):
-        dsir_log_weights(batch, t_lm, r_lm, broadcast_lm=True).write.mode(
+        dsir_log_weights(batch, t_lm, r_lm).write.mode(
             "append"
         ).parquet(store)
 

@@ -117,39 +117,24 @@ def iterative_stage_conf(spark):
     so only the iterative loops opt in.  Settings restore on exit even
     on error; caches built inside the scope keep their (size-derived)
     partitioning afterwards, which is exactly the point."""
-    saved = set_iterative_stage_conf(spark)
+    saved = {}
     try:
+        for k, v in _ITER_CONFS.items():
+            saved[k] = spark.conf.get(k, None)  # None: not set in the session
+            spark.conf.set(k, v)
         yield
     finally:
-        restore_stage_conf(spark, saved)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _ITER_CONFS = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
-
-
-def set_iterative_stage_conf(spark) -> dict:
-    """Non-context form of :func:`iterative_stage_conf` for loops that
-    already manage a try/finally: apply the settings, return what to
-    hand back to :func:`restore_stage_conf`."""
-    old = {}
-    for k, v in _ITER_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:  # noqa: BLE001 — unset key
-            old[k] = None
-        spark.conf.set(k, v)
-    return old
-
-
-def restore_stage_conf(spark, saved: dict) -> None:
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 #: Ledger of DataFrames this package persist()ed on behalf of a returned
 #: plan (LSH hyperplane fingerprints, simhash fingerprints, shared GD
@@ -187,13 +172,13 @@ def release_caches(blocking: bool = False) -> int:
     return n
 
 
-def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition up to cluster parallelism when the source arrives in too
     few partitions (a single small parquet file scans as ONE partition, so a
     Pandas-UDF stage would run on one core). At 100 TB inputs span thousands
     of row groups and this is a no-op; at test SFs it keeps every core busy."""
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

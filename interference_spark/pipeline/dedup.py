@@ -230,7 +230,6 @@ def incremental_minhash_dedup(
     shingle_k: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup ingestion — the fuzzy sibling of
     :func:`incremental_dedup`: a new batch is admitted against a
@@ -257,13 +256,11 @@ def incremental_minhash_dedup(
 
     Cache lifecycle (round-4 advice): the batch signatures (and, when not
     already cached by the caller, the registry) are persisted only while
-    the decision runs — with ``materialize=True`` (default) the decision
-    table is persisted, computed eagerly, and the temporaries unpersisted
-    before returning, so repeated admissions in a long-lived session do
-    not accumulate signature caches.  The returned (small: one row per
-    new doc) cached table is the caller's to ``unpersist()``.
-    ``materialize=False`` returns the fully lazy plan (plan-shape lints
-    use this) and leaves the signature caches alive — caller manages."""
+    the decision runs — the decision table is persisted, computed
+    eagerly, and the temporaries unpersisted before returning, so
+    repeated admissions in a long-lived session do not accumulate
+    signature caches.  The returned (small: one row per new doc) cached
+    table is the caller's to ``unpersist()``."""
     rows_per_band = num_perm // bands
     new_sigs = minhash_signatures(
         new_df, text_col, id_col, num_perm, shingle_k, seed
@@ -350,14 +347,6 @@ def incremental_minhash_dedup(
     )
     from . import register_cache
 
-    if not materialize:
-        # lazy path: the signature caches outlive this call (the returned
-        # plan embeds them) — caller-owned, so ledger-register them for
-        # release_caches() (VERDICT r11 ask #6; persist() is idempotent)
-        register_cache(new_sigs)
-        if own_known:
-            register_cache(known_sigs)
-        return decision
     decision = register_cache(decision)
     decision.count()  # run the admission while the signature caches live
     new_sigs.unpersist()
@@ -894,19 +883,21 @@ def jaccard_threshold_sweep(
     hit = pairs.crossJoin(F.broadcast(th)).filter(
         F.col("jaccard") >= F.col("threshold")
     )
-    n_pairs = hit.groupBy("threshold").agg(F.count(F.lit(1)).alias("n_pairs"))
-    n_docs = (
+    # ONE aggregate over the exploded ids scores each pair once: every
+    # canonical (id_a < id_b) pair explodes to exactly two id rows
+    counts = (
         hit.select(
             "threshold",
             F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("d"),
         )
-        .distinct()
         .groupBy("threshold")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .agg(
+            F.expr("count(1) div 2").alias("n_pairs"),
+            F.countDistinct("d").alias("n_docs"),
+        )
     )
     return (
-        th.join(n_pairs, "threshold", "left")
-        .join(n_docs, "threshold", "left")
+        th.join(counts, "threshold", "left")
         .select(
             "threshold",
             F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
@@ -991,8 +982,6 @@ def exact_substring_pairs(
     k: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fingerprint_filter: bool = False,
-    w: int = 8,
     max_posting_len: int | None = None,
 ) -> DataFrame:
     """Corpus↔corpus EXACT substring overlap at ``k``-token granularity
@@ -1011,14 +1000,6 @@ def exact_substring_pairs(
     common substring (diagonal islands over shared (p_a, p_b) positions:
     consecutive shingle hits on the same p_a − p_b diagonal chain into
     runs of m shingles = m + k − 1 tokens).
-
-    ``fingerprint_filter=True`` prepends a winnowing candidate filter
-    (window-min over each doc's shingle-hash sequence, window ``w``):
-    only doc pairs sharing a fingerprint reach the gram join.  This
-    trims the shuffle by ~(w+1)/2× but weakens the guarantee to overlaps
-    of ≥ k + w − 1 tokens (the winnowing bound) — the right trade at
-    100 TB where the interesting duplicated passages are much longer
-    than the threshold; keep the default for bit-exact ≥ k detection.
 
     Scale shape: shingle hashing is per-row codegen; the join key is a
     32-hex digest, so the shuffle carries narrow rows.  Hot boilerplate
@@ -1043,8 +1024,6 @@ def exact_substring_pairs(
     giant documents upstream."""
     if k < 1:
         raise ValueError(f"k must be >= 1 token, got {k}")
-    if fingerprint_filter and w < 1:
-        raise ValueError(f"winnow window w must be >= 1, got {w}")
     if max_posting_len is not None and max_posting_len < 1:
         raise ValueError(f"max_posting_len must be >= 1, got {max_posting_len}")
     ga = _token_gram_positions(
@@ -1063,16 +1042,7 @@ def exact_substring_pairs(
         )
         ga = ga.join(F.broadcast(hot), "gh", "left_anti")
         gb = gb.join(F.broadcast(hot), "gh", "left_anti")
-    if fingerprint_filter:
-        fa = _winnow_gram_fps(ga, "doc_a", w)
-        fb = _winnow_gram_fps(gb, "doc_b", w)
-        cand = fa.join(fb, "fp").select("doc_a", "doc_b").distinct()
-        shared = (
-            ga.join(gb, "gh")
-            .join(cand, ["doc_a", "doc_b"], "leftsemi")
-        )
-    else:
-        shared = ga.join(gb, "gh")
+    shared = ga.join(gb, "gh")
 
     # r11 single-shuffle finish: the old plan evaluated `shared` TWICE
     # (once for the distinct-gram counts, once for the diagonal-island
@@ -1234,32 +1204,6 @@ def remove_cross_corpus_substrings(
         F.col("n_tokens").cast("long"),
         F.col("n_removed").cast("long").alias("n_removed"),
         "clean_text",
-    )
-
-
-def _winnow_gram_fps(grams: DataFrame, id_name: str, w: int) -> DataFrame:
-    """Winnowing over a doc's POSITION-ORDERED shingle-hash sequence:
-    keep each w-window's minimum hash.  Any two docs sharing ≥ w
-    consecutive shingles (= k + w − 1 tokens) share a fingerprint —
-    the SWA guarantee transplanted from characters to token shingles."""
-    seq = (
-        grams.groupBy(id_name)
-        .agg(F.array_sort(F.collect_list(F.struct(f"p_{id_name}", "gh"))).alias("s"))
-        .select(id_name, F.transform("s", lambda x: x["gh"]).alias("h"))
-    )
-    return seq.select(
-        id_name,
-        F.explode(
-            F.array_distinct(
-                F.when(
-                    F.size("h") >= w,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("h") - w),
-                        lambda j: F.array_min(F.slice("h", j + 1, w)),
-                    ),
-                ).otherwise(F.array(F.array_min("h")))
-            )
-        ).alias("fp"),
     )
 
 

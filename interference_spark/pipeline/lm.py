@@ -491,7 +491,6 @@ def perplexity_bucket_cutoffs(
     lo: float = 2.0,
     hi: float = 6.0,
     bins: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """``perplexity_buckets`` without the per-language sort — the
     documented dominant-language escape hatch, shipped as an operator
@@ -508,12 +507,7 @@ def perplexity_bucket_cutoffs(
     whose shuffle carries at most ``languages × bins`` histogram rows —
     no per-language sort, so a 45%%-English 100 TB corpus no longer
     funnels one giant partition through an ntile window; the histogram
-    partials merge additively wherever the data lives.
-
-    ``checkpoint=False`` skips the internal localCheckpoint of the
-    scored table (see the in-body comment) for callers that manage
-    persistence themselves across repeated invocations in one
-    session."""
+    partials merge additively wherever the data lives."""
     from .sketch import hist_group_quantiles
 
     scored = perplexity_score(df, lm, text_col=text_col, id_col=id_col)
@@ -528,13 +522,8 @@ def perplexity_bucket_cutoffs(
     # summarizes; blocks are freed by the ContextCleaner when the
     # result DataFrame is dropped — LAZILY, so in a long-lived session
     # repeated calls can accumulate executor-storage blocks between GC
-    # cycles (ADVICE r9).  Callers invoking this repeatedly in one
-    # session can pass checkpoint=False and manage persistence of the
-    # scored derivation themselves — correctness is unaffected, the
-    # scoring joins just run once per consumer instead of once total.
-    keyed = scored.join(df.select(id_col, by), id_col)
-    if checkpoint:
-        keyed = keyed.localCheckpoint(eager=True)
+    # cycles (ADVICE r9).
+    keyed = scored.join(df.select(id_col, by), id_col).localCheckpoint(eager=True)
     q1, q2 = 1 / 3, 2 / 3
     cuts = hist_group_quantiles(
         keyed, (by,), "nll_nats", qs=(q1, q2), lo=lo, hi=hi, bins=bins
@@ -802,9 +791,8 @@ _DSIR_BROADCAST_MAX_ROWS = 10_000_000
 # failing with cannotAcquireMemoryToBuildLongHashedRelation on a 48 GB
 # local JVM: the map needs its pow2 slot arrays as near-contiguous
 # allocations, so feasible size is set by per-task execution memory, not
-# the 8 GB broadcast cap).  Callers on memory-rich executors can raise
-# it; above the cutoff the hashed SHUFFLED-HASH tier takes over — still
-# no stream sort, just a stream shuffle
+# the 8 GB broadcast cap).  Above the cutoff the hashed-key shuffle tier
+# takes over
 _DSIR_HASHED_BROADCAST_MAX_ROWS = 50_000_000
 
 
@@ -814,9 +802,6 @@ def dsir_log_weights(
     raw_lm: BigramLM,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_lm: bool | str = "auto",
-    broadcast_max_rows: int = _DSIR_BROADCAST_MAX_ROWS,
-    hashed_broadcast_max_rows: int = _DSIR_HASHED_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """DSIR importance log-weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every document by
@@ -848,11 +833,11 @@ def dsir_log_weights(
     # one that keeps the stream a straight pipelined scan.  But a real
     # web corpus has 1e9+ bigram types: broadcasting that hard-fails on
     # Spark's 8 GB broadcast cap / executor memory instead of degrading,
-    # so ``broadcast_lm="auto"`` (default) COUNTS the merged bigram
-    # lookup (one vocabulary-sized job — callers with materialized LM
-    # tables pay ~nothing; here it re-runs the two combiner-friendly
-    # LM aggregations once) and broadcasts only when it holds at most
-    # ``broadcast_max_rows`` rows.  The 10M default is ~0.6-1 GB as a
+    # so the operator COUNTS the merged bigram lookup (one
+    # vocabulary-sized job — callers with materialized LM tables pay
+    # ~nothing; here it re-runs the two combiner-friendly LM
+    # aggregations once) and broadcasts only when it holds at most
+    # ``_DSIR_BROADCAST_MAX_ROWS`` rows.  The 10M cutoff is ~0.6-1 GB as a
     # broadcast hash relation (two short tokens + two longs per row) —
     # comfortably inside the 8 GB cap and small next to the ≥8 GB
     # executors it rides in; above it the joins shuffle on (c[,w]) and
@@ -885,22 +870,16 @@ def dsir_log_weights(
     # handed off via parquet, scoring in a fresh JVM) the same scoring
     # completes at that size: 807 s, 53 GB peak disk (SCALING.md
     # round-11 decade row).
-    tier = broadcast_lm
-    if broadcast_lm == "auto":
-        n_lookup = bc.count()
-        if n_lookup <= broadcast_max_rows:
-            tier = True
-        elif n_lookup <= hashed_broadcast_max_rows:
-            tier = "hashed_broadcast"
-        else:
-            tier = False
-    if tier is True:
+    # the module constants are read at call time, so tests and probes
+    # reach every tier by monkeypatching them
+    n_lookup = bc.count()
+    if n_lookup <= _DSIR_BROADCAST_MAX_ROWS:
         bc, cc = F.broadcast(bc), F.broadcast(cc)
         j = (
             sb.join(bc, ["c", "w"], "left")
             .join(cc, ["c"], "left")
         )
-    elif tier == "hashed_broadcast":
+    elif n_lookup <= _DSIR_HASHED_BROADCAST_MAX_ROWS:
         bch = F.broadcast(
             bc.select(F.xxhash64("c", "w").alias("__hb"), "cwt", "cwr")
         )

@@ -17,9 +17,11 @@ The Spark-side design is real and tested: schema, Arrow batch shape,
   deployment installs, swapping the per-batch codec call inside the same
   operator.
 
-At 100 TB: binary payloads dominate partition size, so operators here take a
-``target_batch_bytes`` hint — ``mapInPandas`` yields multiple small pandas
-batches instead of one giant one, keeping Arrow transfer and executor memory
+At 100 TB: binary payloads dominate partition size, so every operator here
+cuts each incoming pandas batch into chunks of ``BATCH_ROWS`` rows
+(``FRAME_BATCH_ROWS`` for ``frame_sample``, whose output rows far outnumber
+its input rows) — ``mapInPandas`` yields multiple small pandas batches
+instead of one giant one, keeping Arrow transfer and executor memory
 bounded. Repartition by size (``spark.sql.files.maxPartitionBytes``) rather
 than row count when reading.
 """
@@ -33,6 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+BATCH_ROWS = 1024
+FRAME_BATCH_ROWS = 256
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -78,7 +83,6 @@ def feature_extract(
     df: DataFrame,
     decoder: str = "fake",
     frame_bytes: int = 256,
-    target_batch_rows: int = 1024,
 ) -> DataFrame:
     """Decode/feature-extract over binary payloads via mapInPandas.
 
@@ -108,8 +112,8 @@ def feature_extract(
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_batch_rows):
-                chunk = pdf.iloc[start : start + target_batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start : start + BATCH_ROWS]
                 if decoder == "real":
                     feats = [_real_decode(c) for c in chunk["content"]]
                 else:
@@ -143,7 +147,6 @@ AUDIO_SCHEMA = T.StructType(
 def audio_features(
     df: DataFrame,
     decoder: str = "fake",
-    target_batch_rows: int = 1024,
 ) -> DataFrame:
     """Audio decode / feature extraction over binary payloads.
 
@@ -183,8 +186,8 @@ def audio_features(
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_batch_rows):
-                chunk = pdf.iloc[start : start + target_batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start : start + BATCH_ROWS]
                 feats = [_one(c, decoder == "real") for c in chunk["content"]]
                 yield pd.DataFrame(
                     {
@@ -223,7 +226,6 @@ def resize(
     df: DataFrame,
     scale_div: int = 2,
     decoder: str = "fake",
-    target_batch_rows: int = 1024,
 ) -> DataFrame:
     """Schema-preserving payload transform (image resize / audio resample).
 
@@ -251,8 +253,8 @@ def resize(
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_batch_rows):
-                chunk = pdf.iloc[start : start + target_batch_rows].copy()
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start : start + BATCH_ROWS].copy()
                 if decoder == "real":
                     resized = [_real_resize(c) for c in chunk["content"]]
                     chunk["content"] = [r[0] for r in resized]
@@ -281,7 +283,6 @@ def frame_sample(
     frame_bytes: int = 256,
     stride: int = 4,
     decoder: str = "fake",
-    target_batch_rows: int = 256,
 ) -> DataFrame:
     """Explode media into sampled frames: one output row per kept frame
     (media_id, frame_idx, frame) — the row-expanding mapInPandas shape
@@ -302,8 +303,8 @@ def frame_sample(
         from .png import decode_apng_frames
 
         for pdf in batches:
-            for start in range(0, len(pdf), target_batch_rows):
-                chunk = pdf.iloc[start : start + target_batch_rows]
+            for start in range(0, len(pdf), FRAME_BATCH_ROWS):
+                chunk = pdf.iloc[start : start + FRAME_BATCH_ROWS]
                 ids, idxs, frames = [], [], []
                 for mid, c in zip(chunk["media_id"], chunk["content"]):
                     if c is None:
@@ -322,8 +323,8 @@ def frame_sample(
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_batch_rows):
-                chunk = pdf.iloc[start : start + target_batch_rows]
+            for start in range(0, len(pdf), FRAME_BATCH_ROWS):
+                chunk = pdf.iloc[start : start + FRAME_BATCH_ROWS]
                 ids, idxs, frames = [], [], []
                 for mid, c in zip(chunk["media_id"], chunk["content"]):
                     if c is None:
@@ -479,7 +480,7 @@ def ahash_bytes(payload: bytes) -> tuple[int, int, int]:
     return ah - (1 << 64) if ah >= 1 << 63 else ah, w, h
 
 
-def image_ahash(df: DataFrame, target_batch_rows: int = 1024) -> DataFrame:
+def image_ahash(df: DataFrame) -> DataFrame:
     """Perceptual fingerprints for image dedup: ``(media_id, ahash, width,
     height)`` via the real PNG codec. Identical images always collide;
     near-identical ones usually do (aHash is the cheap tier — swap the
@@ -491,8 +492,8 @@ def image_ahash(df: DataFrame, target_batch_rows: int = 1024) -> DataFrame:
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start in range(0, len(pdf), target_batch_rows):
-                chunk = pdf.iloc[start : start + target_batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start : start + BATCH_ROWS]
                 hs, ws, hh = [], [], []
                 for c in chunk["content"]:
                     if c is None:

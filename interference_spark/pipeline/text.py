@@ -1353,7 +1353,7 @@ def _hk_dense(
     pass instead of 1.5 (train slice + full rescore).  The cache backs
     the returned plan, so it is registered in the package cache ledger
     for the caller to release."""
-    from . import register_cache, restore_stage_conf, set_iterative_stage_conf
+    from . import iterative_stage_conf, register_cache
 
     spark = score.sparkSession
     K = len(heads)
@@ -1432,31 +1432,30 @@ def _hk_dense(
     w = [[0.0] * (d + 1) for _ in heads]  # per head: [bias, w_0..w_{d-1}]
     # scoped AQE conf: `iters` tiny moment jobs + the cached featurize —
     # see pipeline.iterative_stage_conf for the rationale
-    _conf = set_iterative_stage_conf(spark)
     try:
-        for _ in range(iters):
-            # pandas→Arrow: the plain-list createDataFrame path was
-            # measured at ~450 ms per step
-            vals = [h[0] for h in w] + [h[j + 1] for h in w for j in range(d)]
-            wrow = F.broadcast(
-                spark.createDataFrame(pd.DataFrame([vals], columns=wcols))
-            )
-            # ONE bounded row for ALL heads; plan identical every step
-            row = tf.crossJoin(wrow).agg(*aggs).first()
-            n = row["n"]
-            if not n:
-                raise ValueError(_HK_EMPTY)
-            # mirror the oracle's op chain: (S / n) / 1e8, then w - lr*g
-            for i, h in enumerate(w):
-                h[0] = h[0] - lr * (row[f"sb_{i}"] / n / 1e8)
-                for j in range(d):
-                    h[j + 1] = h[j + 1] - lr * (row[f"s_{i}_{j}"] / n / 1e8)
+        with iterative_stage_conf(spark):
+            for _ in range(iters):
+                # pandas→Arrow: the plain-list createDataFrame path was
+                # measured at ~450 ms per step
+                vals = [h[0] for h in w] + [h[j + 1] for h in w for j in range(d)]
+                wrow = F.broadcast(
+                    spark.createDataFrame(pd.DataFrame([vals], columns=wcols))
+                )
+                # ONE bounded row for ALL heads; plan identical every step
+                row = tf.crossJoin(wrow).agg(*aggs).first()
+                n = row["n"]
+                if not n:
+                    raise ValueError(_HK_EMPTY)
+                # mirror the oracle's op chain: (S / n) / 1e8, then w - lr*g
+                for i, h in enumerate(w):
+                    h[0] = h[0] - lr * (row[f"sb_{i}"] / n / 1e8)
+                    for j in range(d):
+                        h[j + 1] = h[j + 1] - lr * (row[f"s_{i}_{j}"] / n / 1e8)
     except BaseException:
         if shared:
             feats.unpersist()
         raise
     finally:
-        restore_stage_conf(spark, _conf)
         if not shared:
             tf.unpersist()
 
@@ -1513,7 +1512,7 @@ def _hk_sparse(
     weight table (a few MB broadcast) and the K·(d+1) weights on the
     driver scale with capacity (measured ~flat d=8 → d=2^18).  With
     ``train_filter`` GD trains on ``score.filter(train_filter)``."""
-    from . import restore_stage_conf, set_iterative_stage_conf
+    from . import iterative_stage_conf
     from .export import hash52
 
     spark = score.sparkSession
@@ -1637,38 +1636,39 @@ def _hk_sparse(
         GROUP BY z.cls, z.bucket
     """
 
-    _conf = set_iterative_stage_conf(spark)
-    tfa = sparse_tok(train, with_id=False).persist()
     w = [[0.0] * (d + 1) for _ in heads]  # per head: [bias, w_0..w_{d-1}]
-    try:
-        for _ in range(iters):
-            bdf = F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame({f"__bias_{i}": [h[0]] for i, h in enumerate(w)}),
-                    schema=", ".join(f"__bias_{i} double" for i in range(K)),
+    with iterative_stage_conf(spark):
+        tfa = sparse_tok(train, with_id=False).persist()
+        try:
+            for _ in range(iters):
+                bdf = F.broadcast(
+                    spark.createDataFrame(
+                        pd.DataFrame(
+                            {f"__bias_{i}": [h[0]] for i, h in enumerate(w)}
+                        ),
+                        schema=", ".join(f"__bias_{i} double" for i in range(K)),
+                    )
                 )
-            )
-            # ≤ K·(d+1) narrow rows — the only driver traffic (Arrow)
-            pdf = spark.sql(
-                step_sql, tok=tfa, w=weight_table(w), b=bdf
-            ).toPandas()
-            sent_mask = pdf["bucket"] == -1
-            sents = {
-                int(r.cls): (int(r.s), int(r.c))
-                for r in pdf[sent_mask].itertuples()
-            }
-            if 0 not in sents:
-                raise ValueError(_HK_EMPTY)
-            n = sents[0][1]
-            # identical op chain to the dense core: (S / n) / 1e8, w - lr*g
-            for i, h in enumerate(w):
-                h[0] = h[0] - lr * (sents[i][0] / n / 1e8)
-            for r in pdf[~sent_mask].itertuples():
-                h, b = w[int(r.cls)], int(r.bucket) + 1
-                h[b] = h[b] - lr * (int(r.s) / n / 1e8)
-    finally:
-        restore_stage_conf(spark, _conf)
-        tfa.unpersist()
+                # ≤ K·(d+1) narrow rows — the only driver traffic (Arrow)
+                pdf = spark.sql(
+                    step_sql, tok=tfa, w=weight_table(w), b=bdf
+                ).toPandas()
+                sent_mask = pdf["bucket"] == -1
+                sents = {
+                    int(r.cls): (int(r.s), int(r.c))
+                    for r in pdf[sent_mask].itertuples()
+                }
+                if 0 not in sents:
+                    raise ValueError(_HK_EMPTY)
+                n = sents[0][1]
+                # identical op chain to the dense core: (S / n) / 1e8, w - lr*g
+                for i, h in enumerate(w):
+                    h[0] = h[0] - lr * (sents[i][0] / n / 1e8)
+                for r in pdf[~sent_mask].itertuples():
+                    h, b = w[int(r.cls)], int(r.bucket) + 1
+                    h[b] = h[b] - lr * (int(r.s) / n / 1e8)
+        finally:
+            tfa.unpersist()
 
     # scoring: the same join + bucket-ascending regroup, K ordered left
     # folds (ascending bucket == the dense chain's add order; absent

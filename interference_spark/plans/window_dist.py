@@ -77,12 +77,11 @@ def sliding_count_window(
     items: list[tuple[str, str, str]],
     n: int,
     num_partitions: int | None = None,
-    single_task_max_bytes: int = SINGLE_TASK_MAX_BYTES,
 ) -> DataFrame:
     """``items`` = [(func, input_col, output_alias), ...]; one output row per
     input row from the n-th onward (ordered by ``wcol``), aggregating the
     last n rows. Output in window order."""
-    if _estimated_bytes(df) <= single_task_max_bytes:
+    if _estimated_bytes(df) <= SINGLE_TASK_MAX_BYTES:
         return _single_task(df, wcol, items, n)
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism

@@ -78,7 +78,8 @@ def test_salted_join_left_outer(spark):
     assert rows == {(1, "a", "x"), (99, "b", None)}
 
 
-def test_sliding_window_dist_matches_single_task(spark):
+def test_sliding_window_dist_matches_single_task(spark, monkeypatch):
+    from interference_spark.plans import window_dist
     from interference_spark.plans.window_dist import (
         _single_task,
         sliding_count_window,
@@ -89,10 +90,9 @@ def test_sliding_window_dist_matches_single_task(spark):
         "eid long, uid long, val double",
     )
     items = [("COUNT", "eid", "cnt"), ("SUM", "uid", "s"), ("MIN", "val", "m")]
-    # single_task_max_bytes=0 forces the distributed path at test scale
-    dist = sliding_count_window(
-        df, "eid", items, n=5, num_partitions=8, single_task_max_bytes=0
-    )
+    # a zero byte cutoff forces the distributed path at test scale
+    monkeypatch.setattr(window_dist, "SINGLE_TASK_MAX_BYTES", 0)
+    dist = sliding_count_window(df, "eid", items, n=5, num_partitions=8)
     single = _single_task(df, "eid", items, n=5)
     assert [tuple(r) for r in dist.collect()] == [tuple(r) for r in single.collect()]
     assert dist.count() == 496
@@ -279,15 +279,18 @@ def test_kmv_exact_below_k(spark):
 
 
 @pytest.mark.slow
-def test_sliding_window_dist_property(spark):
+def test_sliding_window_dist_property(spark, monkeypatch):
     """Randomized equivalence: distributed vs single-task frames across
     awkward shapes (empty, n=1, n≈rows, rows<n, many empty splits)."""
     import random
 
+    from interference_spark.plans import window_dist
     from interference_spark.plans.window_dist import (
         _single_task,
         sliding_count_window,
     )
+
+    monkeypatch.setattr(window_dist, "SINGLE_TASK_MAX_BYTES", 0)
 
     rng = random.Random(7)
     for _ in range(8):
@@ -299,7 +302,7 @@ def test_sliding_window_dist_property(spark):
         )
         items = [("SUM", "v", "s"), ("COUNT", "eid", "c")]
         dist = sliding_count_window(
-            df, "eid", items, n=n, num_partitions=parts, single_task_max_bytes=0
+            df, "eid", items, n=n, num_partitions=parts
         ).collect()
         single = _single_task(df, "eid", items, n=n).collect()
         assert [tuple(r) for r in dist] == [tuple(r) for r in single], (
@@ -1387,10 +1390,9 @@ def test_semantic_decontaminate_zero_norm_guard(spark):
 
 
 def test_incremental_minhash_dedup_releases_caches(spark):
-    """The default (materialize=True) admission must not leave signature
-    caches behind — only the returned decision table stays persisted, and
-    a caller-cached registry keeps its storage level untouched (round-4
-    advice)."""
+    """The admission must not leave signature caches behind — only the
+    returned decision table stays persisted, and a caller-cached registry
+    keeps its storage level untouched (round-4 advice)."""
     from interference_spark.pipeline.dedup import (
         incremental_minhash_dedup,
         minhash_signatures,
@@ -2520,6 +2522,30 @@ def test_winnowing_guarantee(spark):
     assert 0 < out[1].n_fps < len("AAAA " + shared + " BBBB") - 4
 
 
+@pytest.mark.parametrize("d", [8, 128])
+def test_hash_kernel_error_restores_scoped_settings(spark, d):
+    """A training frame without the label column fails analysis inside
+    the hash-kernel core; the scoped AQE settings of the GD loop
+    (``pipeline.iterative_stage_conf``) must be back at their prior
+    values afterwards, on the dense (d=8) and the sparse (d=128) core."""
+    from pyspark.errors import AnalysisException
+
+    from interference_spark.pipeline import _ITER_CONFS
+    from interference_spark.pipeline.text import hash_kernel_classifier
+
+    def settings():
+        return {k: spark.conf.get(k, None) for k in _ITER_CONFS}
+
+    before = settings()
+    train = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    score = spark.createDataFrame(
+        [(1, "a b d", "en")], "doc_id long, text string, lang string"
+    )
+    with pytest.raises(AnalysisException):
+        hash_kernel_classifier(train, score, d=d)
+    assert settings() == before
+
+
 def test_hash_kernel_classifier_matches_replica(spark):
     """The quantized batch-GD fit must reproduce a pure-Python replica of
     the spec (hash52 bucketing, floor-quantized moments, (S/n)/1e8 update
@@ -2701,8 +2727,8 @@ def test_exact_substring_pairs_runs_and_filter_parity(spark):
     """Cross-corpus exact substring detection: the gram join finds
     exactly the pairs sharing a >=k-token run, max_run_tokens is the
     true longest common substring (diagonal islands — incl. the
-    repeated-token degenerate case), and the winnowing candidate filter
-    is lossless for overlaps >= k + w - 1 tokens."""
+    repeated-token degenerate case), and the ``max_posting_len``
+    boilerplate filter changes nothing when no shingle exceeds the cap."""
     from interference_spark.pipeline.dedup import exact_substring_pairs
 
     shared = " ".join(f"s{i}" for i in range(10))  # 10-token shared run
@@ -2738,11 +2764,12 @@ def test_exact_substring_pairs_runs_and_filter_parity(spark):
     }
     assert got4[(4, 5)] == (1, 5)  # LCS "a a a a a" = 5 tokens, 1 gram
 
-    # winnow filter: lossless here (overlap 10 >= k + w - 1 = 6+3-1)
+    # posting-length filter: every shingle here occurs at most once per
+    # side, so a cap of 1 excludes nothing
     filt = {
         (r.doc_a, r.doc_b): (r.n_shared_grams, r.max_run_tokens)
         for r in exact_substring_pairs(
-            docs_a, docs_b, k=6, fingerprint_filter=True, w=3
+            docs_a, docs_b, k=6, max_posting_len=1
         ).collect()
     }
     assert filt == got
@@ -3013,10 +3040,13 @@ def test_dsir_log_weights_prefer_target_like_docs(spark):
     assert dsir_log_weights(single, t_lm, r_lm).count() == 0
 
 
-def test_dsir_auto_broadcast_paths_bit_identical(spark):
-    """broadcast_lm='auto' (default) picks broadcast vs shuffled from the
-    merged bigram-lookup row count; the quantized-micronat weights must be
-    BIT-identical on every path (VERDICT r7 ask #6 / ADVICE r7)."""
+def test_dsir_auto_broadcast_paths_bit_identical(spark, monkeypatch):
+    """The merged bigram-lookup row count picks one of three join tiers
+    (exact-key broadcast, hashed-key broadcast, hashed-key shuffle); the
+    cutoffs are module constants, so lowering them reaches every tier.
+    Each tier runs its own plan, and the quantized-micronat weights are
+    BIT-identical on all three (VERDICT r7 ask #6 / ADVICE r7)."""
+    from interference_spark.pipeline import lm
     from interference_spark.pipeline.lm import dsir_log_weights, train_bigram_lm
 
     target = spark.createDataFrame(
@@ -3030,38 +3060,45 @@ def test_dsir_auto_broadcast_paths_bit_identical(spark):
     )
     t_lm, r_lm = train_bigram_lm(target), train_bigram_lm(raw)
 
-    def rows(**kw):
-        return sorted(
-            (r.doc_id, r.n_bigrams, r.logw_micronats)
-            for r in dsir_log_weights(raw, t_lm, r_lm, **kw).collect()
+    def run(bc_max, hashed_bc_max):
+        monkeypatch.setattr(lm, "_DSIR_BROADCAST_MAX_ROWS", bc_max)
+        monkeypatch.setattr(lm, "_DSIR_HASHED_BROADCAST_MAX_ROWS", hashed_bc_max)
+        df = dsir_log_weights(raw, t_lm, r_lm)
+        rows = sorted(
+            (r.doc_id, r.n_bigrams, r.logw_micronats) for r in df.collect()
         )
+        # the final (post-AQE) plan of the run that produced the rows
+        return rows, df._jdf.queryExecution().executedPlan().toString()
 
-    forced_bc = rows(broadcast_lm=True)
-    forced_shuffle = rows(broadcast_lm=False)
-    forced_hashed_bc = rows(broadcast_lm="hashed_broadcast")
-    auto_small = rows()  # default auto: tiny vocab -> broadcast
-    auto_tripped = rows(broadcast_lm="auto", broadcast_max_rows=0)  # -> hashed bc
-    auto_shuffled = rows(
-        broadcast_lm="auto", broadcast_max_rows=0, hashed_broadcast_max_rows=0
-    )  # -> hashed shuffle
-    assert (
-        forced_bc
-        == forced_shuffle
-        == forced_hashed_bc
-        == auto_small
-        == auto_tripped
-        == auto_shuffled
+    # no size-based broadcast, so AQE cannot turn the shuffle tier's
+    # sort-merge joins into broadcasts and hide it
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        exact_bc, exact_plan = run(  # the shipped cutoffs
+            lm._DSIR_BROADCAST_MAX_ROWS, lm._DSIR_HASHED_BROADCAST_MAX_ROWS
+        )
+        hashed_bc, hashed_plan = run(0, 50_000_000)
+        shuffled, shuffled_plan = run(0, 0)
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+    assert exact_bc == hashed_bc == shuffled
+    assert len(exact_bc) == 3
+    # the stream-side lookup joins, by key (the LM merges below them are
+    # full-outer sort-merge joins on every tier)
+    # exact-key broadcast: the lookups join on the raw (c, w) / c keys
+    assert re.search(r"BroadcastHashJoin \[c#\d+, w#\d+\]", exact_plan), (
+        exact_plan[:2000]
     )
-    assert len(forced_bc) == 3
-
-    # auto's broadcast decision produces the explicit-broadcast plan: the
-    # stream-side lookup joins carry the broadcast hint (plan-shape parity
-    # with broadcast_lm=True; at fixture scale AQE may broadcast the
-    # False path too, so the hinted plan is the only assertable shape)
-    bc_plan = dsir_log_weights(
-        raw, t_lm, r_lm, broadcast_lm="auto"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in bc_plan
+    assert "__hb" not in exact_plan, exact_plan[:2000]
+    # hashed-key broadcast: 8-byte keys, still no stream shuffle
+    assert re.search(r"BroadcastHashJoin \[__hb", hashed_plan), hashed_plan[:2000]
+    assert not re.search(r"SortMergeJoin \[__hb", hashed_plan), hashed_plan[:2000]
+    # hashed-key shuffle: sort-merge joins on the hashed keys, no broadcast
+    assert re.search(r"SortMergeJoin \[__hb", shuffled_plan), shuffled_plan[:2000]
+    assert not re.search(r"BroadcastHashJoin \[(__hb|c#)", shuffled_plan), (
+        shuffled_plan[:2000]
+    )
 
 
 def test_zipf_slope_on_exact_power_law(spark):
@@ -3317,18 +3354,6 @@ def test_perplexity_bucket_cutoffs_matches_exact_terciles(spark):
     # distinct-bin fixture: sketch assignment == exact ntile assignment
     assert {d: r.bucket for d, r in got.items()} == {
         d: r.bucket for d, r in exact.items()
-    }
-    # checkpoint=False (ADVICE r9: caller-managed persistence for
-    # repeated in-session calls) changes the physical plan only — the
-    # result is identical
-    unchk = {
-        (r.doc_id, r.bucket, r.nll_micronats)
-        for r in perplexity_bucket_cutoffs(
-            score, lm, lo=0.0, hi=8.0, checkpoint=False
-        ).collect()
-    }
-    assert unchk == {
-        (r.doc_id, r.bucket, r.nll_micronats) for r in got.values()
     }
 
 

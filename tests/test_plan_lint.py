@@ -198,21 +198,22 @@ def test_incremental_minhash_band_shuffle_is_narrow(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         # the oracle-gate test leaves the dedup_incremental_minhash entry's
-        # decision table cached (materialize=True semantics); CacheManager
-        # would substitute that identical plan fragment here and swallow
-        # the Exchange nodes this lint inspects
+        # decision table cached; CacheManager would hand that identical
+        # plan (built with broadcasts enabled) back here instead of
+        # caching a new one under this lint's settings
         spark.catalog.clearCache()
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         known = docs.filter(F.col("doc_id") % 2 == 0)
         new = docs.filter(F.col("doc_id") % 2 == 1)
-        # materialize=False: lint the LAZY plan (the default eagerly runs
-        # the admission and returns a cached-table scan, hiding the shape)
-        out = incremental_minhash_dedup(
-            new, minhash_signatures(known), threshold=0.4, materialize=False
-        )
+        # the admission runs eagerly and returns a scan of the cached
+        # decision table; the cached relation's inner tree (printed under
+        # InMemoryRelation) is the executed decision plan this lint reads
+        out = incremental_minhash_dedup(new, minhash_signatures(known), threshold=0.4)
         plan = out._jdf.queryExecution().executedPlan().toString()
+        out.unpersist()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert "InMemoryRelation" in plan, plan[:2000]
     assert "CartesianProduct" not in plan, plan[:2000]
     # the Exchange line names only the key; its CHILD line shows the rows
     # actually shuffled — that projection must not contain the signature
@@ -225,6 +226,28 @@ def test_incremental_minhash_band_shuffle_is_narrow(spark):
     for i in bucket_ex:
         child = lines[i + 1] if i + 1 < len(lines) else ""
         assert "signature" not in child, f"{lines[i]}\n{child}"
+
+
+def test_threshold_sweep_scores_pairs_once(spark):
+    """`jaccard_threshold_sweep` feeds ONE aggregate from the scored
+    pairs: the executed plan holds the pair plan's nested-loop joins
+    once, plus the one broadcast threshold cross join (two consumers of
+    the scored pairs used to duplicate the whole subtree)."""
+    from interference_spark.pipeline.dedup import ngram_jaccard_pairs
+
+    def final_plan(df):
+        # after a run, AQE prints the final plan above the initial one;
+        # only the final plan is what ran
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pair_plan = final_plan(ngram_jaccard_pairs(docs, n=3, threshold=0.5))
+    plan = final_plan(inventory.QUERIES["dedup_threshold_sweep"](spark, SF_DIR))
+    n_pair = pair_plan.count("BroadcastNestedLoopJoin")
+    assert n_pair >= 1, pair_plan[:2000]
+    assert plan.count("BroadcastNestedLoopJoin") == n_pair + 1, plan[:3000]
 
 
 def test_mix_token_budget_broadcasts_budgets(spark):

@@ -18,6 +18,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -476,12 +477,35 @@ def _vocab_docs(spark, n: int, vocab: int):
     )
 
 
+@contextmanager
+def _forced_dsir_tier(tier: str | None):
+    """Force one DSIR join tier ("broadcast", "hashed_broadcast" or
+    "shuffled") for the ``dsir_log_weights`` calls inside the block by
+    moving the module cutoffs it reads at call time; ``None`` leaves the
+    row count to pick the tier."""
+    from interference_spark.pipeline import lm
+
+    saved = lm._DSIR_BROADCAST_MAX_ROWS, lm._DSIR_HASHED_BROADCAST_MAX_ROWS
+    if tier is not None:
+        big = 1 << 62
+        lm._DSIR_BROADCAST_MAX_ROWS, lm._DSIR_HASHED_BROADCAST_MAX_ROWS = {
+            "broadcast": (big, big),
+            "hashed_broadcast": (-1, big),
+            "shuffled": (-1, -1),
+        }[tier]
+    try:
+        yield
+    finally:
+        lm._DSIR_BROADCAST_MAX_ROWS, lm._DSIR_HASHED_BROADCAST_MAX_ROWS = saved
+
+
 def probe_dsir_auto(spark, n_docs: int, vocab: int) -> dict:
-    """DSIR broadcast_lm='auto' cutover probe (VERDICT r7 ask #6): build
-    a corpus whose merged bigram lookup EXCEEDS the 10M-row auto
-    threshold, confirm auto picks the shuffled plan while the forced
-    broadcast/shuffled paths produce BIT-IDENTICAL integer weights, and
-    record the wall times of all three."""
+    """DSIR tier cutover probe (VERDICT r7 ask #6): build a corpus whose
+    merged bigram lookup EXCEEDS the 10M-row broadcast cutoff, confirm
+    the row count picks the shuffled plan while the forced
+    broadcast/shuffled tiers produce BIT-IDENTICAL integer weights, and
+    record the wall times of all three (each includes the lookup count
+    that picks the tier)."""
     from interference_spark.pipeline.lm import (
         _DSIR_BROADCAST_MAX_ROWS,
         dsir_log_weights,
@@ -509,13 +533,14 @@ def probe_dsir_auto(spark, n_docs: int, vocab: int) -> dict:
         "trips_cutover": merged_rows > _DSIR_BROADCAST_MAX_ROWS,
     }
     sums = {}
-    for label, kw in [
-        ("auto", {}),  # default: counts the lookup, then decides
-        ("forced_broadcast", {"broadcast_lm": True}),
-        ("forced_shuffled", {"broadcast_lm": False}),
+    for label, tier in [
+        ("auto", None),  # the lookup count decides
+        ("forced_broadcast", "broadcast"),
+        ("forced_shuffled", "shuffled"),
     ]:
         t0 = time.perf_counter()
-        df = dsir_log_weights(docs, t_lm, r_lm, **kw)
+        with _forced_dsir_tier(tier):
+            df = dsir_log_weights(docs, t_lm, r_lm)
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("logw_micronats").alias("s"),
@@ -715,8 +740,8 @@ def probe_dsir_spill(spark, n_docs: int, vocab: int) -> dict:
       ``(c, w)`` / ``(c)``, so the stream-side SMJ sorts carry
       (doc_id, c, w) string rows.  Replicated probe-locally (the
       engine no longer ships it).
-    - ``hashed_smj``: the shipped tier
-      (``dsir_log_weights(broadcast_lm=False)``) — both join keys
+    - ``hashed_smj``: the shipped shuffle tier (``dsir_log_weights``
+      under ``_forced_dsir_tier("shuffled")``) — both join keys
       pre-hashed to one xxhash64 long each, 16 B sorted stream rows.
 
     Records wall + shuffle-write + spill for each and asserts the
@@ -756,6 +781,12 @@ def probe_dsir_spill(spark, n_docs: int, vocab: int) -> dict:
         "full_outer",
     )
     out: dict = {"n_docs": n_docs, "vocab": vocab, "lookup_rows": bc.count()}
+
+    def _hashed_smj():
+        # the operator counts the lookup before it plans, so this
+        # variant's wall time includes one lookup-count job
+        with _forced_dsir_tier("shuffled"):
+            return dsir_log_weights(docs, t_lm, r_lm)
 
     def _string_smj():
         # pre-6e881bd shuffle plan, replicated verbatim: string join
@@ -813,12 +844,7 @@ def probe_dsir_spill(spark, n_docs: int, vocab: int) -> dict:
             2
             * [
                 ("string_smj", _string_smj),
-                (
-                    "hashed_smj",
-                    lambda: dsir_log_weights(
-                        docs, t_lm, r_lm, broadcast_lm=False
-                    ),
-                ),
+                ("hashed_smj", _hashed_smj),
             ]
         ):
             before = _stage_metric_totals(spark)
